@@ -857,6 +857,28 @@ def test_duplicate_spans_null_text_and_id_contract(spark):
         dd.duplicate_spans(sdocs, n=8)
 
 
+def test_duplicate_spans_null_ids_count_as_one_doc(spark):
+    """All NULL-id rows are ONE document for the ``min_docs`` count:
+    two NULL-id copies of a text are not a cross-document duplicate,
+    and a NULL-id row that sorts first in its gram's partition still
+    counts as a document."""
+    import xclim_spark.llm.dedup as dd
+
+    shared = "one two three four five six seven eight"
+    schema = "doc_id LONG, text STRING"
+    two_nulls = spark.createDataFrame(
+        [(None, shared), (None, shared), (1, shared)], schema)
+    assert dd.duplicate_spans(two_nulls, n=8, min_docs=3).collect() == []
+    assert {r["doc_id"] for r in
+            dd.duplicate_spans(two_nulls, n=8, min_docs=2).collect()} \
+        == {None, 1}
+    null_first = spark.createDataFrame([(None, shared), (1, shared)],
+                                       schema)
+    assert {r["doc_id"] for r in
+            dd.duplicate_spans(null_first, n=8, min_docs=2).collect()} \
+        == {None, 1}
+
+
 def test_kmeans_fit_iters_zero_returns_init(spark):
     import numpy as np
 

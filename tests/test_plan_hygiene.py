@@ -161,3 +161,9 @@ def test_lm_join_fallback_single_tokenize_pass(spark):
     assert plan.count("Generate ") == 1, plan
     assert _duplicated_udfs(plan) == {}
     assert "CartesianProduct" not in plan
+    scans = re.findall(
+        r"documents\.parquet\].*ReadSchema: (struct<[^>]*>)", plan)
+    assert sorted(scans) == sorted([
+        "struct<doc_id:bigint,text:string>",  # the tokenized corpus
+        "struct<doc_id:bigint>",  # the restore join: ids only
+    ]), scans

@@ -9,6 +9,12 @@ Usage::
     res.df     # Spark DataFrame: cells..., period, tx_days_above
     res.attrs  # cf-style metadata (units, long_name, history, ...)
 
+    # several indicators sharing freq, in one aggregation
+    both = evaluate_indicators(df, {
+        "warm_day_frequency": {"tasmax": "tx"},
+        "warm_night_frequency": {"tasmin": "tn"},
+    }, time="day", cells=["cell"])
+
 Mirrors the reference's ``xclim.atmos`` call surface
 (``src/xclim/indicators/``) and its YAML virtual-module builder
 (``src/xclim/core/indicator.py:1703-1958``).
@@ -22,6 +28,7 @@ from .core import (
     VARIABLES,
     build_indicator_module,
     build_indicator_module_from_yaml,
+    evaluate_indicators,
     from_dict,
     register_compute,
     registry,
@@ -52,6 +59,7 @@ __all__ = [
     "seaIce",
     "build_indicator_module",
     "build_indicator_module_from_yaml",
+    "evaluate_indicators",
     "from_dict",
     "register_compute",
     "registry",

@@ -9,6 +9,13 @@ Signature contract: ``compute(df, cols, params, *, time, cells, alias)``
 returns a DataFrame ``cells..., period, <alias>``.  ``cols`` maps input
 roles (``data``, ``low_data``, ``high_data``…) to DataFrame column names;
 ``params`` are already unit-converted scalars.
+
+A compute that is one aggregate over each period's rows is written once,
+as ``build(cols, params, *, time) -> Column`` under
+:func:`~.core.register_aggregate`, which derives its DataFrame form (time
+indexer filter, ``groupBy(cells, period)``, the aggregate) and lets the
+indicator layer share one aggregation between several indicators and
+their count-based missing masks.
 """
 
 from __future__ import annotations
@@ -17,13 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators import generic as g
 from ..operators import run_length as rl
-from .core import register_compute
-
-_INDEXER_KEYS = ("season", "month", "doy_bounds", "date_bounds")
-
-
-def _indexer(params: dict) -> dict:
-    return {k: params[k] for k in _INDEXER_KEYS if params.get(k) is not None}
+from .core import register_aggregate, register_compute, time_indexer
 
 
 def _thr(params: dict):
@@ -33,13 +34,10 @@ def _thr(params: dict):
     return v if v is not None else params.get("threshold")
 
 
-@register_compute("resample_op")
-def resample_op(df, cols, params, *, time, cells, alias):
+@register_aggregate("resample_op")
+def resample_op(cols, params, *, time):
     """select_resample_op (reference generic.py:83-125)."""
-    return g.select_resample_op(
-        df, cols["data"], params["op"], params["freq"],
-        time=time, cells=cells, alias=alias, **_indexer(params),
-    )
+    return g.reduce_agg(cols["data"], params["op"], time)
 
 
 @register_compute("rolling_resample_op")
@@ -49,46 +47,34 @@ def rolling_resample_op(df, cols, params, *, time, cells, alias):
         df, cols["data"], params["op"], params["freq"],
         window=int(params["window"]),
         window_op=params.get("window_op", "mean"),
-        time=time, cells=cells, alias=alias, **_indexer(params),
+        time=time, cells=cells, alias=alias, **time_indexer(params),
     )
 
 
-@register_compute("count_occurrences")
-def count_occurrences(df, cols, params, *, time, cells, alias):
+@register_aggregate("count_occurrences")
+def count_occurrences(cols, params, *, time):
     """threshold_count (reference generic.py:329-361; cf.yml
     count_occurrences)."""
-    return g.threshold_count(
-        df, cols["data"], params["op"], _thr(params), params["freq"],
-        time=time, cells=cells, alias=alias, **_indexer(params),
-    )
+    return g.threshold_count_agg(cols["data"], params["op"], _thr(params))
 
 
-@register_compute("domain_count")
-def domain_count(df, cols, params, *, time, cells, alias):
+@register_aggregate("domain_count")
+def domain_count(cols, params, *, time):
     """domain_count (reference generic.py:364-392)."""
-    return g.domain_count(
-        df, cols["data"], params["low"], params["high"], params["freq"],
-        time=time, cells=cells, alias=alias, **_indexer(params),
-    )
+    return g.domain_count_agg(cols["data"], params["low"], params["high"])
 
 
-@register_compute("temperature_sum")
-def temperature_sum(df, cols, params, *, time, cells, alias):
+@register_aggregate("temperature_sum")
+def temperature_sum(cols, params, *, time):
     """Signed degree-day sum (reference generic.py:1324-1357)."""
-    return g.temperature_sum(
-        df, cols["data"], params["op"], _thr(params), params["freq"],
-        time=time, cells=cells, alias=alias, **_indexer(params),
-    )
+    return g.temperature_sum_agg(cols["data"], params["op"], _thr(params))
 
 
-@register_compute("thresholded_statistics")
-def thresholded_statistics(df, cols, params, *, time, cells, alias):
+@register_aggregate("thresholded_statistics")
+def thresholded_statistics(cols, params, *, time):
     """Reducer over rows meeting a condition (reference generic.py:1279)."""
-    return g.thresholded_statistics(
-        df, cols["data"], params["reducer"], params["op"], _thr(params),
-        params["freq"], time=time, cells=cells, alias=alias,
-        **_indexer(params),
-    )
+    return g.thresholded_statistics_agg(
+        cols["data"], params["reducer"], params["op"], _thr(params), time)
 
 
 @register_compute("longest_run")
@@ -146,17 +132,14 @@ def first_run_doy(df, cols, params, *, time, cells, alias):
     )
 
 
-@register_compute("bivariate_count_occurrences")
-def bivariate_count_occurrences(df, cols, params, *, time, cells, alias):
+@register_aggregate("bivariate_count_occurrences")
+def bivariate_count_occurrences(cols, params, *, time):
     """Count of days meeting two conditions at once (heat_wave shape,
     reference _multivariate.py:646 uses both tasmin+tasmax)."""
     cond = g.compare(
         cols["low_data"], params["op_low"], params["thresh_low"]
     ) & g.compare(cols["high_data"], params["op_high"], params["thresh_high"])
-    return g.select_resample_op(
-        df.withColumn("_biv", cond.cast("long")), "_biv", "sum",
-        params["freq"], time=time, cells=cells, alias=alias,
-    )
+    return F.sum(cond.cast("long"))
 
 
 @register_compute("bivariate_spell_events")
@@ -172,15 +155,12 @@ def bivariate_spell_events(df, cols, params, *, time, cells, alias):
     )
 
 
-@register_compute("range_statistics")
-def range_statistics(df, cols, params, *, time, cells, alias):
+@register_aggregate("range_statistics")
+def range_statistics(cols, params, *, time):
     """Reducer over (high - low), e.g. daily_temperature_range
     (reference _multivariate.py:482-560)."""
     rng = F.col(cols["high_data"]) - F.col(cols["low_data"])
-    return g.select_resample_op(
-        df.withColumn("_rng", rng), "_rng", params.get("reducer", "mean"),
-        params["freq"], time=time, cells=cells, alias=alias,
-    )
+    return g.REDUCERS[params.get("reducer", "mean")](time, rng)
 
 
 @register_compute("interday_range_variability")
@@ -321,24 +301,16 @@ def bivariate_spell_total_length(df, cols, params, *, time, cells, alias):
     )
 
 
-@register_compute("thresholded_ratio")
-def thresholded_ratio(df, cols, params, *, time, cells, alias):
+@register_aggregate("thresholded_ratio")
+def thresholded_ratio(cols, params, *, time):
     """Ratio of the thresholded sum over the total sum per period —
     liquid_precip_ratio / rprctot shape (reference
     _multivariate.py:871, _threshold.py:3170).  The condition applies to
     ``cond_data`` (defaults to the summed data itself)."""
     cond_col = cols.get("cond_data", cols["data"])
     cond = g.compare(cond_col, params["op"], params["thresh"])
-    d = df.withColumn("_num", F.when(cond, F.col(cols["data"]))
-                      .otherwise(F.lit(0.0)))
-    from ..calendar import period_start
-
-    per = period_start(time, params["freq"])
-    out = (
-        d.groupBy(*cells, per.alias("period"))
-        .agg((F.sum("_num") / F.sum(cols["data"])).alias(alias))
-    )
-    return out
+    num = F.when(cond, F.col(cols["data"])).otherwise(F.lit(0.0))
+    return F.sum(num) / F.sum(cols["data"])
 
 
 @register_compute("winter_rain_ratio")
@@ -351,8 +323,9 @@ def winter_rain_ratio(df, cols, params, *, time, cells, alias):
     p = dict(params)
     p.setdefault("freq", "QS-DEC")
     p.setdefault("op", ">=")
-    out = thresholded_ratio(df, cols, p, time=time, cells=cells,
-                            alias=alias)
+    out = g.resample_agg(df, p["freq"],
+                         thresholded_ratio(cols, p, time=time).alias(alias),
+                         time=time, cells=cells)
     return out.filter(F.month("period") == 12)
 
 
@@ -410,15 +383,12 @@ def base_flow_index(df, cols, params, *, time, cells, alias):
                               time=time, cells=cells, alias=alias)
 
 
-@register_compute("statistics")
-def statistics(df, cols, params, *, time, cells, alias):
+@register_aggregate("statistics")
+def statistics(cols, params, *, time):
     """clix-meta ``statistics`` (cf.yml; reference generic.py:83-125):
     plain reducer over the period — same kernel as ``resample_op`` but
     parameterized by ``reducer`` as in the YAML."""
-    return g.select_resample_op(
-        df, cols["data"], params["reducer"], params["freq"],
-        time=time, cells=cells, alias=alias, **_indexer(params),
-    )
+    return g.reduce_agg(cols["data"], params["reducer"], time)
 
 
 @register_compute("spell_length")
@@ -433,26 +403,18 @@ def spell_length(df, cols, params, *, time, cells, alias):
     )
 
 
-@register_compute("diurnal_temperature_range")
-def diurnal_temperature_range(df, cols, params, *, time, cells, alias):
+@register_aggregate("diurnal_temperature_range")
+def diurnal_temperature_range(cols, params, *, time):
     """clix-meta ``diurnal_temperature_range`` (cf.yml dtr/maxdtr):
     reducer over (high - low) — same kernel as ``range_statistics``."""
-    return range_statistics(df, cols, params, time=time, cells=cells,
-                            alias=alias)
+    return range_statistics(cols, params, time=time)
 
 
-@register_compute("extreme_temperature_range")
-def extreme_temperature_range(df, cols, params, *, time, cells, alias):
+@register_aggregate("extreme_temperature_range")
+def extreme_temperature_range(cols, params, *, time):
     """clix-meta ``extreme_temperature_range`` (cf.yml etr): per-period
     max(high) - min(low) (reference _multivariate.py:615)."""
-    from ..calendar import period_start
-
-    per = period_start(time, params["freq"])
-    return (
-        df.groupBy(*cells, per.alias("period"))
-        .agg((F.max(cols["high_data"]) - F.min(cols["low_data"]))
-             .alias(alias))
-    )
+    return F.max(cols["high_data"]) - F.min(cols["low_data"])
 
 
 @register_compute("interday_diurnal_temperature_range")
@@ -542,20 +504,14 @@ def period_extreme(df, cols, params, *, time, cells, alias):
     )
 
 
-@register_compute("occurrence_fraction")
-def occurrence_fraction(df, cols, params, *, time, cells, alias):
+@register_aggregate("occurrence_fraction")
+def occurrence_fraction(cols, params, *, time):
     """Fraction (or %) of days meeting ``data op thresh`` per period —
     wetdays_prop / snowfall_frequency (reference _threshold.py:2793,
     :528).  ``params['percent']`` scales to 0-100."""
-    from ..calendar import period_start
-
     cond = g.compare(cols["data"], params["op"], _thr(params))
     scale = 100.0 if params.get("percent") else 1.0
-    per = period_start(time, params["freq"])
-    return (
-        df.groupBy(*cells, per.alias("period"))
-        .agg((F.avg(cond.cast("double")) * scale).alias(alias))
-    )
+    return F.avg(cond.cast("double")) * scale
 
 
 @register_compute("last_run_doy")

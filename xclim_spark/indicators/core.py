@@ -14,7 +14,12 @@ Re-expresses the reference's indicator machinery
 * post-processing applies the missing-value mask
   (reference ``CheckMissingIndicator._postprocess``, indicator.py:1522-1549)
   and attaches formatted cf_attrs metadata
-  (``_update_attrs``, indicator.py:1085).
+  (``_update_attrs``, indicator.py:1085);
+* a compute that is one period aggregate is registered as an aggregate
+  Column builder (:func:`register_aggregate`), so the indicator and its
+  count-based mask — or several indicators sharing ``freq``
+  (:func:`evaluate_indicators`) — compile to ONE ``groupBy(cells, period)``
+  reading the source once, as xclim's dask graph shares one read.
 
 Specs are plain dicts (YAML-compatible — the same shape as the reference's
 ``data/*.yml`` virtual modules, indicator.py:1761) so whole indicator
@@ -30,8 +35,15 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..operators.missing import MISSING_METHODS, mask_missing
+from ..operators.generic import resample_agg
+from ..operators.missing import (
+    MISSING_METHODS,
+    count_flag,
+    expected_count,
+    mask_missing,
+)
 from ..units import str2pint, check_units, to_agg_units
 
 __all__ = [
@@ -45,6 +57,9 @@ __all__ = [
     "build_indicator_module_from_yaml",
     "COMPUTES",
     "register_compute",
+    "AGGREGATES",
+    "register_aggregate",
+    "evaluate_indicators",
     "register_alias",
 ]
 
@@ -107,10 +122,11 @@ class Parameter:
 class IndicatorResult:
     """A computed indicator: the Spark plan + cf metadata sidecar (the
     reference returns a DataArray with ``attrs``; Spark schemas don't carry
-    rich attrs, so they ride alongside)."""
+    rich attrs, so they ride alongside).  For :func:`evaluate_indicators`
+    ``attrs`` holds one such dict per identifier."""
 
     df: DataFrame
-    attrs: dict[str, str] = field(default_factory=dict)
+    attrs: dict = field(default_factory=dict)
 
     # delegate the common DataFrame verbs so results stay composable
     def __getattr__(self, item):
@@ -131,6 +147,37 @@ def register_compute(name: str):
     def deco(fn):
         COMPUTES[name] = fn
         return fn
+
+    return deco
+
+
+# Aggregate computes: one aggregate over the rows of each (cells, period),
+# registered as ``build(cols, params, *, time) -> Column``.  Their COMPUTES
+# entry is derived from the builder, and the indicator layer places
+# several builders and their count-based masks in one aggregation.
+
+AGGREGATES: dict[str, Callable] = {}
+
+# call parameters that select rows (``select_time``) before aggregating
+_INDEXER_KEYS = ("season", "month", "doy_bounds", "date_bounds")
+
+
+def time_indexer(params: dict) -> dict:
+    return {k: params[k] for k in _INDEXER_KEYS if params.get(k) is not None}
+
+
+def register_aggregate(name: str):
+    def deco(build):
+        AGGREGATES[name] = build
+
+        def compute(df, cols, params, *, time, cells, alias):
+            agg = build(cols, params, time=time).alias(alias)
+            return resample_agg(df, params["freq"], agg, time=time,
+                                cells=cells, **time_indexer(params))
+
+        compute.__doc__ = build.__doc__
+        register_compute(name)(compute)
+        return build
 
     return deco
 
@@ -221,25 +268,9 @@ class Indicator:
         params["_display"] = display
         return params
 
-    def __call__(
-        self,
-        df: DataFrame,
-        *,
-        time: str = "time",
-        cells: Sequence[str] = (),
-        units: dict[str, str] | None = None,
-        missing: str | None | type(...) = ...,
-        missing_options: dict | None = None,
-        locale: str | None = None,
-        **kwargs,
-    ) -> IndicatorResult:
-        """Bind variables + params, build the plan, post-process.
-
-        Variable binding: for each declared input role, a kwarg named after
-        the *variable* (e.g. ``tasmax="qty"``) maps it to a DataFrame
-        column.  ``units`` optionally gives actual column units per
-        variable (defaults to the variable's canonical units).
-        """
+    def _bind(self, kwargs: dict, units, missing, missing_options
+              ) -> "_Call":
+        """Steps 1-2 of a call, plus its missing-value policy."""
         # 1. bind input variables -> columns (reference _assign_named_args,
         # indicator.py:976)
         cols: dict[str, str] = {}
@@ -260,27 +291,57 @@ class Indicator:
             raise TypeError(
                 f"{self.identifier}: unexpected arguments {sorted(kwargs)}"
             )
-        freq = params.get("freq") or "YS"
-
-        # 3. compute — builds the Catalyst plan from the kernel layer
-        out = COMPUTES[self.compute](
-            df, cols, params,
-            time=time, cells=list(cells), alias=self.identifier,
+        return _Call(
+            self, cols, params, params.get("freq") or "YS",
+            self.missing if missing is ... else missing,
+            {**self.missing_options, **(missing_options or {})},
         )
 
-        # 4. missing-value post-processing (indicator.py:1522-1549)
-        method = self.missing if missing is ... else missing
-        if method:
-            opts = {**self.missing_options, **(missing_options or {})}
-            mask = MISSING_METHODS[method](
-                df, cols[next(iter(cols))], freq,
-                time=time, cells=list(cells),
-                src_freq=self.src_freq, **opts,
-            )
-            out = mask_missing(
-                out, mask, [self.identifier], keys=[*cells, "period"]
-            )
+    def __call__(
+        self,
+        df: DataFrame,
+        *,
+        time: str = "time",
+        cells: Sequence[str] = (),
+        units: dict[str, str] | None = None,
+        missing: str | None | type(...) = ...,
+        missing_options: dict | None = None,
+        locale: str | None = None,
+        **kwargs,
+    ) -> IndicatorResult:
+        """Bind variables + params, build the plan, post-process.
 
+        Variable binding: for each declared input role, a kwarg named after
+        the *variable* (e.g. ``tasmax="qty"``) maps it to a DataFrame
+        column.  ``units`` optionally gives actual column units per
+        variable (defaults to the variable's canonical units).
+        """
+        call = self._bind(kwargs, units, missing, missing_options)
+        cells = list(cells)
+        # 3. compute — builds the Catalyst plan from the kernel layer — and
+        # 4. missing-value post-processing (indicator.py:1522-1549).  An
+        # aggregate compute with no time indexer and no or a count-based
+        # mask is one groupBy whose count column flags the periods to null;
+        # any other call computes, builds the mask DataFrame and left-joins
+        # it on null-safe (cells, period) keys.
+        if call.unfused_reason() is None:
+            out = _aggregate(df, [call], time=time, cells=cells)
+        else:
+            out = COMPUTES[self.compute](
+                df, call.cols, call.params,
+                time=time, cells=cells, alias=self.identifier,
+            )
+            if call.method:
+                mask = MISSING_METHODS[call.method](
+                    df, call.var, call.freq, time=time, cells=cells,
+                    src_freq=self.src_freq, **call.options,
+                )
+                out = mask_missing(
+                    out, mask, [self.identifier], keys=[*cells, "period"]
+                )
+        return IndicatorResult(out, self._attrs(call.params, locale))
+
+    def _attrs(self, params: dict, locale: str | None) -> dict[str, str]:
         # 5. metadata (reference _update_attrs, indicator.py:1085):
         # templates render through the AttrFormatter so known values
         # ("YS" -> "annual", with locale declensions) read as prose, and
@@ -321,7 +382,105 @@ class Indicator:
             lf = get_local_formatter(loc)
             for key, tmpl in get_local_attrs(self.identifier, loc).items():
                 attrs[key] = _safe_format(tmpl, fmt, lf)
-        return IndicatorResult(out, attrs)
+        return attrs
+
+
+@dataclass
+class _Call:
+    """One indicator call with its columns, parameters and missing-value
+    policy resolved."""
+
+    indicator: Indicator
+    cols: dict[str, str]
+    params: dict
+    freq: str
+    method: str | None
+    options: dict
+
+    @property
+    def var(self) -> str:
+        """The masked column: the first input's."""
+        return self.cols[next(iter(self.cols))]
+
+    def unfused_reason(self) -> str | None:
+        """Why this call cannot be columns of a shared period
+        aggregation, or None when it can."""
+        if self.indicator.compute not in AGGREGATES:
+            return f"compute {self.indicator.compute!r} is not one " \
+                "period aggregate"
+        if time_indexer(self.params):
+            return "a time indexer selects its rows"
+        if self.method and count_flag(self.method) is None:
+            return f"missing method {self.method!r} is not count-based"
+        return None
+
+
+def _aggregate(df: DataFrame, calls: Sequence[_Call], *, time: str,
+               cells: list[str]) -> DataFrame:
+    """Fusable calls sharing one ``freq`` as columns of ONE
+    ``groupBy(cells, period)``.  A count-based mask adds the non-null count
+    of its variable (one per variable) and nulls the value in the final
+    projection, where the flag is read against ``expected_count``."""
+    freq = calls[0].freq
+    aggs, values, counts = [], [], {}
+    for c in calls:
+        ident = c.indicator.identifier
+        aggs.append(AGGREGATES[c.indicator.compute](
+            c.cols, c.params, time=time).alias(ident))
+        value = F.col(ident)
+        if c.method:
+            if c.var not in counts:
+                counts[c.var] = f"_valid{len(counts)}"
+                aggs.append(F.count(c.var).alias(counts[c.var]))
+            flag = count_flag(c.method)(
+                F.col(counts[c.var]),
+                expected_count("period", freq, c.indicator.src_freq),
+                **c.options)
+            value = F.when(F.coalesce(flag, F.lit(False)), None) \
+                .otherwise(value)
+        values.append(value.alias(ident))
+    return resample_agg(df, freq, *aggs, time=time, cells=cells) \
+        .select(*cells, "period", *values)
+
+
+def evaluate_indicators(
+    df: DataFrame,
+    calls: dict[str, dict],
+    *,
+    time: str = "time",
+    cells: Sequence[str] = (),
+    units: dict[str, str] | None = None,
+) -> IndicatorResult:
+    """Several registry indicators in ONE period aggregation.
+
+    ``calls`` maps registry identifiers to the keyword arguments their own
+    call would take (variable bindings, parameters, ``missing``,
+    ``missing_options``, ``locale``); ``time``, ``cells`` and ``units`` are
+    shared.  Each indicator must be one period aggregate called without a
+    time indexer, with no or a count-based missing method, and all must
+    share ``freq``; otherwise a ValueError names the first that does not.
+    The result has ``cells..., period`` and one column per identifier,
+    masked as its own call would mask it; ``attrs`` maps each identifier
+    to its metadata."""
+    if not calls:
+        raise ValueError("evaluate_indicators needs at least one indicator")
+    bound, attrs = [], {}
+    for name, kw in calls.items():
+        kw = dict(kw)
+        missing = kw.pop("missing", ...)
+        missing_options = kw.pop("missing_options", None)
+        locale = kw.pop("locale", None)
+        ind = registry[name]
+        call = ind._bind(kw, units, missing, missing_options)
+        reason = call.unfused_reason()
+        if reason is None and bound and call.freq != bound[0].freq:
+            reason = f"freq {call.freq!r} differs from {bound[0].freq!r}"
+        if reason is not None:
+            raise ValueError(f"{name}: {reason}; call it on its own")
+        bound.append(call)
+        attrs[name] = ind._attrs(call.params, locale)
+    return IndicatorResult(
+        _aggregate(df, bound, time=time, cells=list(cells)), attrs)
 
 
 def _safe_format(template: str, params: dict, formatter=None) -> str:

@@ -720,9 +720,10 @@ def duplicate_spans(
        ``_ws_tokens`` (ASCII ``\\s+``, matching ``F.split``);
     2. grams appearing in ``>= min_docs`` DISTINCT documents survive —
        one shuffle on the gram key, with the distinct-doc count
-       computed by two stacked windows on that single sort
-       (``row_number`` marks one row per (gram, doc); its per-gram sum
-       is the distinct count), so the gram stage has exactly ONE
+       computed by two stacked windows on that single sort (a
+       doc-boundary marker flags one row per (gram, doc), all NULL ids
+       forming one doc; its per-gram sum is the distinct count), so
+       the gram stage has exactly ONE
        consumer and the tokenize+md5 pass runs once;
     3. per document, consecutive duplicated gram positions merge into
        MAXIMAL spans with one window sessionization (the same
@@ -794,11 +795,13 @@ def duplicate_spans(
         _grams, "doc_id long, pos int, gh string")
     wgo = Window.partitionBy("gh").orderBy("doc_id", "pos")
     wg = Window.partitionBy("gh")
-    prev_doc = F.lag("doc_id").over(wgo)
-    d = (g.withColumn(
-            "_first",
-            (prev_doc.isNull()
-             | (prev_doc != F.col("doc_id"))).cast("int"))
+    # a run starts at the partition's first row or where the id changes;
+    # the null-safe compare keeps all NULL-id rows in one run (counted
+    # once), and row_number catches a first row whose id is NULL, which
+    # would otherwise compare equal to lag's NULL
+    starts = (F.row_number().over(wgo) == 1) \
+        | ~F.lag("doc_id").over(wgo).eqNullSafe(F.col("doc_id"))
+    d = (g.withColumn("_first", starts.cast("int"))
          .withColumn("_nd", F.sum("_first").over(wg))
          .filter(F.col("_nd") >= min_docs)
          .select("doc_id", "pos"))

@@ -35,6 +35,12 @@ __all__ = [
     "threshold_count",
     "domain_count",
     "get_zones",
+    "resample_agg",
+    "reduce_agg",
+    "threshold_count_agg",
+    "domain_count_agg",
+    "thresholded_statistics_agg",
+    "temperature_sum_agg",
     "select_resample_op",
     "select_rolling_resample_op",
     "statistics",
@@ -96,13 +102,13 @@ def get_daily_events(var: Column | str, op: str, thresh) -> Column:
 # Reducer registry for resample-reduce
 # ---------------------------------------------------------------------------
 
-def _doy_extreme(df_cols, time, var, best: str) -> Column:
+def _doy_extreme(time, var: Column | str, best: str) -> Column:
     """day-of-year of the max/min value, ties broken by earliest time.
 
     Implements ``doymax``/``doymin`` (reference generic.py:177-196) as
     ``max_by(doy, struct(value, -epoch))`` — a single aggregate, no window.
     """
-    v = F.col(var)
+    v = F.col(var) if isinstance(var, str) else var
     t = F.col(time)
     # order key: (value, descending time) so earliest timestamp wins ties
     key = F.struct((v if best == "max" else -v).alias("v"),
@@ -119,8 +125,8 @@ REDUCERS = {
     "std": lambda time, var: F.stddev_pop(var),   # ddof=0, as numpy/xarray default
     "var": lambda time, var: F.var_pop(var),
     "median": lambda time, var: F.median(var),
-    "doymax": lambda time, var: _doy_extreme(None, time, var, "max"),
-    "doymin": lambda time, var: _doy_extreme(None, time, var, "min"),
+    "doymax": lambda time, var: _doy_extreme(time, var, "max"),
+    "doymin": lambda time, var: _doy_extreme(time, var, "min"),
 }
 
 # DuckDB twins for the oracle harness.
@@ -144,9 +150,28 @@ def _grouped(df: DataFrame, cells: Sequence[str], time: str, freq: str):
     )
 
 
+def resample_agg(
+    df: DataFrame, freq: str, *aggs: Column, time: str = "time",
+    cells: Sequence[str] = (), **indexer,
+) -> DataFrame:
+    """Optional time filter -> resample(freq) -> ``aggs``: the one plan
+    shape every single-aggregate kernel below shares, and the one
+    ``groupBy`` several fused indicators share.  ``indexer`` kwargs are
+    ``select_time`` args (season=/month=/doy_bounds=/date_bounds=)."""
+    if indexer:
+        df = df.filter(select_time(time, **indexer))
+    return _grouped(df, cells, time, freq).agg(*aggs)
+
+
 # ---------------------------------------------------------------------------
 # The central aggregate: select_resample_op (reference generic.py:83-125)
 # ---------------------------------------------------------------------------
+
+def reduce_agg(var: str, op, time: str = "time") -> Column:
+    """The period reducer of :func:`select_resample_op`: a ``REDUCERS``
+    name or a callable Column reducer."""
+    return op(F.col(var)) if callable(op) else REDUCERS[op](time, var)
+
 
 def select_resample_op(
     df: DataFrame,
@@ -166,13 +191,9 @@ def select_resample_op(
     ``op`` may also be a callable (Column reducer), matching the reference's
     callable-reducer extension point (generic.py:111-118).
     """
-    if indexer:
-        df = df.filter(select_time(time, **indexer))
-    if callable(op):
-        agg = op(F.col(var)).alias(alias or "value")
-    else:
-        agg = REDUCERS[op](time, var).alias(alias or op)
-    return _grouped(df, cells, time, freq).agg(agg)
+    agg = reduce_agg(var, op, time).alias(
+        alias or ("value" if callable(op) else op))
+    return resample_agg(df, freq, agg, time=time, cells=cells, **indexer)
 
 
 def select_rolling_resample_op(
@@ -226,6 +247,11 @@ def select_rolling_resample_op(
 # Threshold family (reference generic.py:329-392, 1255-1357)
 # ---------------------------------------------------------------------------
 
+def threshold_count_agg(var: str, op: str, thresh) -> Column:
+    """Count of days where ``var op thresh`` (generic.py:329-361)."""
+    return F.sum(compare(var, op, thresh).cast("long"))
+
+
 def threshold_count(
     df: DataFrame, var: str, op: str, thresh, freq: str, *,
     time: str = "time", cells: Sequence[str] = (), alias: str = "count",
@@ -234,12 +260,15 @@ def threshold_count(
     """Count of days where ``var op thresh`` per period (generic.py:329-361)."""
     if constrain and _OP_ALIASES[op] not in constrain:
         raise ValueError(f"Operator {op!r} not permitted here")
-    if indexer:
-        df = df.filter(select_time(time, **indexer))
-    cond = compare(var, op, thresh)
-    return _grouped(df, cells, time, freq).agg(
-        F.sum(cond.cast("long")).alias(alias)
-    )
+    return resample_agg(
+        df, freq, threshold_count_agg(var, op, thresh).alias(alias),
+        time=time, cells=cells, **indexer)
+
+
+def domain_count_agg(var: str, low, high) -> Column:
+    """Count of days where ``low < var <= high`` (generic.py:364-392)."""
+    cond = compare(var, ">", low) & compare(var, "<=", high)
+    return F.sum(cond.cast("long"))
 
 
 def domain_count(
@@ -248,12 +277,9 @@ def domain_count(
     **indexer,
 ) -> DataFrame:
     """Count of days where ``low < var <= high`` per period (generic.py:364-392)."""
-    if indexer:
-        df = df.filter(select_time(time, **indexer))
-    cond = compare(var, ">", low) & compare(var, "<=", high)
-    return _grouped(df, cells, time, freq).agg(
-        F.sum(cond.cast("long")).alias(alias)
-    )
+    return resample_agg(
+        df, freq, domain_count_agg(var, low, high).alias(alias),
+        time=time, cells=cells, **indexer)
 
 
 def first_occurrence(
@@ -419,6 +445,14 @@ def statistics(
                               alias=alias, **indexer)
 
 
+def thresholded_statistics_agg(
+    var: str, op: str, thresh_op: str, thresh, time: str = "time",
+) -> Column:
+    """``REDUCERS[op]`` over the rows where ``var thresh_op thresh``."""
+    return REDUCERS[op](time, F.when(compare(var, thresh_op, thresh),
+                                     F.col(var)))
+
+
 def thresholded_statistics(
     df: DataFrame, var: str, op: str, thresh_op: str, thresh, freq: str, *,
     time: str = "time", cells: Sequence[str] = (), alias: str | None = None,
@@ -426,18 +460,18 @@ def thresholded_statistics(
 ) -> DataFrame:
     """Reducer over only the rows satisfying the threshold condition
     (reference generic.py:1279-1323): ``agg(op(when(cond, var)))``."""
-    if indexer:
-        df = df.filter(select_time(time, **indexer))
-    cond = compare(var, thresh_op, thresh)
-    masked = F.when(cond, F.col(var))
-    agg = REDUCERS[op](time, "_masked") if op in ("doymax", "doymin") else {
-        "min": F.min, "max": F.max, "mean": F.avg, "sum": F.sum,
-        "count": F.count, "std": F.stddev_pop, "var": F.var_pop,
-        "median": F.median,
-    }[op](masked)
-    if op in ("doymax", "doymin"):
-        df = df.withColumn("_masked", masked)
-    return _grouped(df, cells, time, freq).agg(agg.alias(alias or op))
+    agg = thresholded_statistics_agg(var, op, thresh_op, thresh, time)
+    return resample_agg(df, freq, agg.alias(alias or op), time=time,
+                        cells=cells, **indexer)
+
+
+def temperature_sum_agg(var: str, op: str, thresh) -> Column:
+    """Signed ``sum(var - thresh)`` where ``var op thresh``
+    (reference generic.py:1324-1357).  Sign is negative for ``<`` ops."""
+    cond = compare(var, op, thresh)
+    direction = -1.0 if _OP_ALIASES[op] in ("<", "<=") else 1.0
+    term = F.when(cond, (F.col(var) - F.lit(thresh)) * direction).otherwise(0.0)
+    return F.sum(term)
 
 
 def temperature_sum(
@@ -446,13 +480,10 @@ def temperature_sum(
     **indexer,
 ) -> DataFrame:
     """Degree-day sum: signed ``sum(var - thresh)`` where ``var op thresh``
-    (reference generic.py:1324-1357).  Sign is negative for ``<`` ops."""
-    if indexer:
-        df = df.filter(select_time(time, **indexer))
-    cond = compare(var, op, thresh)
-    direction = -1.0 if _OP_ALIASES[op] in ("<", "<=") else 1.0
-    term = F.when(cond, (F.col(var) - F.lit(thresh)) * direction).otherwise(0.0)
-    return _grouped(df, cells, time, freq).agg(F.sum(term).alias(alias))
+    per period (reference generic.py:1324-1357)."""
+    return resample_agg(
+        df, freq, temperature_sum_agg(var, op, thresh).alias(alias),
+        time=time, cells=cells, **indexer)
 
 
 def cumulative_difference(

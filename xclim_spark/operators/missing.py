@@ -7,17 +7,25 @@ missing source data?".  The denominator — how many values a complete period
 ``datediff(next_period_start, period_start)``, a pure expression, no
 calendar table materialization, no driver loop.
 
-Masks return a DataFrame keyed by (cells, period) with a boolean
-``is_missing`` column; indicator post-processing left-joins it and nulls
-out flagged periods — the same two-step the reference applies in
+The count-based methods (``any``, ``pct``, ``at_least_n``,
+``some_but_not_all``) are each one flag expression over the period's valid
+count and ``expected_count`` (:func:`count_flag`).  The standalone
+``missing_*`` functions group the source by (cells, period) to evaluate it
+and return a DataFrame keyed by (cells, period) with a boolean
+``is_missing`` column.  Indicator post-processing evaluates the same flag
+as one more column of the indicator's own period aggregation when the
+indicator is a single aggregate, and otherwise left-joins the mask
+DataFrame on null-safe keys (:func:`mask_missing`); either way flagged
+periods are nulled out — the two-step the reference applies in
 ``CheckMissingIndicator._postprocess`` (indicator.py:1522-1549).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..calendar import parse_offset, period_start
@@ -30,6 +38,7 @@ __all__ = [
     "missing_wmo",
     "missing_some_but_not_all",
     "mask_missing",
+    "count_flag",
     "register_missing_method",
     "MISSING_METHODS",
     "missing_from_context",
@@ -103,15 +112,35 @@ def expected_count(period_col: str, freq: str, src_freq: str = "D"):
     return days * F.lit(steps_per_day) if steps_per_day != 1 else days
 
 
-def _base(df: DataFrame, var: str, freq: str, time: str, cells: Sequence[str]):
-    return (
+# Count-based flags: ``flag(valid, expected, **options) -> Column``, TRUE
+# where the period is invalid; ``valid`` is the period's non-null count of
+# the variable, ``expected`` the calendar count of ``expected_count``.
+
+def _any_flag(valid: Column, expected: Column) -> Column:
+    return valid < expected
+
+
+def _pct_flag(valid: Column, expected: Column, tolerance: float) -> Column:
+    return (expected - valid) / expected >= F.lit(tolerance)
+
+
+def _at_least_n_flag(valid: Column, expected: Column, n: int) -> Column:
+    return valid < F.lit(n)
+
+
+def _some_but_not_all_flag(valid: Column, expected: Column) -> Column:
+    return ~((valid == expected) | (valid == 0))
+
+
+def _count_mask(df, var, freq, flag, *, time, cells, src_freq, **options):
+    g = (
         df.withColumn("period", period_start(time, freq))
         .groupBy(*cells, "period")
-        .agg(
-            F.count(var).alias("_valid"),
-            F.count(F.lit(1)).alias("_rows"),
-        )
+        .agg(F.count(var).alias("_valid"))
     )
+    exp = expected_count("period", freq, src_freq)
+    return g.select(*cells, "period",
+                    flag(F.col("_valid"), exp, **options).alias("is_missing"))
 
 
 def missing_any(
@@ -123,10 +152,8 @@ def missing_any(
     Counts both explicit NULLs and absent rows (the reference sees absent
     timesteps after reindexing; we compare against the calendar count).
     """
-    g = _base(df, var, freq, time, cells)
-    return g.withColumn(
-        "is_missing", F.col("_valid") < expected_count("period", freq, src_freq)
-    ).drop("_valid", "_rows")
+    return _count_mask(df, var, freq, _any_flag, time=time, cells=cells,
+                       src_freq=src_freq)
 
 
 def missing_pct(
@@ -134,11 +161,8 @@ def missing_pct(
     time: str = "time", cells: Sequence[str] = (), src_freq: str = "D",
 ) -> DataFrame:
     """Invalid if more than ``tolerance`` fraction missing (missing.py:221-280)."""
-    g = _base(df, var, freq, time, cells)
-    exp = expected_count("period", freq, src_freq)
-    return g.withColumn(
-        "is_missing", (exp - F.col("_valid")) / exp >= F.lit(tolerance)
-    ).drop("_valid", "_rows")
+    return _count_mask(df, var, freq, _pct_flag, time=time, cells=cells,
+                       src_freq=src_freq, tolerance=tolerance)
 
 
 def missing_at_least_n(
@@ -146,10 +170,8 @@ def missing_at_least_n(
     time: str = "time", cells: Sequence[str] = (), src_freq: str = "D",
 ) -> DataFrame:
     """Invalid unless at least n valid values (missing.py:281-337)."""
-    g = _base(df, var, freq, time, cells)
-    return g.withColumn("is_missing", F.col("_valid") < F.lit(n)).drop(
-        "_valid", "_rows"
-    )
+    return _count_mask(df, var, freq, _at_least_n_flag, time=time,
+                       cells=cells, src_freq=src_freq, n=n)
 
 
 def missing_some_but_not_all(
@@ -160,12 +182,8 @@ def missing_some_but_not_all(
     absent but not all of them (reference ``MissingSomeButNotAll``,
     missing.py:325-336).  All-present and all-missing periods are both
     valid."""
-    g = _base(df, var, freq, time, cells)
-    exp = expected_count("period", freq, src_freq)
-    return g.withColumn(
-        "is_missing",
-        ~((F.col("_valid") == exp) | (F.col("_valid") == 0)),
-    ).drop("_valid", "_rows")
+    return _count_mask(df, var, freq, _some_but_not_all_flag, time=time,
+                       cells=cells, src_freq=src_freq)
 
 
 _MONTHS_PER = {"M": 1, "Q": 3, "Y": 12}
@@ -252,13 +270,19 @@ def mask_missing(
     result: DataFrame, missing: DataFrame, value_cols: Sequence[str], *,
     keys: Sequence[str],
 ) -> DataFrame:
-    """Null out flagged periods (the reference's ``where(~mask)`` step)."""
-    j = result.join(missing, on=list(keys), how="left")
-    for c in value_cols:
-        j = j.withColumn(
-            c, F.when(F.coalesce("is_missing", F.lit(False)), None).otherwise(F.col(c))
-        )
-    return j.drop("is_missing")
+    """Null out flagged periods (the reference's ``where(~mask)`` step).
+
+    The keys match null-safely, so a series whose cell is NULL meets its
+    own mask row instead of escaping the mask."""
+    m = missing.select(*[F.col(k).alias(f"_mk{i}") for i, k in enumerate(keys)],
+                       "is_missing")
+    on = reduce(lambda a, b: a & b, [
+        result[k].eqNullSafe(m[f"_mk{i}"]) for i, k in enumerate(keys)])
+    flagged = F.coalesce("is_missing", F.lit(False))
+    return result.join(m, on, "left").select(*[
+        F.when(flagged, None).otherwise(result[c]).alias(c)
+        if c in value_cols else result[c]
+        for c in result.columns])
 
 
 MISSING_METHODS = {
@@ -268,6 +292,21 @@ MISSING_METHODS = {
     "wmo": missing_wmo,
     "some_but_not_all": missing_some_but_not_all,
 }
+
+_COUNT_FLAGS = {
+    missing_any: _any_flag,
+    missing_pct: _pct_flag,
+    missing_at_least_n: _at_least_n_flag,
+    missing_some_but_not_all: _some_but_not_all_flag,
+}
+
+
+def count_flag(method: str):
+    """The flag expression builder ``flag(valid, expected, **options)`` of
+    a count-based method, or None when ``method`` is not one: ``wmo``
+    (run-based) and methods added or replaced through
+    :func:`register_missing_method` only exist as mask DataFrames."""
+    return _COUNT_FLAGS.get(MISSING_METHODS.get(method))
 
 
 def register_missing_method(name: str):

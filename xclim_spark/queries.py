@@ -1436,18 +1436,18 @@ def ind_warm_freq_ys(spark, sf_dir):
     """warm_day_frequency + warm_night_frequency by registry name
     (reference _threshold.py:2674-2745, indices-layer-only functions
     registered as aliases of the count_occurrences compute with the
-    reference's 30/22 degC defaults); the two year-sized outputs meet
-    in one AQE-broadcast join."""
-    from .indicators import registry
+    reference's 30/22 degC defaults), evaluated as two columns of one
+    yearly aggregation."""
+    from .indicators import evaluate_indicators
 
     d = daily_series(spark, sf_dir)
     d = d.withColumn("tx", F.col("qty") + 6.0) \
         .withColumn("tn", F.col("qty") - 6.0)
-    wd = registry["warm_day_frequency"](
-        d, time="day", cells=["cell"], tasmax="tx", missing=None).df
-    wn = registry["warm_night_frequency"](
-        d, time="day", cells=["cell"], tasmin="tn", missing=None).df
-    return wd.join(wn, on=["cell", "period"]).select(
+    out = evaluate_indicators(d, {
+        "warm_day_frequency": dict(tasmax="tx", missing=None),
+        "warm_night_frequency": dict(tasmin="tn", missing=None),
+    }, time="day", cells=["cell"]).df
+    return out.select(
         "cell", F.col("period").cast("date").alias("period"),
         F.col("warm_day_frequency").cast("long")
         .alias("warm_day_frequency"),
@@ -9535,22 +9535,6 @@ def quality_clf_score(spark, sf_dir):
 # list each round), then queries whose last driver-green row is oldest.
 # Regenerate each round with tools/rotate_priority.py — do not hand-edit.
 _PRIORITY = [
-    # -- newest driver-green row: round 12 --
-    "dedup_span_removal", "mm_image_dims", "stream_dedup_fuzzy",
-    "text_gopher_flags", "zarr_consolidated_ingest_ms", "hourly_tas_mean_ms",
-    "missing_any_hourly_ms", "ind_cold_dry_days_ys", "ind_warm_wet_days_ys",
-    "anuclim_bio10_ys", "conv_humidex_ms", "conv_utci_ms",
-    "conv_windchill_ms", "conv_snowfrac_ys", "dedup_exact", "hydro_bfi_ys",
-    "hydro_rbi_ys", "ind_etr_ms", "ind_gsl_ys", "ind_precip_acc_qs",
-    "fwi_max_ys", "spi_ms", "spei_ms", "ffdi_max_ys", "fwi_season_ys",
-    "knn_similar_docs", "knn_lsh_docs", "knn_ivf_docs", "dedup_fuzzy",
-    "dedup_simhash", "dedup_ngram", "dedup_embed", "sdba_loci_adjust_ms",
-    "sdba_qdm_adjust_ms", "sdba_dqm_adjust_ms", "sdba_eqm_adjust_ms",
-    "decontam_docs", "mixture_sample_src", "tree_tx_days_above",
-    "level_crossings_ms", "winter_rain_ratio_qs", "fire_components_ms",
-    "occurrence_doy_ys", "qian_smooth_ms", "solar_correction_ms",
-    "text_repetition_stats", "stream_dedup_exact", "pack_sequences_src",
-    "fire_season_days_ys", "stream_tx_days_above_30d",
     # -- newest driver-green row: round 13 --
     "text_c4_flags", "dedup_c4_spans", "dedup_url_canon", "knn_ivfpq_docs",
     "stratified_topn_src", "stream_dedup_url", "text_nfc_norm",
@@ -9602,6 +9586,22 @@ _PRIORITY = [
     "last_spell_end_before_jul", "daily_events_bnds_qs",
     "ens_filters_pipeline", "zarr3_ingest_ms", "stream_user_sessions",
     "stream_p90_days_over", "nc3_ingest_ms",
+    # -- newest driver-green row: round 17 --
+    "dedup_span_removal", "mm_image_dims", "stream_dedup_fuzzy",
+    "text_gopher_flags", "zarr_consolidated_ingest_ms", "hourly_tas_mean_ms",
+    "missing_any_hourly_ms", "ind_cold_dry_days_ys", "ind_warm_wet_days_ys",
+    "anuclim_bio10_ys", "conv_humidex_ms", "conv_utci_ms",
+    "conv_windchill_ms", "conv_snowfrac_ys", "dedup_exact", "hydro_bfi_ys",
+    "hydro_rbi_ys", "ind_etr_ms", "ind_gsl_ys", "ind_precip_acc_qs",
+    "fwi_max_ys", "spi_ms", "spei_ms", "ffdi_max_ys", "fwi_season_ys",
+    "knn_similar_docs", "knn_lsh_docs", "knn_ivf_docs", "dedup_fuzzy",
+    "dedup_simhash", "dedup_ngram", "dedup_embed", "sdba_loci_adjust_ms",
+    "sdba_qdm_adjust_ms", "sdba_dqm_adjust_ms", "sdba_eqm_adjust_ms",
+    "decontam_docs", "mixture_sample_src", "tree_tx_days_above",
+    "level_crossings_ms", "winter_rain_ratio_qs", "fire_components_ms",
+    "occurrence_doy_ys", "qian_smooth_ms", "solar_correction_ms",
+    "text_repetition_stats", "stream_dedup_exact", "pack_sequences_src",
+    "fire_season_days_ys", "stream_tx_days_above_30d",
 ]
 
 
