@@ -1,31 +1,39 @@
 """Registry identifier parity sweep.
 
-Scans the reference tree for every registered indicator identifier —
-``identifier="..."`` arguments across ``src/xclim/indicators/**`` plus the
-indicator keys of the YAML virtual modules (``data/icclim.yml``,
-``data/anuclim.yml``, ``data/cf.yml``) — and asserts each one resolves in
-this repo's registry / virtual modules.  This is the automated version of
-the round-5/6 alias batches: any identifier the reference registers must
-be callable here by the same name.
+Every identifier the registry and the YAML virtual modules (``icclim``,
+``anuclim``, ``cf``) resolved when the set was frozen is listed in
+``tests/golden/identifiers.json``; the registry must never shrink below
+it.  When the reference checkout is present, its identifiers are
+required too: the ``identifier="..."`` arguments across
+``src/xclim/indicators/**`` plus the indicator keys of the YAML virtual
+modules (``data/icclim.yml``, ``data/anuclim.yml``, ``data/cf.yml``).
+That is the automated version of the round-5/6 alias batches: any
+identifier the reference registers must be callable here by the same
+name.
 
-Skipped when the reference checkout is absent (the repo is standalone).
+Extend the frozen set (sorted registry keys, sorted module keys) when
+an identifier is added on purpose; removing one must fail here.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
 import os
 import re
 
 import pytest
 
 REF = "/root/reference"
+HAVE_REF = os.path.isdir(os.path.join(REF, "src", "xclim"))
+FROZEN = os.path.join(os.path.dirname(__file__), "golden",
+                      "identifiers.json")
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(os.path.join(REF, "src", "xclim")),
-    reason="reference tree not available",
-)
+
+def _frozen(key: str) -> set[str]:
+    with open(FROZEN) as f:
+        return set(json.load(f)[key])
 
 
 def _ref_core_identifiers() -> set[str]:
@@ -57,8 +65,11 @@ def _ref_yaml_identifiers(yml: str) -> list[str]:
 def test_all_reference_core_identifiers_resolve():
     from xclim_spark.indicators import registry
 
-    missing = sorted(i for i in _ref_core_identifiers() if i not in registry)
-    assert not missing, f"unresolvable reference identifiers: {missing}"
+    want = _frozen("registry")
+    if HAVE_REF:
+        want |= _ref_core_identifiers()
+    missing = sorted(i for i in want if i not in registry)
+    assert not missing, f"unresolvable identifiers: {missing}"
 
 
 @pytest.mark.parametrize("yml,module", [
@@ -71,7 +82,10 @@ def test_all_reference_virtual_module_identifiers_resolve(yml, module):
 
     mod = getattr(ind, module)
     mine = {k for k, _ in mod}
-    missing = sorted(set(_ref_yaml_identifiers(yml)) - mine)
+    want = _frozen(module)
+    if HAVE_REF:
+        want |= set(_ref_yaml_identifiers(yml))
+    missing = sorted(want - mine)
     assert not missing, f"{module}: unresolvable identifiers: {missing}"
 
 

@@ -2142,7 +2142,7 @@ def test_lm_score_arrow_matches_joins(spark):
     assert "MapInPandas" not in gp and "Join" in gp
     assert {r["doc_id"]: tuple(r) for r in gated.collect()} == ra
     # an over-budget model collects to None (callers keep the join path)
-    assert lm_broadcast_model(uni, big, sc, max_rows=3) is None
+    assert lm_broadcast_model(uni, big, max_rows=3) is None
 
 
 def test_lm_score_degenerate_reference_model(spark):
@@ -2158,12 +2158,60 @@ def test_lm_score_degenerate_reference_model(spark):
         [(10, "anything at all"), (11, None)],
         "doc_id long, text string")
     uni, big, sc = lm_train_counts(ref)
-    assert lm_broadcast_model(uni, big, sc) is None
+    assert lm_broadcast_model(uni, big) is None
     out = {r["doc_id"]: (r["n_tokens"], r["avg_logprob"], r["ppl"])
            for r in lm_score(docs, uni, big, sc).collect()}
     # auto mode did not raise; every score is the join path's NULL
     assert set(out) == {10, 11}
     assert all(v[1] is None and v[2] is None for v in out.values())
+
+
+def _last_sql_execution(spark) -> int:
+    """Id of the newest SQL execution the status store has seen (-1 if
+    none), after the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return -1 if execs.isEmpty() else execs.last().executionId()
+
+
+def test_lm_broadcast_model_gate_both_sides(spark):
+    """The size gate costs one action (a capped count) and a model that
+    fits one more (the collect); a model over the gate returns None
+    after the count alone.  Both sides score like the join path."""
+    from xclim_spark.llm.lm import (
+        LmBroadcastModel, lm_broadcast_model, lm_score, lm_train_counts)
+
+    ref = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat")],
+        "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(10, "the cat sat"), (11, "dog on mat"), (12, None)],
+        "doc_id long, text string")
+    uni, big, sc = lm_train_counts(ref)
+    n_rows = uni.count() + big.count()   # 6 unigrams + 6 bigrams
+
+    def actions(max_rows):
+        before = _last_sql_execution(spark)
+        bm = lm_broadcast_model(uni, big, max_rows=max_rows)
+        return bm, _last_sql_execution(spark) - before
+
+    fits, n_fit = actions(n_rows)
+    assert isinstance(fits, LmBroadcastModel) and n_fit == 2
+    unid, bigd, total, vocab = fits.bc.value
+    assert (total, vocab) == tuple(sc.first())
+    assert len(unid) + len(bigd) == n_rows
+
+    over, n_over = actions(n_rows - 1)
+    assert over is None and n_over == 1
+
+    def rows(df):
+        return {r["doc_id"]: tuple(r) for r in df.collect()}
+
+    joins = rows(lm_score(docs, uni, big, sc, broadcast_model=False))
+    assert rows(lm_score(docs, uni, big, sc, broadcast_model=fits)) == joins
+    assert rows(lm_score(docs, uni, big, sc,
+                         broadcast_max_rows=n_rows - 1)) == joins
 
 
 @pytest.mark.slow

@@ -150,3 +150,31 @@ def test_score_arrow_matches_numpy_reference(spark):
         m = sum(x * wv[j] for j, x in xs.items())
         want = 1.0 / (1.0 + math.exp(-m))
         assert scored[did] == pytest.approx(want, abs=1e-9)
+
+
+def test_feature_build_hashes_grams_once_above_exchange(spark):
+    """Token-less documents are dropped before the document shuffle, so
+    Catalyst has no gram filter to push below it: the md5 feature hash
+    runs only above the Exchange.  Those documents still do not count
+    toward ``n``: training with them added gives the same weights."""
+    extra = [(10, None, 1), (11, "", 0), (12, "123 456 !!", 1)]
+    docs = spark.createDataFrame(
+        CORPUS + extra, "doc_id LONG, text STRING, label INT")
+    feats = qc._doc_features(docs, text_col="text", id_col="doc_id",
+                             label_col="label", dim=DIM, bigrams=True)
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines)
+              if "Exchange hashpartitioning(_id" in ln)
+    depth = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    below = []
+    for ln in lines[at + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    assert below and not any("md5" in ln for ln in below), plan
+    assert any("md5" in ln for ln in lines[:at]), plan
+    assert {r["_id"] for r in feats.collect()} == {i for i, _, _ in CORPUS}
+    got = qc.quality_clf_train(docs, label_col="label", dim=DIM,
+                               epochs=EPOCHS, lr=LR)
+    np.testing.assert_allclose(got, _np_train(CORPUS), atol=2e-9)

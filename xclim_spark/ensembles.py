@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .operators.percentile import hf_quantile
-from .util import repartition_for_apply
+from .util import local_frame, repartition_for_apply
 
 __all__ = [
     "create_ensemble",
@@ -383,12 +383,13 @@ def build_filtered_ensemble(
         if m in kept:
             k = (m, s)
             firsts[k] = e if k not in firsts else min(firsts[k], e)
-    keep_keys = ens.sparkSession.createDataFrame(
-        [(m, s, e) for (m, s), e in firsts.items()],
-        schema=ens.select(model, scenario, member).schema)
+    spark = ens.sparkSession
+    keep_keys = local_frame(
+        spark, [(m, s, e) for (m, s), e in firsts.items()],
+        ens.select(model, scenario, member).schema)
     futures = ens.filter(F.col(scenario) != hist)
-    scens_df = ens.sparkSession.createDataFrame(
-        [(s,) for s in scens], schema=ens.select(scenario).schema)
+    scens_df = local_frame(spark, [(s,) for s in scens],
+                           ens.select(scenario).schema)
     h = ens.filter(F.col(scenario) == hist).drop(scenario) \
         .crossJoin(F.broadcast(scens_df))
     cat = futures.unionByName(h.select(*futures.columns))

@@ -20,12 +20,14 @@ from collections.abc import Callable, Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..util import local_frame
+
 __all__ = ["netcdf_manifest", "ingest_netcdf", "default_netcdf_reader"]
 
 
 def netcdf_manifest(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """One row per file; repartitioned so each task converts ~1 file."""
-    df = spark.createDataFrame([(p,) for p in paths], "path STRING")
+    df = local_frame(spark, [(p,) for p in paths], "path STRING")
     return df.repartition(max(len(paths), 1))
 
 

@@ -48,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 __all__ = ["read_nc3_header", "read_nc3_var", "write_nc3",
            "ingest_netcdf3", "iter_nc3_frames"]
 
@@ -693,7 +695,7 @@ def ingest_netcdf3(
     schema = ", ".join(fields)
     var_list = list(variables)
 
-    manifest = spark.createDataFrame([(p,) for p in paths], "path STRING") \
+    manifest = local_frame(spark, [(p,) for p in paths], "path STRING") \
         .repartition(max(len(paths), 1))
 
     def _emit(batches):

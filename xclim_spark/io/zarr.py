@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 __all__ = ["zarr_array_meta", "zarr_chunk_manifest", "read_zarr",
            "write_zarr_array", "write_zarr3_array",
            "write_zarr3_sharded_array", "write_zarr_dataset",
@@ -314,7 +316,7 @@ def zarr_chunk_manifest(
         meta = zarr_array_meta(store, var, codecs=codecs)
         for idx in _grid(meta["shape"], meta["chunks"]):
             rows.append((var, _chunk_key(meta, idx)))
-    df = spark.createDataFrame(rows, "var STRING, chunk_key STRING")
+    df = local_frame(spark, rows, "var STRING, chunk_key STRING")
     return df.repartition(min(len(rows), 2048) or 1)
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -160,16 +161,17 @@ def bloom_verdict(
 ) -> Column:
     """Membership verdict as ONE Column over a DRIVER-HELD dense filter
     (``num_bits/63`` longs) — the streaming-ingest form: the filter is
-    a broadcast artifact baked into the plan as a literal array, so
-    arriving rows are probed map-side inside the micro-batch scan with
-    no join and ZERO streaming state.  NULL keys keep a NULL verdict,
+    a broadcast artifact baked into the plan as one bigint array
+    literal (an ndarray literal, not a Column per word), so arriving
+    rows are probed map-side inside the micro-batch scan with no join
+    and ZERO streaming state.  NULL keys keep a NULL verdict,
     matching :func:`bloom_probe`."""
     if len(bloom) != num_bits // WORD_BITS:
         raise ValueError(
             f"dense filter has {len(bloom)} words, expected "
             f"{num_bits // WORD_BITS}")
     kc = key if isinstance(key, Column) else F.col(key)
-    arr = F.lit([int(x) for x in bloom]).cast("array<bigint>")
+    arr = F.lit(np.asarray(bloom, dtype=np.int64))
     verdict = None
     for i in range(num_hashes):
         chunk, mask = _bit_coords(kc, i, num_bits)

@@ -126,7 +126,6 @@ class LmBroadcastModel:
 def lm_broadcast_model(
     uni: DataFrame,
     big: DataFrame,
-    scalars: DataFrame,
     *,
     max_rows: int = 2_000_000,
 ) -> LmBroadcastModel | None:
@@ -134,6 +133,15 @@ def lm_broadcast_model(
     they fit (``uni`` + ``big`` row count <= ``max_rows``); return
     ``None`` when they don't, so callers fall back to the join-based
     scorer.
+
+    Two Spark actions over the tagged union of the two tables: a
+    ``limit(max_rows + 1).count()`` (the cap stops counting one row
+    past the gate instead of counting both tables in full), then one
+    ``collect`` when the model fits.  The scalar pair (total token
+    count, vocabulary size) is summed on the driver from the collected
+    unigram rows.  A token-less reference corpus has no unigram rows
+    and also returns ``None``: the join path yields its degenerate-model
+    NULL scores.
 
     Scale rationale: CCNet's own production scorer ships the trained
     LM to every worker rather than joining against it — broadcasting
@@ -144,19 +152,20 @@ def lm_broadcast_model(
     well past Spark's 10 MB auto-broadcast join ceiling that would
     otherwise force the three scoring joins to shuffle every token
     row."""
-    if uni.count() + big.count() > max_rows:
+    grams = uni.select(F.lit(1).alias("n"), F.col("w").alias("g"),
+                       F.col("cu").alias("c")).unionByName(
+        big.select(F.lit(2).alias("n"), F.col("bg").alias("g"),
+                   F.col("cb").alias("c")))
+    if grams.limit(max_rows + 1).count() > max_rows:
         return None
-    total, vocab = scalars.first()
-    if total is None:
-        # token-less reference corpus: sum(cu) over zero rows is NULL.
-        # Return None so auto mode falls back to the join path, which
-        # yields the degenerate-model NULL scores gracefully.
+    unid, bigd = {}, {}
+    for n, g, c in grams.collect():
+        (unid if n == 1 else bigd)[g] = c
+    if not unid:
         return None
-    unid = {r[0]: r[1] for r in uni.collect()}
-    bigd = {r[0]: r[1] for r in big.collect()}
     sc = uni.sparkSession.sparkContext
     return LmBroadcastModel(
-        sc.broadcast((unid, bigd, int(total), int(vocab))))
+        sc.broadcast((unid, bigd, sum(unid.values()), len(unid))))
 
 
 def _lm_score_arrow(
@@ -266,8 +275,7 @@ def lm_score(
       any worker's memory."""
     bm = broadcast_model
     if bm == "auto":
-        bm = lm_broadcast_model(uni, big, scalars,
-                                max_rows=broadcast_max_rows)
+        bm = lm_broadcast_model(uni, big, max_rows=broadcast_max_rows)
     if isinstance(bm, LmBroadcastModel):
         return _lm_score_arrow(docs, bm, text_col=text_col,
                                id_col=id_col, alpha=alpha)

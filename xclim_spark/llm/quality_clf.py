@@ -25,7 +25,12 @@ Scale design:
   rows — the counts-shuffle-not-text shape shared with BPE training
   (tokenizer.py).  The driver only ever collects the ``dim + 1``
   gradient vector per epoch (the k-means-centroid pattern; ``dim`` is
-  a few thousand, never corpus-sized).
+  a few thousand, never corpus-sized), and hands the updated weights
+  back as ONE typed array literal (``F.lit`` of a float64 ndarray):
+  a list literal builds one Column per weight and a ``CreateArray``
+  with ``dim + 1`` children, analyzed again every epoch (~4.5x the
+  driver CPU of the ndarray literal at ``dim`` 512).  The Column
+  scorer (``arrow=False``) bakes its weights in the same way.
 * **The intercept is a hashed feature** (index ``dim``, x = 1.0), so
   the bias gradient rides the same single shuffle instead of needing a
   second aggregation pass per epoch.
@@ -51,6 +56,7 @@ from __future__ import annotations
 
 import re as _re
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -117,15 +123,18 @@ def _doc_features(
     sf0.1 with a row-set-identical result and bit-identical trained
     weights (PLANS.md round 17)."""
     grams = _gram_array(text_col, bigrams=bigrams)
+    # grams are non-empty exactly when tokens are: filtering on the
+    # tokens BEFORE the exchange keeps Catalyst from pushing a filter on
+    # the hashed grams below it, which would run the md5 transform on
+    # both sides of the shuffle
     base = (docs
-            .where(F.col(text_col).isNotNull())
+            .where(F.size(_token_array(text_col)) >= 1)
             .select(F.col(id_col).alias("_id"),
                     F.col(label_col).cast("double").alias("_y"),
                     F.col(text_col))
             .repartition("_id")
             .select("_id", "_y",
                     hashed_gram_indices(grams, dim).alias("_gi"))
-            .where(F.size("_gi") >= 1)
             .select("_id", "_y", F.size("_gi").alias("_ng"),
                     F.explode(F.concat(
                         "_gi", F.array(F.lit(-1).cast("int"))))
@@ -201,7 +210,7 @@ def quality_clf_train(
     w = [0.0] * (dim + 1)
     try:
         for _ in range(epochs):
-            wlit = F.lit(w)
+            wlit = F.lit(np.asarray(w, dtype=np.float64))
             # margin as a window sum over the document's own feature
             # rows: same float-sum tolerance class as the aggregate it
             # replaces (per-epoch weights round to 9 decimals — the
@@ -241,7 +250,6 @@ def _score_texts(texts, w_arr, dim: int, bigrams: bool):
     md5-prefix % dim, count/ng features, intercept at index dim)."""
     import hashlib
 
-    import numpy as np
     import pandas as pd
 
     findall = _PY_TOKEN_RE.findall
@@ -321,11 +329,9 @@ def quality_clf_score(
     tests/test_quality_clf.py asserts score parity between the two
     paths on mixed-case/Unicode fixtures."""
     dim = len(weights) - 1
+    w_arr = np.asarray(weights, dtype=np.float64)
     if arrow:
-        import numpy as np
         from pyspark.sql.functions import pandas_udf
-
-        w_arr = np.asarray(weights, dtype=np.float64)
 
         @pandas_udf("double")
         def _score(texts):
@@ -335,7 +341,7 @@ def quality_clf_score(
 
         return docs.select(
             F.col(id_col), _score(F.col(text_col)).alias(alias))
-    wlit = F.lit(weights)
+    wlit = F.lit(w_arr)
     grams = _gram_array(text_col, bigrams=bigrams)
     gi = hashed_gram_indices(grams, dim)
     acc = F.aggregate(

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 __all__ = ["dot", "l2_norm", "cosine_similarity", "pair_cosine_arrow",
            "knn_bruteforce", "knn_lsh", "knn_ivf", "lsh_bucket",
            "kmeans_fit", "pq_fit", "pq_encode", "knn_ivfpq",
@@ -241,7 +243,7 @@ def _knn_bruteforce_batch(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
     if not qrows:
-        empty = emb.sparkSession.createDataFrame([], out_schema)
+        empty = local_frame(emb.sparkSession, [], out_schema)
         return (empty.withColumn("rank", F.row_number().over(w))
                 .select("query_id", "neighbor_id", "cos_sim", "rank"))
     qids = [r[0] for r in qrows]

@@ -24,6 +24,7 @@ from .calendar import period_start, select_time
 from .operators import generic as g
 from .operators import missing as miss
 from .operators import run_length as rl
+from .util import local_frame
 
 # ---------------------------------------------------------------------------
 # shared sources
@@ -31,6 +32,12 @@ from .operators import run_length as rl
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _centroid_frame(spark: SparkSession, cents) -> DataFrame:
+    """(vec_id, embedding) rows of a driver-side centroid matrix."""
+    return local_frame(spark, list(enumerate(cents.tolist())),
+                       "vec_id LONG, embedding ARRAY<DOUBLE>")
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -66,16 +73,10 @@ def daily_series_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     table once and every branch reads cached blocks (a production
     pipeline would stage it once via io.dataset's layout instead).  The
     bench/driver clears the cache between queries, so nothing leaks
-    across measurements.  ``XCLIM_SPARK_NO_PERSIST=1`` disables the
-    persist (A/B measurement knob)."""
-    import os
-
+    across measurements."""
     from pyspark import StorageLevel
 
-    d = daily_series(spark, sf_dir)
-    if os.environ.get("XCLIM_SPARK_NO_PERSIST"):
-        return d
-    return d.persist(StorageLevel.MEMORY_AND_DISK)
+    return daily_series(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 DAILY_SQL = """
@@ -3965,7 +3966,7 @@ def ens_kkz_selection(spark, sf_dir):
     ids, mat = es.make_criteria(crit, ["c_mean", "c_std", "c_max"])
     picked = es.kkz_reduce_ensemble(mat, k=2)
     sel = [(i, int(ids[j])) for i, j in enumerate(picked)]
-    return spark.createDataFrame(sel, "rank INT, realization INT")
+    return local_frame(spark, sel, "rank INT, realization INT")
 
 
 @_register(
@@ -5337,10 +5338,7 @@ def knn_ivf_trained_docs(spark, sf_dir):
 
     e = _read(spark, sf_dir, "embeddings")
     cents_np = kmeans_fit(e, 10, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = _centroid_frame(spark, cents_np)
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivf(e, q, cents, k=5, nprobe=2)
     return out.withColumn("cos_sim", F.round("cos_sim", 6))
@@ -5404,10 +5402,7 @@ def knn_ivfpq_docs(spark, sf_dir):
                               % 11 - 5).cast("double"),
         ).alias("embedding"))
     cents_np = kmeans_fit(e, 10, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = _centroid_frame(spark, cents_np)
     books = pq_fit(e, m=8, ks=16, iters=2)
     q = e.filter(vid % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
@@ -5439,10 +5434,7 @@ def knn_ivfpq_fixedq_docs(spark, sf_dir):
                               % 11 - 5).cast("double"),
         ).alias("embedding"))
     cents_np = kmeans_fit(e, 10, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = _centroid_frame(spark, cents_np)
     books = pq_fit(e, m=8, ks=16, iters=2)
     q = e.filter(vid < 400)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
@@ -5511,10 +5503,7 @@ def knn_ivfpq_res_docs(spark, sf_dir):
                               % 11 - 5).cast("double"),
         ).alias("embedding"))
     cents_np = kmeans_fit(e, 10, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = _centroid_frame(spark, cents_np)
     books = pq_fit(e, m=8, ks=16, iters=2, centroids=cents)
     q = e.filter(vid % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40,
@@ -5592,8 +5581,8 @@ def kmeans_step_centroids(spark, sf_dir):
     rows = [(c, j + 1, int(counts[c]), round(float(cents[c, j]), 6))
             for c in range(cents.shape[0])
             for j in range(cents.shape[1])]
-    return spark.createDataFrame(
-        rows, "cluster INT, dim INT, n BIGINT, c DOUBLE")
+    return local_frame(
+        spark, rows, "cluster INT, dim INT, n BIGINT, c DOUBLE")
 
 
 @_register(
@@ -8823,8 +8812,8 @@ def tokenizer_bpe_train(spark, sf_dir):
 
     d = _read(spark, sf_dir, "documents")
     merges = tok.bpe_train(d, num_merges=10)
-    return spark.createDataFrame(
-        [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
+    return local_frame(
+        spark, [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "rnd INT, lhs STRING, rhs STRING, pair_count LONG")
 
 
@@ -8971,10 +8960,7 @@ def stream_knn_ingest(spark, sf_dir):
 
     e = _deco(_read(spark, sf_dir, "embeddings"))
     cents_np = kmeans_fit(e, 10, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = _centroid_frame(spark, cents_np)
     books = pq_fit(e, m=8, ks=16, iters=2, centroids=cents)
 
     root = _stage_stream_embs(sf_dir)
@@ -9307,7 +9293,7 @@ def stream_lm_quality(spark, sf_dir):
     # collect + broadcast the model ONCE, outside the per-batch loop
     # (the CCNet ship-the-LM-to-workers shape); size-gated — an
     # over-budget model returns None and each batch keeps the join path
-    model = lm_broadcast_model(uni, big, sc)
+    model = lm_broadcast_model(uni, big)
 
     root = _stage_stream_docs(sf_dir)
     sdf = (spark.readStream
@@ -9483,7 +9469,7 @@ def quality_clf_train(spark, sf_dir):
         lr=_QCLF_LR)
     rows = [(j, round(wj, 6)) for j, wj in enumerate(w)
             if round(wj, 6) != 0.0]
-    return spark.createDataFrame(rows, "idx INT, weight DOUBLE")
+    return local_frame(spark, rows, "idx INT, weight DOUBLE")
 
 
 @_register(

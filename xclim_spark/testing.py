@@ -12,6 +12,8 @@ from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .util import local_frame
+
 
 def timeseries(
     spark: SparkSession,
@@ -31,4 +33,4 @@ def timeseries(
          float(v) if v is not None else None)
         for i, v in enumerate(values)
     ]
-    return spark.createDataFrame(rows, schema=f"cell INT, time DATE, {var} DOUBLE")
+    return local_frame(spark, rows, f"cell INT, time DATE, {var} DOUBLE")
