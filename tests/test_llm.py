@@ -2221,8 +2221,7 @@ def test_exact_first_components_match_naive(spark):
     identical shingle sets — on a corpus with clone groups, cross-group
     near-dups, shingle-ineligible short docs, and NULLs."""
     from xclim_spark.llm.dedup import (
-        connected_components, near_dup_components_exact_first,
-        near_duplicates)
+        connected_components, near_dup_components, near_duplicates)
 
     base = ("the quick brown fox jumps over the lazy dog and runs far "
             "away tonight")
@@ -2241,7 +2240,7 @@ def test_exact_first_components_match_naive(spark):
 
     naive = connected_components(near_duplicates(
         docs, threshold=0.5, num_perm=64, bands=32))
-    comp = near_dup_components_exact_first(
+    comp = near_dup_components(
         docs, threshold=0.5, num_perm=64, bands=32)
     a = {r["id"]: r["component"] for r in naive.collect()}
     b = {r["id"]: r["component"] for r in comp.collect()}
@@ -2249,7 +2248,7 @@ def test_exact_first_components_match_naive(spark):
     assert set(a) == set(range(9))          # A+B merge; 9/10/11 absent
     assert len(set(a.values())) == 1
     # star closure variant agrees too
-    c = {r["id"]: r["component"] for r in near_dup_components_exact_first(
+    c = {r["id"]: r["component"] for r in near_dup_components(
         docs, threshold=0.5, num_perm=64, bands=32,
         use_star=True).collect()}
     assert c == a
@@ -2257,12 +2256,11 @@ def test_exact_first_components_match_naive(spark):
 
 @pytest.mark.slow
 def test_near_dup_components_default_is_exact_first(spark):
-    """near_dup_components is the production front door: the default
-    path must equal the exact-first composition, naive=True must equal
-    the raw pair-graph closure, and both must agree on the partition."""
+    """near_dup_components is the production front door: naive=True
+    must equal the raw pair-graph closure, and the default exact-first
+    path must agree with it on the partition."""
     from xclim_spark.llm.dedup import (
-        connected_components, near_dup_components,
-        near_dup_components_exact_first, near_duplicates)
+        connected_components, near_dup_components, near_duplicates)
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu")
@@ -2275,16 +2273,12 @@ def test_near_dup_components_default_is_exact_first(spark):
 
     default = {r["id"]: r["component"]
                for r in near_dup_components(docs, **kw).collect()}
-    legacy = {r["id"]: r["component"]
-              for r in near_dup_components_exact_first(docs, **kw)
-              .collect()}
     naive = {r["id"]: r["component"]
              for r in near_dup_components(docs, naive=True, **kw)
              .collect()}
     raw = {r["id"]: r["component"]
            for r in connected_components(
                near_duplicates(docs, **kw)).collect()}
-    assert default == legacy
     assert naive == raw
     assert default == naive
     assert set(default) == set(range(6))

@@ -115,25 +115,36 @@ UNICODE_CORPUS = [
 ]
 
 
-def test_score_arrow_matches_column_twin(spark):
-    """The vectorized Arrow scorer and the pure-Column fold are the
-    same function: identical scores on mixed-case/Unicode/NULL
-    fixtures (tokenizer divergence between Python re/str.lower and JVM
-    regexp_extract_all/lower would show up here)."""
+def test_score_matches_jvm_feature_fold(spark):
+    """The scorer tokenizes and hashes in Python (``re``,
+    ``str.lower``, hashlib md5) where training derives its feature
+    indices in the JVM (``regexp_extract_all``, ``lower``, ``md5``).
+    Scores on mixed-case/Unicode/NULL fixtures must equal a plain fold
+    over the JVM indices — ``acc = ((0.0 + w[i0]) + w[i1]) + ...``,
+    ``acc / n_grams + b``, sigmoid — bit for bit, so any tokenizer
+    divergence between the two engines shows up here."""
     docs = spark.createDataFrame(
         [(i, t) for i, t, _ in UNICODE_CORPUS],
         "doc_id LONG, text STRING")
     w = _np_train(CORPUS).tolist()
-    got_arrow = {r["doc_id"]: r["quality_score"]
-                 for r in qc.quality_clf_score(
-                     docs, w, arrow=True).collect()}
-    got_col = {r["doc_id"]: r["quality_score"]
-               for r in qc.quality_clf_score(
-                   docs, w, arrow=False).collect()}
-    assert set(got_arrow) == set(got_col) == {i for i, _, _ in
-                                              UNICODE_CORPUS}
-    for did in got_col:
-        assert got_arrow[did] == pytest.approx(got_col[did], abs=1e-12)
+    jvm_idx = {r["doc_id"]: r["gi"] or [] for r in docs.select(
+        "doc_id",
+        qc.hashed_gram_indices(qc._gram_array("text"), DIM).alias("gi"),
+    ).collect()}
+    ids = sorted(jvm_idx)
+    margins = []
+    for did in ids:
+        acc = 0.0
+        for i in jvm_idx[did]:
+            acc = acc + w[i]
+        n = len(jvm_idx[did])
+        margins.append((acc / n if n else 0.0) + w[DIM])
+    want = dict(zip(ids, 1.0 / (1.0 + np.exp(-np.asarray(margins)))))
+    got = {r["doc_id"]: r["quality_score"]
+           for r in qc.quality_clf_score(docs, w).collect()}
+    assert set(got) == set(want) == {i for i, _, _ in UNICODE_CORPUS}
+    for did in want:
+        assert got[did] == want[did], (did, got[did], want[did])
 
 
 def test_score_arrow_matches_numpy_reference(spark):
@@ -142,8 +153,7 @@ def test_score_arrow_matches_numpy_reference(spark):
     w = qc.quality_clf_train(
         docs, label_col="label", dim=DIM, epochs=EPOCHS, lr=LR)
     scored = {r["doc_id"]: r["quality_score"]
-              for r in qc.quality_clf_score(docs, w, arrow=True)
-              .collect()}
+              for r in qc.quality_clf_score(docs, w).collect()}
     wv = np.array(w)
     for did, text, _y in CORPUS:
         xs = _np_feats(text)

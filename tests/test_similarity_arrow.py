@@ -1,20 +1,28 @@
-"""Bit-parity of the Arrow batch kernels against the Column folds they
-replace (llm/similarity.py pair_cosine_arrow / knn_lsh signatures /
-random_projection; llm/dedup.py embedding_near_duplicates verify).
+"""Bit-exact checks of the vector kernels in llm/similarity.py
+(pair_cosine_arrow, knn_bruteforce, knn_lsh signatures, knn_ivf,
+knn_ivfpq, random_projection) and llm/dedup.py
+(embedding_near_duplicates, semantic_dedup) against a test-local
+pure-Python reference.
 
-The Arrow kernels claim BIT-IDENTICAL results, not approximate ones:
-the per-dimension accumulation replicates the interpreted ``aggregate``
-fold's left-to-right float64 order (similarity._seq_dot64), so LSH sign
-decisions, threshold comparisons and rounded outputs cannot move.  The
-fixtures include near-zero dot products (the adversarial case for sign
-stability) and a float32 source column (the widening-cast case).
+The kernels claim BIT-IDENTICAL results, not approximate ones: every
+dot product is the left-to-right float64 fold
+``acc = ((0.0 + x0*y0) + x1*y1) + ...`` (similarity._seq_dot64), the
+order the DuckDB oracles restate, so LSH sign decisions, threshold
+comparisons and rounded outputs cannot move.  The reference below is
+that fold written out in plain Python; every comparison is ``==`` on
+raw doubles.  The fixtures include near-zero dot products (the
+adversarial case for sign stability), a float32 source column (the
+widening-cast case) and NULL vectors (scored NULL, ranked last, LSH
+bucket 0, all-NULL projection).
 """
+
+import math
 
 import numpy as np
 import pytest
 
 
-def _emb_df(spark, n=60, dim=16, seed=3, dtype="float"):
+def _emb_df(spark, n=60, dim=16, seed=3, dtype="float", nulls=()):
     rng = np.random.RandomState(seed)
     vecs = rng.standard_normal((n, dim))
     # vecs[1]: Gram-Schmidt residual against vecs[0] — the exact dot is
@@ -23,111 +31,311 @@ def _emb_df(spark, n=60, dim=16, seed=3, dtype="float"):
     vecs[1] = vecs[1] - (vecs[1] @ vecs[0]) / (vecs[0] @ vecs[0]) * vecs[0]
     # vecs[2]: a near-parallel clone (cosine within 1e-13 of 1.0)
     vecs[2] = vecs[0] * (1 + 1e-13)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(n)]
+    rows = [(i, None if i in nulls else [float(x) for x in vecs[i]])
+            for i in range(n)]
     return spark.createDataFrame(
         rows, f"vec_id LONG, embedding ARRAY<{dtype.upper()}>")
 
 
-@pytest.mark.parametrize("dtype", ["float", "double"])
-def test_pair_cosine_arrow_bit_parity(spark, dtype):
+def _ref_dot(x, y):
+    acc = 0.0
+    for a, b in zip(x, y):
+        acc = acc + a * b
+    return acc
+
+
+def _ref_cos(x, y):
+    """Cosine as the kernels evaluate it; NULL for a NULL or zero-norm
+    vector (a kernel NaN crosses the Arrow boundary as SQL NULL)."""
+    if x is None or y is None:
+        return None
+    den = math.sqrt(_ref_dot(x, x)) * math.sqrt(_ref_dot(y, y))
+    return _ref_dot(x, y) / den if den else None
+
+
+def _ref_rank(cands, k):
+    """``{query: [(neighbor, cos)]}`` -> ``{(query, rank): (neighbor,
+    cos)}`` under ``cos DESC NULLS LAST, neighbor ASC``."""
+    out = {}
+    for q, lst in cands.items():
+        lst = sorted(lst, key=lambda t: (t[1] is None, -(t[1] or 0.0),
+                                         t[0]))
+        for r, (nb, c) in enumerate(lst[:k], start=1):
+            out[(q, r)] = (nb, c)
+    return out
+
+
+def _vecs(df):
+    return {r["vec_id"]: r["embedding"] for r in df.collect()}
+
+
+def _ranked(rows):
+    return {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
+            for r in rows}
+
+
+def _ref_brute(vecs, qids, k, allowed=None):
+    cands = {q: [(n, _ref_cos(vecs[q], v)) for n, v in vecs.items()
+                 if n != q and (allowed is None or allowed(q, n))]
+             for q in qids}
+    return _ref_rank(cands, k)
+
+
+def _ref_lsh_buckets(v, dim, n_planes, n_tables, seed=42):
+    """Per-table bucket ids: bit i set when the plane-i fold is >= 0;
+    a NULL vector (NaN fold, ``NaN >= 0`` false) is bucket 0."""
+    from xclim_spark.llm.similarity import _planes
+
+    out = []
+    for t in range(n_tables):
+        b = 0
+        for i, p in enumerate(_planes(dim, n_planes, seed + t)):
+            if v is not None and _ref_dot(v, p) >= 0.0:
+                b |= 1 << i
+        out.append(b)
+    return out
+
+
+def _ref_lsh(vecs, qids, k, dim, n_planes, n_tables):
+    bk = {i: _ref_lsh_buckets(v, dim, n_planes, n_tables)
+          for i, v in vecs.items()}
+    return _ref_brute(
+        vecs, qids, k,
+        allowed=lambda q, n: any(a == b for a, b in zip(bk[q], bk[n])))
+
+
+def _pair_cosines(e):
     from pyspark.sql import functions as F
 
-    from xclim_spark.llm.similarity import (
-        cosine_similarity, pair_cosine_arrow)
+    from xclim_spark.llm.similarity import pair_cosine_arrow
 
-    e = _emb_df(spark, dtype=dtype)
-    pairs = (e.alias("a").crossJoin(
-        e.selectExpr("vec_id AS vb", "embedding AS eb").alias("b"))
-        .filter(F.col("vec_id") < F.col("vb")))
-    got = pairs.select(
+    pairs = (e.crossJoin(e.selectExpr("vec_id AS vb", "embedding AS eb"))
+             .filter(F.col("vec_id") < F.col("vb")))
+    return {(r["vec_id"], r["vb"]): r["c"] for r in pairs.select(
         "vec_id", "vb",
         pair_cosine_arrow(F.col("embedding"), F.col("eb")).alias("c"),
-    ).collect()
-    want = pairs.select(
-        "vec_id", "vb",
-        cosine_similarity(F.col("embedding"), F.col("eb")).alias("c"),
-    ).collect()
-    gm = {(r["vec_id"], r["vb"]): r["c"] for r in got}
-    wm = {(r["vec_id"], r["vb"]): r["c"] for r in want}
-    assert gm.keys() == wm.keys()
-    for k in wm:
+    ).collect()}
+
+
+def _assert_bits(got, want):
+    assert got.keys() == want.keys() and want
+    for key, w in want.items():
+        g = got[key]
         # bit-for-bit, not approx
-        assert gm[k] == wm[k], (k, gm[k].hex(), wm[k].hex())
+        assert g == w, (key, g, w)
 
 
-def test_knn_lsh_arrow_matches_column(spark):
+@pytest.mark.parametrize("dtype", ["float", "double"])
+def test_pair_cosine_arrow_bit_parity(spark, dtype):
+    e = _emb_df(spark, dtype=dtype)
+    vecs = _vecs(e)
+    want = {(a, b): _ref_cos(vecs[a], vecs[b])
+            for a in vecs for b in vecs if a < b}
+    _assert_bits(_pair_cosines(e), want)
+
+
+def test_pair_cosine_null_vectors(spark):
+    """A NULL vector on either side scores NULL; every other pair keeps
+    its reference cosine (a NULL row used to crash the batch stack)."""
+    e = _emb_df(spark, n=12, dim=8, nulls=(3, 7)).repartition(2)
+    vecs = _vecs(e)
+    want = {(a, b): _ref_cos(vecs[a], vecs[b])
+            for a in vecs for b in vecs if a < b}
+    got = _pair_cosines(e)
+    _assert_bits(got, want)
+    assert all(got[p] is None for p in got if 3 in p or 7 in p)
+
+
+def test_knn_lsh_matches_reference(spark):
+    """knn_lsh buckets plus top-k against the reference: with k above
+    the corpus size the output IS the bucket-collision candidate set,
+    so bucket membership is pinned as well as the ranked cosines."""
     from xclim_spark.llm.similarity import knn_lsh
 
     e = _emb_df(spark, n=80, dim=16)
-    q = e.filter("vec_id % 10 = 0")
-    a = knn_lsh(e, q, k=3, dim=16, n_planes=6, n_tables=3,
-                arrow=True).collect()
-    b = knn_lsh(e, q, k=3, dim=16, n_planes=6, n_tables=3,
-                arrow=False).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    am = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in a}
-    bm = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in b}
-    assert am == bm and len(am) > 0
+    q = e.filter("vec_id % 10 = 0 OR vec_id = 1")
+    vecs = _vecs(e)
+    qids = [i for i in vecs if i % 10 == 0 or i == 1]
+    for k in (3, 100):
+        got = _ranked(knn_lsh(e, q, k=k, dim=16, n_planes=6,
+                              n_tables=3).collect())
+        _assert_bits(got, _ref_lsh(vecs, qids, k, 16, 6, 3))
+
+
+def test_knn_lsh_null_vectors(spark):
+    """A NULL vector lands in bucket 0 of every table and scores NULL:
+    it ranks after every real cosine, and a NULL query ranks its
+    bucket-0 candidates by id."""
+    from xclim_spark.llm.similarity import knn_lsh
+
+    e = _emb_df(spark, n=40, dim=8, nulls=(3, 7, 11))
+    q = e.filter("vec_id IN (0, 3, 5)")
+    vecs = _vecs(e)
+    got = _ranked(knn_lsh(e, q, k=40, dim=8, n_planes=3,
+                          n_tables=2).collect())
+    want = _ref_lsh(vecs, [0, 3, 5], 40, 8, 3, 2)
+    _assert_bits(got, want)
+    assert any(nb == 3 for nb, _ in got.values())  # NULLs are candidates
+    assert all(c is None for (qid, _), (_, c) in got.items() if qid == 3)
 
 
 def test_knn_ivf_and_bruteforce_arrow_match(spark):
-    from xclim_spark.llm.similarity import knn_bruteforce, knn_ivf
+    """knn_bruteforce (batch path, and the pair-join path forced with
+    ``broadcast_max_queries=0``) and knn_ivf against the reference.
+    IVF cells come from the shared centroid scorer (cell assignment is
+    a BLAS argmax, not an oracle-restated fold); the candidate cosines
+    and ranks must match the reference bit for bit."""
+    from xclim_spark.llm.similarity import (
+        _centroid_scorer, knn_bruteforce, knn_ivf)
 
     e = _emb_df(spark, n=80, dim=16)
     q = e.filter("vec_id % 10 = 0")
     cents = e.filter("vec_id % 7 = 0")
-    for fn, kw in ((knn_bruteforce, {}), (knn_ivf, {"nprobe": 2})):
-        args = (e, q) if fn is knn_bruteforce else (e, q, cents)
-        a = fn(*args, k=3, arrow=True, **kw).collect()
-        b = fn(*args, k=3, arrow=False, **kw).collect()
-        am = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-              for r in a}
-        bm = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-              for r in b}
-        assert am == bm and len(am) > 0
+    vecs = _vecs(e)
+    qids = [i for i in vecs if i % 10 == 0]
+    want = _ref_brute(vecs, qids, 3)
+    for gate in (8192, 0):
+        _assert_bits(_ranked(knn_bruteforce(
+            e, q, k=3, broadcast_max_queries=gate).collect()), want)
+
+    import pandas as pd
+
+    cids, scores = _centroid_scorer(cents, "vec_id", "embedding")
+    ids = list(vecs)
+    sc = scores(pd.Series([vecs[i] for i in ids]))
+    cell = dict(zip(ids, cids[np.argmax(sc, axis=1)]))
+    probes = {i: set(cids[np.argsort(-sc[j], kind="stable")[:2]])
+              for j, i in enumerate(ids)}
+    want_ivf = _ref_brute(vecs, qids, 3,
+                          allowed=lambda qq, n: cell[n] in probes[qq])
+    _assert_bits(_ranked(knn_ivf(e, q, cents, k=3, nprobe=2).collect()),
+                 want_ivf)
+
+
+def test_knn_bruteforce_join_null_embeddings(spark):
+    """The pair-join path (query set over the collect gate) scores a
+    NULL vector NULL and ranks it last, exactly like the batch path."""
+    from xclim_spark.llm.similarity import knn_bruteforce
+
+    e = _emb_df(spark, n=12, dim=8, nulls=(3, 7))
+    q = e.filter("vec_id IN (0, 3, 5)")
+    join = _ranked(knn_bruteforce(e, q, k=4,
+                                  broadcast_max_queries=0).collect())
+    _assert_bits(join, _ref_brute(_vecs(e), [0, 3, 5], 4))
+    assert join == _ranked(knn_bruteforce(e, q, k=4).collect())
+
+
+def test_knn_ivf_null_vectors(spark):
+    """NULL vectors no longer crash cell assignment: a NULL corpus
+    vector scores NULL and ranks after every real cosine, and a NULL
+    query ranks its candidates by id with NULL scores."""
+    from xclim_spark.llm.similarity import knn_ivf
+
+    e = _emb_df(spark, n=30, dim=8, nulls=(3, 7))
+    cents = e.filter("vec_id IN (1, 2, 4)")
+    # nprobe = every cell: the candidates are the whole corpus
+    got = _ranked(knn_ivf(e, e.filter("vec_id IN (0, 3)"), cents, k=30,
+                          nprobe=3).collect())
+    _assert_bits(got, _ref_brute(_vecs(e), [0, 3], 30))
+    assert [got[(0, r)][0] for r in (28, 29)] == [3, 7]
+
+
+def test_knn_ivfpq_null_vectors(spark):
+    """A NULL vector crosses PQ encoding, the ADC table and the exact
+    re-rank as a NaN row: it never crashes, and it scores NULL."""
+    from xclim_spark.llm.similarity import knn_ivfpq, pq_fit
+
+    e = _emb_df(spark, n=40, dim=8, nulls=(3, 7))
+    books = pq_fit(e.filter("embedding IS NOT NULL"), m=2, ks=4, iters=1)
+    cents = e.filter("vec_id IN (1, 2, 4)")
+    for residual in (False, True):
+        got = _ranked(knn_ivfpq(
+            e, e.filter("vec_id IN (0, 3)"), cents, books, k=40,
+            nprobe=3, shortlist=40, residual=residual).collect())
+        # every cell probed, full shortlist: exact brute force
+        _assert_bits(got, _ref_brute(_vecs(e), [0, 3], 40))
+
+
+def _projections(e, out_dim=5):
+    from xclim_spark.llm.similarity import random_projection
+
+    return {r["vec_id"]: r["p"] for r in e.select(
+        "vec_id",
+        random_projection("embedding", dim=16, out_dim=out_dim).alias("p"),
+    ).collect()}
 
 
 def test_random_projection_arrow_bit_parity(spark):
-    from xclim_spark.llm.similarity import random_projection
+    from xclim_spark.llm.similarity import _planes
 
     e = _emb_df(spark, n=40, dim=16)
-    a = e.select(
-        "vec_id",
-        random_projection("embedding", dim=16, out_dim=5,
-                          arrow=True).alias("p")).collect()
-    b = e.select(
-        "vec_id",
-        random_projection("embedding", dim=16, out_dim=5,
-                          arrow=False).alias("p")).collect()
-    am = {r["vec_id"]: r["p"] for r in a}
-    bm = {r["vec_id"]: r["p"] for r in b}
-    assert am.keys() == bm.keys()
-    for k in bm:
-        assert am[k] == bm[k]
+    scale = 1.0 / float(np.sqrt(5))
+    P = [[x * scale for x in p] for p in _planes(16, 5, 42)]
+    want = {i: [_ref_dot(v, p) for p in P] for i, v in _vecs(e).items()}
+    _assert_bits(_projections(e), want)
 
 
-def test_embedding_near_duplicates_arrow_matches_column(spark):
+def test_random_projection_null_vector(spark):
+    """A NULL vector projects to ``out_dim`` NULLs; the other rows are
+    unaffected by sharing its Arrow batch."""
+    e = _emb_df(spark, n=12, dim=16, nulls=(0, 5)).coalesce(1)
+    got = _projections(e)
+    assert got[0] == got[5] == [None] * 5
+    full = _projections(_emb_df(spark, n=12, dim=16))
+    assert {i: p for i, p in got.items() if i not in (0, 5)} == \
+        {i: p for i, p in full.items() if i not in (0, 5)}
+
+
+def _with_clones(spark, e):
     from pyspark.sql import functions as F
 
-    from xclim_spark.llm.dedup import embedding_near_duplicates
-
-    e = _emb_df(spark, n=60, dim=16)
     # add exact near-clones so the verify stage has real work
     clones = e.filter("vec_id % 10 = 0").select(
         (F.col("vec_id") + 1000).alias("vec_id"),
         F.transform("embedding",
                     lambda x: x * F.lit(1.0001).cast("float"))
         .alias("embedding"))
-    u = e.unionByName(clones)
-    a = embedding_near_duplicates(
-        u, threshold=0.98, dim=16, n_planes=6, n_tables=3,
-        arrow=True).collect()
-    b = embedding_near_duplicates(
-        u, threshold=0.98, dim=16, n_planes=6, n_tables=3,
-        arrow=False).collect()
-    am = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in a}
-    bm = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in b}
-    assert am == bm and len(am) > 0
+    return e.unionByName(clones)
+
+
+def test_embedding_near_duplicates_matches_reference(spark):
+    """Every pair at or above the threshold — all pairs, scored by the
+    reference — and nothing else, with bit-identical cosines."""
+    from xclim_spark.llm.dedup import embedding_near_duplicates
+
+    u = _with_clones(spark, _emb_df(spark, n=60, dim=16))
+    vecs = _vecs(u)
+    want = {(a, b): c for a in vecs for b in vecs if a < b
+            for c in [_ref_cos(vecs[a], vecs[b])]
+            if c is not None and c >= 0.98}
+    got = {(r["id_a"], r["id_b"]): r["cos_sim"]
+           for r in embedding_near_duplicates(
+               u, threshold=0.98, dim=16, n_planes=6,
+               n_tables=3).collect()}
+    _assert_bits(got, want)
+
+
+def test_embedding_near_duplicates_null_vectors(spark):
+    """NULL vectors never form a verified pair and never crash the
+    bucketing; ``dim=None`` sizes the planes from the first non-NULL
+    vector, and an all-NULL or empty frame gives an empty result."""
+    from xclim_spark.llm.dedup import embedding_near_duplicates
+
+    u = _with_clones(spark, _emb_df(spark, n=30, dim=8, nulls=(0, 7)))
+    kw = dict(threshold=0.98, n_planes=4, n_tables=3)
+    want = {(r["id_a"], r["id_b"], r["cos_sim"])
+            for r in embedding_near_duplicates(
+                u.filter("embedding IS NOT NULL"), dim=8, **kw).collect()}
+    assert want  # the clones of 10 and 20 survive
+    for d in (8, None):  # None: the first row (id 0) is NULL
+        got = {(r["id_a"], r["id_b"], r["cos_sim"])
+               for r in embedding_near_duplicates(u, dim=d, **kw)
+               .collect()}
+        assert got == want
+    for empty in (u.filter("embedding IS NULL"), u.limit(0)):
+        out = embedding_near_duplicates(empty, **kw)
+        assert out.columns == ["id_a", "id_b", "cos_sim"]
+        assert out.collect() == []
 
 
 def test_knn_bruteforce_batch_partial_topk_edges(spark):
@@ -135,25 +343,20 @@ def test_knn_bruteforce_batch_partial_topk_edges(spark):
     same global top-k the window computes, across many partitions and
     at the edges: ties at the k boundary (broken by neighbor id ASC),
     a query with fewer than k non-self neighbors, and a zero-norm
-    (NaN-cosine) corpus vector, which Spark's DESC window orders FIRST
-    (NaN is greatest) and the kernel must too."""
-    from pyspark.sql import functions as F
-
+    (NaN-cosine) corpus vector, whose kernel NaN crosses the Arrow
+    boundary as SQL NULL and so sorts LAST under the window's
+    ``DESC NULLS LAST`` — the kernel's partial top-k must agree."""
     from xclim_spark.llm.similarity import knn_bruteforce
 
     # 6 identical vectors -> every pairwise cosine ties at 1.0 exactly;
-    # one zero vector -> NaN cosine against everything.  (The Column
-    # twin cannot serve as reference here: under Spark 4 ANSI mode its
-    # 0/0 raises DIVIDE_BY_ZERO, while both Arrow kernels — the pair
-    # kernel this path replaced and the batch scorer — yield NaN, so
-    # the default path's degenerate-input behavior is unchanged.)
+    # one zero vector -> NaN cosine against everything
     rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(6)]
     rows.append((6, [0.0, 0.0, 0.0, 0.0]))
     df = spark.createDataFrame(
         rows, "vec_id LONG, embedding ARRAY<FLOAT>").repartition(5)
     q = df.filter("vec_id IN (0, 6)")
 
-    got = knn_bruteforce(df, q, k=3, arrow=True).collect()
+    got = knn_bruteforce(df, q, k=3).collect()
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     assert len(got) == 6
     # a kernel NaN crosses the Arrow boundary as SQL NULL, and the
@@ -173,8 +376,7 @@ def test_knn_bruteforce_batch_partial_topk_edges(spark):
         [(0, [1.0, 0.0]), (7, [0.0, 0.0]), (8, [0.9, 0.1]),
          (9, [0.8, 0.2])],
         "vec_id LONG, embedding ARRAY<FLOAT>").coalesce(1)
-    out1 = knn_bruteforce(one, one.filter("vec_id = 0"), k=2,
-                          arrow=True).collect()
+    out1 = knn_bruteforce(one, one.filter("vec_id = 0"), k=2).collect()
     assert [r["neighbor_id"] for r in
             sorted(out1, key=key)] == [8, 9]
 
@@ -182,8 +384,7 @@ def test_knn_bruteforce_batch_partial_topk_edges(spark):
     small = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.5, 0.5])],
         "vec_id LONG, embedding ARRAY<FLOAT>").repartition(3)
-    out = knn_bruteforce(small, small.filter("vec_id = 0"), k=5,
-                         arrow=True).collect()
+    out = knn_bruteforce(small, small.filter("vec_id = 0"), k=5).collect()
     assert [(r["neighbor_id"], r["rank"]) for r in out] == [(1, 1)]
 
     # partial-vs-global composition: 40 docs over 7 partitions must
@@ -228,7 +429,7 @@ def test_knn_bruteforce_batch_null_embeddings(spark):
     """NULL embeddings must not crash the batch kernel: a NULL corpus
     vector scores NULL cos_sim (ordered after every real cosine), and
     a NULL query vector ranks its candidates by neighbor id with NULL
-    scores — the Column path's NULL-cosine ordering."""
+    scores — the same ordering as the pair-join path."""
     from xclim_spark.llm.similarity import knn_bruteforce
 
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, None),
@@ -249,3 +450,23 @@ def test_knn_bruteforce_batch_null_embeddings(spark):
     gq = [(r["neighbor_id"], r["cos_sim"] is None)
           for r in sorted(outq, key=key)]
     assert gq == [(0, True), (1, True), (3, True)]
+
+
+def test_semantic_dedup_null_vectors(spark):
+    """semantic_dedup shares the centroid scorer: a NULL vector joins
+    the lowest-id cluster, is always kept, and changes nothing for the
+    other rows."""
+    from xclim_spark.llm.dedup import semantic_dedup
+
+    u = _with_clones(spark, _emb_df(spark, n=30, dim=8, nulls=(0, 7)))
+    cents = u.filter("vec_id IN (1, 2, 4)")
+    got = {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
+           for r in semantic_dedup(u, cents, threshold=0.98).collect()}
+    want = {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
+            for r in semantic_dedup(u.filter("embedding IS NOT NULL"),
+                                    cents, threshold=0.98).collect()}
+    nulls = {i for i, v in _vecs(u).items() if v is None}
+    assert nulls == {0, 7, 1000}  # 1000 is the clone of NULL vector 0
+    assert all(got[i] == (1, True, None) for i in nulls)
+    assert {i: v for i, v in got.items() if i not in nulls} == want
+    assert any(not keep for _, keep, _ in want.values())

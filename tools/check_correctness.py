@@ -12,7 +12,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# check THIS checkout (a worktree or copy included), not whichever one
+# sits on a hard-coded path; the driver JVM, and through it the Python
+# workers, inherit the PYTHONPATH
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+              if p])
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "

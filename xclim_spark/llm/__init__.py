@@ -19,7 +19,7 @@ The components a 100 TB corpus pipeline needs, built Spark-first:
 * :mod:`.quality_clf` — trained quality classifier (DCLM/fastText
   shape): hashed-n-gram logistic regression trained as map-side
   passes + one groupBy(feature) shuffle per epoch, scored map-side
-  from a plan-literal weight vector;
+  by an Arrow UDF whose closure carries the weight vector;
 * :mod:`.urls` — URL canonicalization, registered-domain extraction,
   canonical-URL dedup and domain-mix counts;
 * :mod:`.search` — BM25 ranked retrieval over the corpus;

@@ -39,7 +39,6 @@ __all__ = [
     "semantic_dedup",
     "duplicate_spans",
     "near_dup_components",
-    "near_dup_components_exact_first",
     "remove_duplicate_spans",
     "c4_span_dedup",
     "dedup_paragraphs",
@@ -624,7 +623,6 @@ def embedding_near_duplicates(
     n_tables: int = 8,
     seed: int = 42,
     dim: int | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: random-hyperplane LSH
     candidates, exact-cosine verified.
@@ -636,24 +634,32 @@ def embedding_near_duplicates(
     ``(1-(1-theta/pi)^n_planes)^n_tables`` — ~1e-6 at the defaults.  The
     shuffle carries (table, bucket, id, vec); no all-pairs join.
 
-    Returns ``id_a, id_b, cos_sim``.
+    Returns ``id_a, id_b, cos_sim``.  ``dim`` defaults to the length
+    of the first non-NULL vector; with none (an empty or all-NULL
+    frame) the result is empty.
 
     Buckets come from one Arrow-batched pandas UDF (a single numpy
-    matmul against the (tables x planes x dim) tensor) rather than the
-    expression fold :func:`..similarity.knn_lsh` uses: higher-order
-    array expressions are interpreted per element, and at tables x
-    planes = 32 signature bits they dominate wall-clock (15 s -> ~2 s at
-    sf0.1).  The fold stays in knn_lsh because there the correctness
-    oracle re-derives bucket ids with the same sequential-sum expression
-    — here only RECALL depends on bucketing (pairs are verified by exact
-    cosine), so summation order is free.
+    tensordot against the (tables x planes x dim) tensor).  Unlike
+    :func:`..similarity.knn_lsh`, whose bucket ids the correctness
+    oracle re-derives (so its signature dots use the order-preserving
+    fold), only RECALL depends on bucketing here — every pair is
+    verified by exact cosine — so summation order is free.  The verify
+    cosine is :func:`..similarity.pair_cosine_arrow`, so the
+    ``>= threshold`` decision and the rounded output are reproducible.
+    A NULL vector falls in bucket 0 of every table and scores NULL, so
+    it never forms a verified pair.
     """
     from pyspark.sql.functions import pandas_udf
 
-    from .similarity import _planes, pair_cosine_arrow
+    from .similarity import _f64_rows, _planes, pair_cosine_arrow
 
     if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
+        first = emb.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+        if first is None:
+            return emb.select(
+                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+                F.lit(None).cast("double").alias("cos_sim")).limit(0)
+        dim = len(first[0])
     planes_np = np.stack([
         np.asarray(_planes(dim, n_planes, seed + t))
         for t in range(n_tables)
@@ -661,7 +667,7 @@ def embedding_near_duplicates(
 
     @pandas_udf("array<int>")
     def _buckets(vs: pd.Series) -> pd.Series:
-        X = np.stack(vs.to_numpy())  # (n, dim)
+        X = _f64_rows(vs, dim)  # (n, dim); a NULL vector is a NaN row
         dots = np.tensordot(X, planes_np, axes=([1], [2]))  # (n, T, P)
         vals = ((dots >= 0).astype(np.int64)
                 << np.arange(n_planes)).sum(axis=2)  # (n, T)
@@ -681,18 +687,8 @@ def embedding_near_duplicates(
         .select("id_a", "id_b", "_va", "_vb")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact-cosine verify through the order-preserving Arrow kernel
-    # (default) — bit-identical to the Column fold
-    # (similarity.pair_cosine_arrow), so the >= threshold decision and
-    # the rounded output cannot move, while the per-pair cost drops
-    # from ~3 x dim interpreted dispatches to one vectorized batch op;
-    # arrow=False keeps the Column twin as the A/B control
-    from .similarity import cosine_similarity
-
-    verify_cos = (pair_cosine_arrow if arrow
-                  else cosine_similarity)("_va", "_vb")
     return (
-        cand.withColumn("cos_sim", verify_cos)
+        cand.withColumn("cos_sim", pair_cosine_arrow("_va", "_vb"))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -1161,11 +1157,12 @@ def semantic_dedup(
     (and the size-check job).
 
     Returns ``(id, cluster, keep, dup_of)`` — ``dup_of`` null where
-    ``keep``.
+    ``keep``.  A NULL vector joins the lowest-id cluster and is always
+    kept (it is nobody's duplicate).
     """
     from pyspark.sql.functions import pandas_udf
 
-    from .similarity import _centroid_scorer, kmeans_fit
+    from .similarity import _centroid_scorer, _f64_rows, kmeans_fit
 
     if on_oversize not in ("raise", "split"):
         raise ValueError(
@@ -1197,7 +1194,9 @@ def semantic_dedup(
         ids = pdf["id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        X = np.stack(pdf["_v"].to_numpy())[order].astype(np.float64)
+        # a NULL vector is a NaN row: no cosine reaches the threshold,
+        # so it is kept and never a duplicate of anything
+        X = _f64_rows(pdf["_v"])[order]
         Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
         m = len(ids)
         # best[j] = smallest row index i < j with cos(i, j) >= threshold
@@ -1305,18 +1304,6 @@ def near_dup_components(
         parallelism=parallelism)
     edges = pairs.select("id_a", "id_b").unionByName(star)
     return close(edges)
-
-
-def near_dup_components_exact_first(docs: DataFrame, **kwargs) -> DataFrame:
-    """Back-compat alias for :func:`near_dup_components` (the exact-
-    dedup-first composition is now the default entry point)."""
-    if "naive" in kwargs:
-        raise TypeError(
-            "near_dup_components_exact_first() is the exact-first "
-            "composition by definition and does not accept 'naive'; "
-            "call near_dup_components(naive=True) for the pair-graph "
-            "closure path")
-    return near_dup_components(docs, naive=False, **kwargs)
 
 
 def connected_components(

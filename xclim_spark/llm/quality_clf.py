@@ -29,8 +29,7 @@ Scale design:
   back as ONE typed array literal (``F.lit`` of a float64 ndarray):
   a list literal builds one Column per weight and a ``CreateArray``
   with ``dim + 1`` children, analyzed again every epoch (~4.5x the
-  driver CPU of the ndarray literal at ``dim`` 512).  The Column
-  scorer (``arrow=False``) bakes its weights in the same way.
+  driver CPU of the ndarray literal at ``dim`` 512).
 * **The intercept is a hashed feature** (index ``dim``, x = 1.0), so
   the bias gradient rides the same single shuffle instead of needing a
   second aggregation pass per epoch.
@@ -38,11 +37,10 @@ Scale design:
   scoring UDF's closure; each document's score is a vectorized Arrow
   batch fold (factorize grams -> md5 per DISTINCT gram -> one numpy
   gather -> one bincount) — zero shuffles, zero joins, zero state,
-  exactly how a fastText filter runs over 100 TB.  A pure-Column twin
-  (``arrow=False``) exists as the A/B control; its per-gram
-  ``aggregate``/``transform`` fold is Catalyst-interpreted and
-  measured ~11x slower at sf1 (1.84 s vs 21.0 s scoring-only,
-  interleaved, identical score sums).
+  exactly how a fastText filter runs over 100 TB.  (The per-gram
+  ``aggregate``/``transform`` Column fold this replaced is
+  Catalyst-interpreted and measured ~11x slower at sf1: 1.84 s vs
+  21.0 s scoring-only, interleaved, identical score sums.)
 
 Determinism contract (mirrored by the DuckDB oracle in queries.py):
 tokens are ``[a-z]+`` runs of the lowercased text; bigrams join
@@ -296,59 +294,40 @@ def quality_clf_score(
     id_col: str = "doc_id",
     bigrams: bool = True,
     alias: str = "quality_score",
-    arrow: bool = True,
 ) -> DataFrame:
     """Score every document with a trained weight vector — map-side
-    only (the weight vector rides the UDF closure / plan literal; the
-    score folds over the document's own grams), the deployment shape
-    for filtering 100 TB behind one narrow scan: zero shuffles, zero
-    joins, zero state.
+    only (the weight vector rides the scoring UDF's closure; the score
+    folds over the document's own grams), the deployment shape for
+    filtering 100 TB behind one narrow scan: zero shuffles, zero joins,
+    zero state.
 
     Returns ``(id_col, alias)`` with ``alias`` = sigmoid(w . x + b).
     Documents with zero grams (or NULL text) score ``sigmoid(b)``
     (features all zero).
 
-    ``arrow=True`` (default) scores through a vectorized Arrow
-    ``pandas_udf``: per batch, all grams are ``pd.factorize``'d so the
-    md5 feature hash is paid once per DISTINCT gram (backed by an
-    executor-lifetime memo — Zipf makes this a dict hit after
-    warm-up), weights gather with one numpy indexing op, and the
-    per-doc fold is a single ``np.bincount``.  ``arrow=False`` keeps
-    the pure-Column twin, which evaluates the per-gram fold through
-    Catalyst higher-order functions — INTERPRETED per element, not
-    whole-stage-codegen (the measured defect class of commit 3451427
-    and the r11 pair-cosine rewrite), so it is the slow path at scale;
-    it remains for plan-literal environments where Python workers are
-    unavailable and as the A/B control.
+    Scoring is a vectorized Arrow ``pandas_udf``: per batch, all grams
+    are ``pd.factorize``'d so the md5 feature hash is paid once per
+    DISTINCT gram (backed by an executor-lifetime memo — Zipf makes
+    this a dict hit after warm-up), weights gather with one numpy
+    indexing op, and the per-doc fold is a single ``np.bincount``
+    (sequential, left to right over the document's grams).
 
     Parity caveat (same class as tokenizer.bpe_encode_words): the
-    Arrow path lowercases with Python ``str.lower`` and tokenizes with
-    Python ``re`` where the Column path uses JVM ``lower`` /
+    scorer lowercases with Python ``str.lower`` and tokenizes with
+    Python ``re`` where training (:func:`_gram_array` +
+    :func:`hashed_gram_indices`) uses JVM ``lower`` /
     ``regexp_extract_all`` — both implement Unicode default case
     mapping and a literal ASCII ``[a-z]`` class, and
-    tests/test_quality_clf.py asserts score parity between the two
-    paths on mixed-case/Unicode fixtures."""
+    tests/test_quality_clf.py asserts the scores equal a fold over the
+    JVM feature indices on mixed-case/Unicode fixtures."""
+    from pyspark.sql.functions import pandas_udf
+
     dim = len(weights) - 1
     w_arr = np.asarray(weights, dtype=np.float64)
-    if arrow:
-        from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("double")
-        def _score(texts):
-            import pandas as pd
-            return pd.Series(
-                _score_texts(texts, w_arr, dim, bigrams))
+    @pandas_udf("double")
+    def _score(texts):
+        import pandas as pd
+        return pd.Series(_score_texts(texts, w_arr, dim, bigrams))
 
-        return docs.select(
-            F.col(id_col), _score(F.col(text_col)).alias(alias))
-    wlit = F.lit(w_arr)
-    grams = _gram_array(text_col, bigrams=bigrams)
-    gi = hashed_gram_indices(grams, dim)
-    acc = F.aggregate(
-        F.transform(gi, lambda i: F.element_at(wlit, i + 1)),
-        F.lit(0.0), lambda a, v: a + v)
-    ng = F.size(gi)
-    margin = (F.when(ng > 0, acc / ng).otherwise(F.lit(0.0))
-              + F.element_at(wlit, dim + 1))
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-    return docs.select(F.col(id_col), score.alias(alias))
+    return docs.select(F.col(id_col), _score(F.col(text_col)).alias(alias))

@@ -1,18 +1,28 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers:
+Tiers:
 
-* :func:`knn_bruteforce` — exact cosine top-k: broadcast the (small) query
-  set against the corpus, one pass, no shuffle of the corpus side.  Cost
-  is O(|corpus| x |queries|) — the right baseline, and the right plan when
+* :func:`knn_bruteforce` — exact cosine top-k: the (small) query set
+  rides the scoring task's closure and every corpus vector crosses the
+  Python boundary once, so the corpus never shuffles.  Cost is
+  O(|corpus| x |queries|) — the right baseline, and the right plan when
   queries are few.
 * :func:`knn_lsh` — random-hyperplane LSH: signatures computed map-side,
   candidates restricted to matching buckets, exact cosine only within
   buckets.  At 100 TB the shuffle carries (bucket, vec_id, embedding) for
   bucketed candidates only — never the full cross product.
+* :func:`knn_ivf` / :func:`knn_ivfpq` — inverted-file and product-
+  quantized indexes over a k-means codebook (:func:`kmeans_fit`,
+  :func:`pq_fit`).
 
-All vector math is pure Column expressions (``zip_with`` products in
-double + ``aggregate`` fold) — JVM-side, no Python UDFs.
+All vector math runs in vectorized Arrow batch kernels (``pandas_udf`` /
+``mapInPandas``).  Every dot product whose result a SQL oracle restates
+— cosines, LSH sign bits, projections — uses ONE evaluation order,
+:func:`_seq_dot64`'s ``acc = ((0.0 + x_0*y_0) + x_1*y_1) + ...`` in
+float64, so the outputs are bit-reproducible across engines.  A NULL
+vector enters every kernel as a NaN row (:func:`_f64_rows`): its
+cosines come out SQL NULL (ranked after every real cosine), its LSH
+bits are 0, and its projection is all NULL.
 """
 
 from __future__ import annotations
@@ -24,58 +34,69 @@ from pyspark.sql import functions as F
 
 from ..util import local_frame
 
-__all__ = ["dot", "l2_norm", "cosine_similarity", "pair_cosine_arrow",
-           "knn_bruteforce", "knn_lsh", "knn_ivf", "lsh_bucket",
+__all__ = ["pair_cosine_arrow", "knn_bruteforce", "knn_lsh", "knn_ivf",
            "kmeans_fit", "pq_fit", "pq_encode", "knn_ivfpq",
            "random_projection"]
 
 
-def dot(a, b) -> Column:
-    """Double-precision dot product of two float-array Columns (products
-    cast to double before the fold so both engines agree bit-for-bit)."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a, b) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def _f64_rows(vs) -> "np.ndarray":
+def _f64_rows(vs, dim: int | None = None,
+              what: str = "embeddings") -> "np.ndarray":
     """Stack a pandas Series of float vectors into an (n, d) float64
-    matrix (float32 -> float64 widening is exact)."""
-    return np.stack(vs.to_numpy()).astype(np.float64, copy=False)
+    matrix (float32 -> float64 widening is exact).
+
+    NULL-safe: a NULL vector becomes a NaN row, so every fold over it is
+    NaN — a NaN cosine crosses the Arrow boundary as SQL NULL, and
+    ``NaN >= 0`` is false (LSH bit 0).  ``d`` is ``dim`` when given (the
+    width a kernel folds against), else the first non-NULL vector's
+    length (0 when every vector is NULL).  Ragged vectors, or vectors
+    whose length is not ``dim``, raise naming ``what``."""
+    notna = vs.notna().to_numpy()
+    X = np.zeros((0, dim or 0))
+    if notna.any():
+        try:
+            X = np.stack(vs[notna].to_numpy()).astype(np.float64, copy=False)
+        except ValueError as exc:
+            raise ValueError(f"ragged {what}: {exc}") from exc
+        if dim is not None and X.shape[1] != dim:
+            raise ValueError(
+                f"embedding dimension mismatch: {what} have "
+                f"{X.shape[1]} dims, expected {dim}")
+    if notna.all():
+        return X
+    M = np.full((len(vs), X.shape[1]), np.nan)
+    M[notna] = X
+    return M
 
 
 def _seq_dot64(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-    """Row-wise dot product with the SAME float evaluation order as the
-    :func:`dot` Column fold: ``acc = ((0.0 + p_0) + p_1) + ...`` in
-    float64, left to right over the array index.  Vectorized ACROSS
-    rows, sequential across dimensions, so every row's result is
-    bit-identical to Catalyst's interpreted ``aggregate`` fold (numpy's
-    own ``sum``/``@`` use pairwise/BLAS reassociation and would drift
-    in the last ulp — enough to flip an LSH sign on an adversarial
-    vector or a rounded 6th decimal at a boundary)."""
+    """Row-wise dot product in ONE fixed float evaluation order:
+    ``acc = ((0.0 + a_0*b_0) + a_1*b_1) + ...`` in float64, left to
+    right over the array index — the order the SQL oracles restate.
+    Vectorized ACROSS rows, sequential across dimensions (numpy's own
+    ``sum``/``@`` use pairwise/BLAS reassociation and would drift in
+    the last ulp — enough to flip an LSH sign on an adversarial vector
+    or a rounded 6th decimal at a boundary)."""
     acc = np.zeros(len(A))
     for j in range(A.shape[1]):
         acc += A[:, j] * B[:, j]
     return acc
 
 
+def _seq_dot64_rows(X: "np.ndarray", P: "np.ndarray") -> "np.ndarray":
+    """(rows x len(P)) matrix of :func:`_seq_dot64` folds of every row
+    of ``X`` against every row of ``P`` (hyperplanes / projection
+    rows), bit-identical to folding each pair on its own."""
+    out = np.empty((len(X), len(P)))
+    for i, p in enumerate(P):
+        out[:, i] = _seq_dot64(X, np.broadcast_to(p, X.shape))
+    return out
+
+
 def pair_cosine_arrow(a, b) -> Column:
-    """Arrow twin of :func:`cosine_similarity` — one vectorized batch
-    kernel instead of three interpreted per-element folds per row,
-    bit-identical output (see :func:`_seq_dot64`; the final
-    ``dot / (sqrt(na) * sqrt(nb))`` is the same scalar expression
-    tree).  Higher-order Column functions are evaluated INTERPRETED
-    per element (the measured defect class of the r11 pair-cosine and
-    r16 classifier-scoring rewrites), which at ``dim`` = 64 puts ~400
-    interpreter dispatches on every candidate pair; this kernel pays
-    one Arrow transfer of the two vectors instead.
+    """Cosine of two vector Columns, row by row — one vectorized batch
+    kernel: :func:`_seq_dot64` folds and the scalar tree
+    ``dot / (sqrt(na) * sqrt(nb))``.  A NULL or zero-norm vector on
+    either side scores NULL (see :func:`_f64_rows`).
 
     The UDF is marked non-deterministic (it is not — the kernel is
     bit-reproducible) PURELY to stop the optimizer duplicating it:
@@ -89,9 +110,8 @@ def pair_cosine_arrow(a, b) -> Column:
 
     @pandas_udf("double")
     def _cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        if not len(av):
-            return pd.Series([], dtype="float64")
-        A, B = _f64_rows(av), _f64_rows(bv)
+        A = _f64_rows(av)
+        B = _f64_rows(bv, A.shape[1] or None)
         return pd.Series(
             _seq_dot64(A, B)
             / (np.sqrt(_seq_dot64(A, A)) * np.sqrt(_seq_dot64(B, B))))
@@ -109,32 +129,22 @@ def knn_bruteforce(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
-    arrow: bool = True,
     broadcast_max_queries: int = 8192,
 ) -> DataFrame:
     """Exact cosine top-k for each query vector.
 
-    ``queries`` is a (small) subset with the same schema.  Plan: broadcast
-    queries -> map-side cross join -> per-partition partial evaluation ->
-    one shuffle keyed by query for the rank.  Returns
+    ``queries`` is a (small) subset with the same schema.  Returns
     ``query_id, neighbor_id, cos_sim, rank`` (self-matches excluded,
     ties broken by neighbor id).
 
-    ``arrow=True`` (default) scores with vectorized order-preserving
-    batch kernels (bit-identical to the Column fold, so ranks and
-    rounded values cannot move); ``arrow=False`` keeps the pure-Column
-    twin as the A/B control and for Python-worker-free environments.
-
-    With ``broadcast_queries=True`` (the contract's "queries are
-    small" case) the arrow path does not materialize pairs at all: the
-    query block is a driver-collected closure literal (NOTE: the query
-    set is collected EAGERLY, at call time, not at action time), each
-    corpus vector crosses the Python boundary ONCE (not once per
-    query), the kernel scores it against every query with the same
-    ascending-index float64 accumulation as :func:`_seq_dot64`
-    (bit-identical cosines), and each task emits only its per-query
-    top-k candidates — the final rank shuffles
+    The query set is the contract's "small" side, so no pairs are
+    materialized at all: the query block is a driver-collected closure
+    literal (NOTE: the query set is collected EAGERLY, at call time,
+    not at action time), each corpus vector crosses the Python boundary
+    ONCE (not once per query), the kernel scores it against every query
+    with the same ascending-index float64 accumulation as
+    :func:`_seq_dot64` (bit-identical cosines), and each task emits
+    only its per-query top-k candidates — the final rank shuffles
     ``n_tasks x n_queries x k`` candidate rows instead of
     ``|corpus| x |queries|`` pairs carrying two vectors each.  Partial
     top-k per task then global top-k is exact because the ordering
@@ -142,53 +152,28 @@ def knn_bruteforce(
 
     The collect is SIZE-GATED (same pattern as
     ``lm_broadcast_model``): at most ``broadcast_max_queries`` query
-    rows are pulled to the driver; one row more and the call degrades
-    to the pair-join path instead of risking driver/worker memory (the
-    scoring kernel holds an (arrow-batch-rows x n_queries) float64
-    block per task, so 8192 queries x 10k-row batches is ~650 MB —
-    the ceiling of comfortable).  ``broadcast_queries=False`` skips
-    the collect entirely and keeps the pair-at-a-time join for query
-    sets known to be large.
+    rows are pulled to the driver; one row more and the call scores
+    pair by pair after a cross join instead of risking driver/worker
+    memory (the scoring kernel holds an (arrow-batch-rows x n_queries)
+    float64 block per task, so 8192 queries x 10k-row batches is
+    ~650 MB — the ceiling of comfortable).
 
     A NULL embedding on either side scores NULL ``cos_sim`` (ordered
     after every real cosine, ties by neighbor id) on both paths; a
-    ragged embedding (dimension mismatch) raises with a clear message
-    on the batch path.
+    ragged embedding (dimension mismatch) raises with a clear message.
     """
-    if arrow and broadcast_queries:
-        batch = _knn_bruteforce_batch(
-            emb, queries, k, id_col=id_col, vec_col=vec_col,
-            max_queries=broadcast_max_queries)
-        if batch is not None:
-            return batch
-        broadcast_queries = False  # over the gate: degrade to the join
-    if arrow:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
-        j = (emb.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).alias("_nvec"))
-             .crossJoin(q)
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .withColumn("cos_sim",
-                         pair_cosine_arrow("_qvec", "_nvec")))
-    else:
-        # norms are computed ONCE per side before the join — per pair
-        # only the dot product remains (3x less per-pair expression work)
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"),
-            l2_norm(F.col(vec_col)).alias("_qnorm"),
-        )
-        if broadcast_queries:
-            q = F.broadcast(q)
-        j = emb.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_nvec"),
-            l2_norm(F.col(vec_col)).alias("_nnorm"),
-        ).crossJoin(q).filter(F.col("neighbor_id") != F.col("query_id"))
-        j = j.withColumn(
-            "cos_sim",
-            dot("_qvec", "_nvec") / (F.col("_qnorm") * F.col("_nnorm")),
-        )
+    batch = _knn_bruteforce_batch(
+        emb, queries, k, id_col=id_col, vec_col=vec_col,
+        max_queries=broadcast_max_queries)
+    if batch is not None:
+        return batch
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+    j = (emb.select(F.col(id_col).alias("neighbor_id"),
+                    F.col(vec_col).alias("_nvec"))
+         .crossJoin(q)
+         .filter(F.col("neighbor_id") != F.col("query_id"))
+         .withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -224,8 +209,8 @@ def _knn_bruteforce_batch(
     identically), so the window's ``DESC NULLS LAST`` puts such pairs
     AFTER every real cosine — the selection keys NaN as ``-inf``
     (ties by neighbor id) to match.  A NULL embedding is a NaN row in
-    the kernel, which lands in the same NULLS-LAST regime the Column
-    path gave it."""
+    the kernel (:func:`_f64_rows`), which lands in the same NULLS-LAST
+    regime."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     # size-gated collect: pull at most max_queries + 1 rows; one row
@@ -247,50 +232,13 @@ def _knn_bruteforce_batch(
         return (empty.withColumn("rank", F.row_number().over(w))
                 .select("query_id", "neighbor_id", "cos_sim", "rank"))
     qids = [r[0] for r in qrows]
-    qvecs = [r[1] for r in qrows]
-    qdims = {len(v) for v in qvecs if v is not None}
-    if len(qdims) > 1:
-        raise ValueError(
-            f"ragged query embeddings: lengths {sorted(qdims)} in "
-            f"column {vec_col!r}; all vectors must share one dimension")
-    dim = qdims.pop() if qdims else 0
     # a NULL query embedding becomes a NaN row: every candidate scores
-    # NaN -> SQL NULL, ranked by neighbor id — the Column path's
-    # NULL-cosine ordering
-    Qm = np.full((len(qvecs), dim), np.nan)
-    for i, v in enumerate(qvecs):
-        if v is not None:
-            Qm[i] = v
+    # NaN -> SQL NULL, ranked by neighbor id
+    Qm = _f64_rows(pd.Series([r[1] for r in qrows], dtype=object),
+                   what=f"query embeddings in column {vec_col!r}")
+    dim = Qm.shape[1]
     qn = np.sqrt(_seq_dot64(Qm, Qm))
-    n_q = len(qvecs)
-
-    def _f64_rows_nullable(vs):
-        if not dim:
-            # every query vector is NULL: all cosines are NaN whatever
-            # the corpus holds, so its values never need stacking
-            return np.zeros((len(vs), 0))
-        notna = vs.notna().to_numpy()
-        if notna.all():
-            try:
-                M = _f64_rows(vs)
-            except ValueError as exc:
-                raise ValueError(
-                    f"ragged corpus embeddings in column {vec_col!r}: "
-                    f"{exc}") from exc
-        else:
-            M = np.full((len(vs), dim), np.nan)
-            if notna.any():
-                try:
-                    M[notna] = _f64_rows(vs[notna])
-                except ValueError as exc:
-                    raise ValueError(
-                        f"ragged corpus embeddings in column "
-                        f"{vec_col!r}: {exc}") from exc
-        if dim and M.shape[1] != dim:
-            raise ValueError(
-                f"embedding dimension mismatch: corpus {M.shape[1]} "
-                f"vs queries {dim} in column {vec_col!r}")
-        return M
+    n_q = len(qids)
 
     def _topk(batches):
         sc: list = [[] for _ in range(n_q)]   # per-query candidate scores
@@ -299,7 +247,10 @@ def _knn_bruteforce_batch(
         for pdf in batches:
             if not len(pdf):
                 continue
-            N = _f64_rows_nullable(pdf[vec_col])
+            # dim 0: every query vector is NULL, so every cosine is NaN
+            # whatever width the corpus has
+            N = _f64_rows(pdf[vec_col], dim or None,
+                          what=f"corpus embeddings in column {vec_col!r}")
             ids = pdf[id_col].to_numpy()
             nn = np.zeros(len(N))
             S = np.zeros((len(N), n_q))
@@ -347,33 +298,6 @@ def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(vec, dim: int, n_planes: int = 16, seed: int = 42) -> Column:
-    """Random-hyperplane signature -> integer bucket id.
-
-    ``sign(v . h_i)`` bits packed into an int: vectors with small angular
-    distance collide with probability ``(1 - theta/pi)^n_planes``.  The
-    hyperplanes are deterministic literals (driver-seeded) so buckets are
-    reproducible across runs and engines.
-
-    The whole plane matrix is ONE nested-array literal and the signature
-    one ``transform``+``aggregate`` pair — a handful of py4j calls
-    instead of ``n_planes x dim`` scalar literals, which dominated
-    wall-clock at plan-build time.
-    """
-    v = F.col(vec) if isinstance(vec, str) else vec
-    planes = F.lit([[float(x) for x in p]
-                    for p in _planes(dim, n_planes, seed)])
-    idx = F.lit(list(range(n_planes)))
-    bits = F.transform(
-        idx,
-        lambda i: F.when(
-            dot(v, F.element_at(planes, i + 1)) >= 0.0,
-            F.pow(F.lit(2.0), i).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    return F.aggregate(bits, F.lit(0), lambda a, b: a + b)
-
-
 def knn_lsh(
     emb: DataFrame,
     queries: DataFrame,
@@ -385,7 +309,6 @@ def knn_lsh(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates limited to vectors sharing an
     LSH bucket with the query in at least one of ``n_tables`` hash tables
@@ -397,81 +320,36 @@ def knn_lsh(
     Recall is tunable via n_planes (bucket granularity) x n_tables
     (probes).
 
-    ``arrow=True`` (default) computes both the signature bits and the
-    candidate cosines with the vectorized order-preserving batch
-    kernels (:func:`_seq_dot64`): every sign decision and every cosine
-    is bit-identical to the Column fold the oracle re-derives, so
-    bucket membership and ranks cannot move.  ``arrow=False`` keeps the
-    pure-Column twin (interpreted per-element folds — ``n_tables x
-    n_planes x dim`` interpreter dispatches per ROW) as the A/B
-    control.
+    Bucket ids are ``sign(v . h_i)`` bits packed into an int (bit ``i``
+    set when the dot is ``>= 0``): vectors with small angular distance
+    collide with probability ``(1 - theta/pi)^n_planes``.  The
+    hyperplanes are deterministic driver-seeded values, and both the
+    signature dots and the candidate cosines use the order-preserving
+    :func:`_seq_dot64` fold, so a SQL oracle re-derives every sign
+    decision and every cosine bit for bit.  A NULL vector lands in
+    bucket 0 of every table and scores NULL against its candidates.
     """
-    planes_list = [
-        [[float(x) for x in p] for p in _planes(dim, n_planes, seed + t)]
-        for t in range(n_tables)
-    ]
+    from pyspark.sql.functions import pandas_udf
 
-    if arrow:
-        from pyspark.sql.functions import pandas_udf
+    P = np.asarray([_planes(dim, n_planes, seed + t)
+                    for t in range(n_tables)])  # (tables, planes, dim)
+    weights = np.int32(1) << np.arange(n_planes, dtype=np.int32)
 
-        P = np.asarray(planes_list)  # (tables, planes, dim) float64
+    @pandas_udf("array<int>")
+    def _sigs(vs: pd.Series) -> pd.Series:
+        if not len(vs):
+            return pd.Series([], dtype=object)
+        X = _f64_rows(vs, dim)
+        out = np.stack([(_seq_dot64_rows(X, P[t]) >= 0.0) @ weights
+                        for t in range(n_tables)], axis=1)
+        return pd.Series(list(out.astype(np.int32)))
 
-        @pandas_udf("array<int>")
-        def _sigs(vs: pd.Series) -> pd.Series:
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            X = _f64_rows(vs)
-            out = np.zeros((len(X), n_tables), dtype=np.int32)
-            for t in range(n_tables):
-                for i in range(n_planes):
-                    # order-preserving fold: same sign as the Column
-                    # dot even within 1 ulp of zero
-                    acc = np.zeros(len(X))
-                    for j in range(X.shape[1]):
-                        acc += X[:, j] * P[t, i, j]
-                    out[:, t] |= (acc >= 0.0).astype(np.int32) << i
-            return pd.Series(list(out))
-
-        def with_buckets(df: DataFrame, idn: str) -> DataFrame:
-            return df.select(
-                F.col(id_col).alias(idn),
-                F.col(vec_col).alias(f"_{idn}_vec"),
-                F.posexplode(_sigs(F.col(vec_col)))
-                .alias("table", "bucket"),
-            )
-    else:
-        # one nested literal (tables x planes x dim) + nested transform:
-        # O(1) py4j calls for the whole multi-table signature
-        planes = F.lit(planes_list)
-        v = F.col(vec_col)
-
-        def _bucket(t):
-            tbl = F.element_at(planes, t + 1)
-            bits = F.transform(
-                F.lit(list(range(n_planes))),
-                lambda i: F.when(
-                    dot(v, F.element_at(tbl, i + 1)) >= 0.0,
-                    F.pow(F.lit(2.0), i).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            return F.aggregate(bits, F.lit(0), lambda a, b: a + b)
-
-        def with_buckets(df: DataFrame, idn: str) -> DataFrame:
-            buckets = F.transform(
-                F.lit(list(range(n_tables))),
-                lambda t: F.struct(
-                    t.alias("table"), _bucket(t).alias("bucket")
-                ),
-            )
-            return df.select(
-                F.col(id_col).alias(idn),
-                F.col(vec_col).alias(f"_{idn}_vec"),
-                F.explode(buckets).alias("_tb"),
-            ).select(
-                idn, f"_{idn}_vec",
-                F.col("_tb.table").alias("table"),
-                F.col("_tb.bucket").alias("bucket"),
-            )
+    def with_buckets(df: DataFrame, idn: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(idn),
+            F.col(vec_col).alias(f"_{idn}_vec"),
+            F.posexplode(_sigs(F.col(vec_col))).alias("table", "bucket"),
+        )
 
     e = with_buckets(emb, "neighbor_id")
     q = with_buckets(queries, "query_id")
@@ -480,8 +358,7 @@ def knn_lsh(
     # instead of two dim-sized arrays; a pair colliding in t tables costs
     # t map-side dot products (identical doubles), far cheaper at scale
     # than shuffling the vectors
-    pair_cos = (pair_cosine_arrow if arrow else cosine_similarity)(
-        "_query_id_vec", "_neighbor_id_vec")
+    pair_cos = pair_cosine_arrow("_query_id_vec", "_neighbor_id_vec")
     cand = (
         e.join(q, on=["table", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -504,8 +381,12 @@ def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
     return ``(centroid_ids, scores_fn)`` where ``scores_fn`` maps a
     pandas Series of vectors to the (rows x centroids) cosine matrix —
     one BLAS matmul per Arrow batch, carried in the task closure (zero
-    shuffle).  Shared by :func:`knn_ivf` cell assignment and
-    :func:`~xclim_spark.llm.dedup.semantic_dedup` clustering."""
+    shuffle).  Shared by :func:`knn_ivf` / :func:`knn_ivfpq` cell
+    assignment, PQ residual coding and
+    :func:`~xclim_spark.llm.dedup.semantic_dedup` clustering.  A NULL
+    vector scores NaN against every centroid (:func:`_f64_rows`), so
+    ``np.argmax`` assigns it the lowest centroid id and a stable
+    descending ``argsort`` probes cells in ascending id order."""
     cents = sorted(
         (r[0], [float(x) for x in r[1]])
         for r in centroids.select(id_col, vec_col).collect()
@@ -519,7 +400,7 @@ def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
         # numpy callers (pq_fit._prep, pq_encode) skip a
         # Series(list(X)) round-trip per Arrow batch
         X = (vs.astype(np.float64) if isinstance(vs, np.ndarray)
-             else np.stack(vs.to_numpy()).astype(np.float64))
+             else _f64_rows(vs, vecs.shape[1]))
         return (X @ vecs.T) / (
             np.linalg.norm(X, axis=1, keepdims=True) * norms)
 
@@ -535,7 +416,6 @@ def knn_ivf(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a coarse quantizer assigns
     every corpus vector to its nearest centroid cell; a query probes only
@@ -550,11 +430,11 @@ def knn_ivf(
     scores every (vector, centroid) pair (an expression fold here was
     interpreted per element and went quadratic-feeling at 400 centroids
     — 111 s for 20k vectors; the matmul is milliseconds).  Ties pick the
-    lowest centroid id on both paths, and the candidate COSINES come
-    from the order-preserving Arrow kernel (``arrow=True``, default —
-    bit-identical to the Column fold, see :func:`pair_cosine_arrow`) or
-    the pure-Column twin (``arrow=False``), so the discrete assignment
-    plus the ranked output stay reproducible by the SQL oracle.  The only
+    lowest centroid id, and the candidate COSINES come from the
+    order-preserving kernel (:func:`pair_cosine_arrow`), so the discrete
+    assignment plus the ranked output stay reproducible by the SQL
+    oracle.  A NULL vector scores NULL and ranks after every real
+    cosine (see :func:`_centroid_scorer` for its cell).  The only
     shuffles are the (cell)-keyed candidate join and the per-query rank
     — at 100 TB the corpus never moves except for the probed cells'
     rows.
@@ -598,12 +478,7 @@ def knn_ivf(
         .select("query_id", "neighbor_id", "_qvec", "_nvec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    # candidate scoring: the Arrow batch kernel is bit-identical to the
-    # Column fold (see pair_cosine_arrow), so the SQL oracle's ranked
-    # output is unchanged; the Column twin stays as the A/B control
-    cand = cand.withColumn(
-        "cos_sim", (pair_cosine_arrow if arrow else cosine_similarity)(
-            "_qvec", "_nvec"))
+    cand = cand.withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -964,10 +839,9 @@ def pq_encode(
     if cent is None:
         @pandas_udf("array<smallint>")
         def _codes(vs: pd.Series) -> pd.Series:
-            if not len(vs):  # np.stack([]) raises on an empty batch
+            if not len(vs):
                 return pd.Series([], dtype=object)
-            _, codes = _encode_np(
-                np.stack(vs.to_numpy()).astype(np.float64))
+            _, codes = _encode_np(_f64_rows(vs, m * dsub))
             return pd.Series(list(codes))
 
         return emb.select(
@@ -978,8 +852,7 @@ def pq_encode(
     def _cell_codes(vs: pd.Series) -> pd.DataFrame:
         if not len(vs):
             return pd.DataFrame({"cell": [], "codes": []})
-        cells, codes = _encode_np(
-            np.stack(vs.to_numpy()).astype(np.float64))
+        cells, codes = _encode_np(_f64_rows(vs, m * dsub))
         return pd.DataFrame({"cell": cells, "codes": list(codes)})
 
     # non-deterministic marking (the encoder is in fact reproducible)
@@ -1013,7 +886,6 @@ def knn_ivfpq(
     vec_col: str = "embedding",
     residual: bool = False,
     index: DataFrame | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF-PQ approximate top-k (Jégou et al. 2011): the coarse
     quantizer prunes to ``nprobe`` cells, PQ codes rank the survivors
@@ -1080,7 +952,7 @@ def knn_ivfpq(
         # the normalized space
         if not len(vs):
             return pd.Series([], dtype=object)
-        Q = np.stack(vs.to_numpy()).astype(np.float64)
+        Q = _f64_rows(vs, m * dsub)
         Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
         tabs = np.empty((len(Q), m * ks))
         for j in range(m):
@@ -1099,7 +971,7 @@ def knn_ivfpq(
         def _adc_table_res(vs: pd.Series, cells: pd.Series) -> pd.Series:
             if not len(vs):
                 return pd.Series([], dtype=object)
-            Q = np.stack(vs.to_numpy()).astype(np.float64)
+            Q = _f64_rows(vs, m * dsub)
             Q /= np.maximum(
                 np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
             idx = np.searchsorted(ids_sorted, cells.to_numpy())
@@ -1179,9 +1051,7 @@ def knn_ivfpq(
                         F.col(vec_col).alias("_qvec"))
     rer = (nvec.join(F.broadcast(short), on="neighbor_id")
            .join(F.broadcast(qv), on="query_id")
-           .withColumn("cos_sim",
-                       (pair_cosine_arrow if arrow
-                        else cosine_similarity)("_qvec", "_nvec")))
+           .withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
     return (rer.withColumn("rank", F.row_number().over(w))
@@ -1189,49 +1059,31 @@ def knn_ivfpq(
             .select("query_id", "neighbor_id", "cos_sim", "rank"))
 
 
-def random_projection(
-    vec, dim: int, out_dim: int, seed: int = 42, arrow: bool = True,
-) -> Column:
+def random_projection(vec, dim: int, out_dim: int, seed: int = 42) -> Column:
     """Johnson–Lindenstrauss random projection to ``out_dim`` dims —
     the standard shrink step before ANN / clustering at 100 TB
     (pairwise distances survive within 1±eps for
     out_dim = O(log n / eps^2); Achlioptas 2003 for the database-
     friendly variants).
 
-    The projection matrix is ONE driver-seeded nested literal
-    (``N(0,1)/sqrt(out_dim)``, same plane machinery as
-    :func:`lsh_bucket`) and each output coordinate a
-    ``zip_with``+``aggregate`` dot product — zero shuffle, and
+    The projection matrix is driver-seeded (``N(0,1)/sqrt(out_dim)``,
+    the same plane machinery as :func:`knn_lsh`) and each output
+    coordinate one :func:`_seq_dot64` fold, all ``out_dim`` of them in
+    one vectorized Arrow batch kernel — zero shuffle, and
     bit-reproducible across runs/engines (a SQL oracle restates the
-    identical literals and sequential fold).  ``arrow=True`` (default)
-    computes the same ``out_dim`` sequential folds in one vectorized
-    Arrow batch kernel — bit-identical per coordinate (see
-    :func:`_seq_dot64`) where the Column twin (``arrow=False``) pays
-    ``out_dim x dim`` interpreter dispatches per row."""
+    identical values and sequential fold).  A NULL vector projects to
+    ``out_dim`` NULLs."""
+    from pyspark.sql.functions import pandas_udf
+
     v = F.col(vec) if isinstance(vec, str) else vec
     scale = 1.0 / float(np.sqrt(out_dim))
-    planes_list = [[float(x) * scale for x in p]
-                   for p in _planes(dim, out_dim, seed)]
-    if arrow:
-        from pyspark.sql.functions import pandas_udf
+    P = np.asarray([[float(x) * scale for x in p]
+                    for p in _planes(dim, out_dim, seed)])  # (out_dim, dim)
 
-        P = np.asarray(planes_list)  # (out_dim, dim) float64
+    @pandas_udf("array<double>")
+    def _proj(vs: pd.Series) -> pd.Series:
+        if not len(vs):
+            return pd.Series([], dtype=object)
+        return pd.Series(list(_seq_dot64_rows(_f64_rows(vs, dim), P)))
 
-        @pandas_udf("array<double>")
-        def _proj(vs: pd.Series) -> pd.Series:
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            X = _f64_rows(vs)
-            out = np.empty((len(X), out_dim))
-            for jo in range(out_dim):
-                acc = np.zeros(len(X))
-                for j in range(X.shape[1]):
-                    acc += X[:, j] * P[jo, j]
-                out[:, jo] = acc
-            return pd.Series(list(out))
-
-        return _proj(v)
-    planes = F.lit(planes_list)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(out_dim - 1)),
-        lambda j: dot(v, F.element_at(planes, j + 1)))
+    return _proj(v)

@@ -5446,7 +5446,7 @@ def _rand_proj_sql(dim=64, out_dim=16, seed=42) -> str:
     """Oracle twin of llm/similarity.py random_projection: the seeded
     projection matrix is restated as literal floats and each output
     coordinate as the same sequential sum-of-products fold (list_sum
-    over per-element products, matching Spark's aggregate fold);
+    over per-element products, matching the kernel's _seq_dot64 fold);
     ROUND(,6)+0.0 on both sides absorbs last-ulp drift and the
     -0.0/0.0 formatting split."""
     import numpy as np
@@ -5470,8 +5470,8 @@ def _rand_proj_sql(dim=64, out_dim=16, seed=42) -> str:
 def emb_rand_projection(spark, sf_dir):
     """Johnson-Lindenstrauss random projection 64 -> 16 dims
     (llm/similarity.py random_projection) — the shrink step before
-    ANN/clustering; seeded literal matrix, pure expression dot
-    products in the scan projection, zero shuffle.  Output exploded to
+    ANN/clustering; seeded matrix, one Arrow batch kernel of
+    sequential-fold dot products in the scan projection, zero shuffle.  Output exploded to
     (vec_id, coordinate, value) scalars; ROUND+0.0 on both sides
     (-0.0 would otherwise format differently in the hash compare)."""
     from .llm.similarity import random_projection
