@@ -23,6 +23,21 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def last_sql_execution(spark):
+    """Zero-argument callable: id of the newest SQL execution Spark's
+    status store has seen (-1 if none), read after the listener bus has
+    delivered every event.  The difference of two calls counts the
+    Spark actions made in between."""
+    def last() -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        execs = spark._jsparkSession.sharedState().statusStore() \
+            .executionsList()
+        return -1 if execs.isEmpty() else execs.last().executionId()
+
+    return last
+
+
 def series(spark, values, **kw):
     from xclim_spark.testing import timeseries
 

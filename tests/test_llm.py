@@ -1824,7 +1824,18 @@ def _ref_bpe(corpus, num_merges, min_count=2):
     return merges, st
 
 
-def test_bpe_train_matches_reference(spark):
+@pytest.fixture(params=["local", "distributed"])
+def bpe_side(request, monkeypatch):
+    """Run BPE training on either side of its size gate: the
+    distributed rounds run when no word table fits the driver."""
+    from xclim_spark.llm import tokenizer
+
+    if request.param == "distributed":
+        monkeypatch.setattr(tokenizer, "_LOCAL_MAX_WORDS", 0)
+    return request.param
+
+
+def test_bpe_train_matches_reference(spark, bpe_side):
     """Spark-trained merges match the independent pure-Python BPE on a
     crafted corpus: exact merge order, pair counts, tie-breaks, early
     stop, and final per-word segmentations."""
@@ -1860,7 +1871,7 @@ def test_bpe_train_matches_reference(spark):
     assert z == {0: (0, 0), 1: (0, 0)}
 
 
-def test_bpe_early_stop_and_run_merging(spark):
+def test_bpe_early_stop_and_run_merging(spark, bpe_side):
     """min_count stops training; runs of identical symbols merge
     greedily left-to-right (the fold-never-cascades contract)."""
     from xclim_spark.llm.tokenizer import bpe_encode_words, bpe_train
@@ -1877,6 +1888,22 @@ def test_bpe_early_stop_and_run_merging(spark):
     assert enc[0] == ["aa", "aa", "aa", "</w>"]
     enc5 = bpe_encode_words("aaaaa", [("a", "a")])
     assert enc5[0] == ["aa", "aa", "a", "</w>"]
+
+
+def test_bpe_train_action_count(spark, bpe_side, last_sql_execution):
+    """Local training makes two Spark actions (the word-table
+    checkpoint and the capped collect) whatever the round count; each
+    distributed round adds its argmax collect and its checkpoint."""
+    from xclim_spark.llm.tokenizer import bpe_train
+
+    docs = spark.createDataFrame(
+        [(0, "low lower lowest newer newest wider widest " * 3)],
+        "doc_id LONG, text STRING")
+    before = last_sql_execution()
+    got = bpe_train(docs, num_merges=12, min_count=1)
+    assert len(got) == 12  # no early stop
+    want = 2 if bpe_side == "local" else 2 * 12 + 2
+    assert last_sql_execution() - before == want
 
 
 # -------------------------------------------------------------- Bloom
@@ -2166,16 +2193,7 @@ def test_lm_score_degenerate_reference_model(spark):
     assert all(v[1] is None and v[2] is None for v in out.values())
 
 
-def _last_sql_execution(spark) -> int:
-    """Id of the newest SQL execution the status store has seen (-1 if
-    none), after the listener bus has delivered every event."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    execs = spark._jsparkSession.sharedState().statusStore() \
-        .executionsList()
-    return -1 if execs.isEmpty() else execs.last().executionId()
-
-
-def test_lm_broadcast_model_gate_both_sides(spark):
+def test_lm_broadcast_model_gate_both_sides(spark, last_sql_execution):
     """The size gate costs one action (a capped count) and a model that
     fits one more (the collect); a model over the gate returns None
     after the count alone.  Both sides score like the join path."""
@@ -2192,9 +2210,9 @@ def test_lm_broadcast_model_gate_both_sides(spark):
     n_rows = uni.count() + big.count()   # 6 unigrams + 6 bigrams
 
     def actions(max_rows):
-        before = _last_sql_execution(spark)
+        before = last_sql_execution()
         bm = lm_broadcast_model(uni, big, max_rows=max_rows)
-        return bm, _last_sql_execution(spark) - before
+        return bm, last_sql_execution() - before
 
     fits, n_fit = actions(n_rows)
     assert isinstance(fits, LmBroadcastModel) and n_fit == 2

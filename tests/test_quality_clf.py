@@ -45,9 +45,9 @@ def _np_feats(text, dim=DIM):
     return xs
 
 
-def _np_train(rows, dim=DIM, epochs=EPOCHS, lr=LR):
+def _np_train(rows, dim=DIM, epochs=EPOCHS, lr=LR, n=None):
     feats = [( _np_feats(t, dim), float(y)) for _, t, y in rows]
-    n = len(feats)
+    n = n or len(feats)
     w = np.zeros(dim + 1)
     for _ in range(epochs):
         grad = np.zeros(dim + 1)
@@ -61,7 +61,16 @@ def _np_train(rows, dim=DIM, epochs=EPOCHS, lr=LR):
     return w
 
 
-def test_train_matches_numpy_reference(spark):
+@pytest.fixture(params=["local", "distributed"])
+def side(request, monkeypatch):
+    """Run training on either side of its size gate: the distributed
+    loop runs when no feature table fits the driver."""
+    if request.param == "distributed":
+        monkeypatch.setattr(qc, "_LOCAL_MAX_ROWS", 0)
+    return request.param
+
+
+def test_train_matches_numpy_reference(spark, side):
     docs = spark.createDataFrame(
         CORPUS, "doc_id LONG, text STRING, label INT")
     got = np.array(qc.quality_clf_train(
@@ -70,6 +79,47 @@ def test_train_matches_numpy_reference(spark):
     np.testing.assert_allclose(got, want, atol=2e-9)
     assert got[DIM] != 0.0                      # intercept moved
     assert np.count_nonzero(got[:DIM]) > 10     # features learned
+
+
+def test_train_action_count(spark, side, last_sql_execution):
+    """The capped collect is the only Spark action of local training,
+    whatever the epoch count; distributed training adds one per epoch
+    (the document count rides epoch 1's aggregation)."""
+    docs = spark.createDataFrame(
+        CORPUS, "doc_id LONG, text STRING, label INT")
+    before = last_sql_execution()
+    qc.quality_clf_train(docs, label_col="label", dim=DIM, epochs=EPOCHS,
+                         lr=LR)
+    want = 1 if side == "local" else EPOCHS + 1
+    assert last_sql_execution() - before == want
+
+
+def test_train_null_label_adds_no_gradient(spark, side):
+    """A document with a NULL label counts toward ``n`` but adds no
+    gradient, on both sides.  Its one gram hashes to a feature no other
+    document has, whose gradient is therefore all NULL: that weight
+    stays 0."""
+    docs = spark.createDataFrame(
+        CORPUS + [(10, "urchin", None)],
+        "doc_id LONG, text STRING, label INT")
+    assert set(_np_feats("urchin")) - set().union(
+        *(_np_feats(t) for _, t, _ in CORPUS)) == {50}
+    got = qc.quality_clf_train(docs, label_col="label", dim=DIM,
+                               epochs=EPOCHS, lr=LR)
+    n = len(CORPUS) + 1
+    np.testing.assert_allclose(got, _np_train(CORPUS, n=n), atol=2e-9)
+    assert got[50] == 0.0
+
+
+def test_train_no_trainable_documents_raises(spark, side,
+                                             last_sql_execution):
+    docs = spark.createDataFrame(
+        [(0, None, 1), (1, "", 0), (2, "123 !!", 1)],
+        "doc_id LONG, text STRING, label INT")
+    before = last_sql_execution()
+    with pytest.raises(ValueError, match="no trainable documents"):
+        qc.quality_clf_train(docs, label_col="label", dim=DIM)
+    assert last_sql_execution() - before == 1
 
 
 def test_score_matches_numpy_and_separates(spark):

@@ -200,7 +200,7 @@ def test_knn_ivf_and_bruteforce_arrow_match(spark):
 
     import pandas as pd
 
-    cids, scores = _centroid_scorer(cents, "vec_id", "embedding")
+    cids, scores, _ = _centroid_scorer(cents, "vec_id", "embedding")
     ids = list(vecs)
     sc = scores(pd.Series([vecs[i] for i in ids]))
     cell = dict(zip(ids, cids[np.argmax(sc, axis=1)]))
@@ -470,3 +470,46 @@ def test_semantic_dedup_null_vectors(spark):
     assert all(got[i] == (1, True, None) for i in nulls)
     assert {i: v for i, v in got.items() if i not in nulls} == want
     assert any(not keep for _, keep, _ in want.values())
+
+
+@pytest.mark.parametrize("init", ["first", "spread"])
+def test_kmeans_fit_skips_null_vectors(spark, init):
+    """Training ignores NULL vectors: the codebook is the one trained
+    on the frame without them (the NULL row sits among the first k
+    ids, so it would also reach the "first" init)."""
+    from xclim_spark.llm.similarity import kmeans_fit
+
+    e = _emb_df(spark, n=20, dim=8, nulls=(1, 17))
+    got = kmeans_fit(e, 3, iters=5, init=init)
+    want = kmeans_fit(e.filter("embedding IS NOT NULL"), 3, iters=5,
+                      init=init)
+    assert np.array_equal(got, want)
+
+
+def test_pq_fit_skips_null_vectors(spark):
+    from xclim_spark.llm.similarity import pq_fit
+
+    e = _emb_df(spark, n=20, dim=8, nulls=(1, 17))
+    kept = e.filter("embedding IS NOT NULL")
+    for cents in (None, kept.filter("vec_id IN (2, 5)")):
+        got = pq_fit(e, m=2, ks=4, iters=3, centroids=cents)
+        want = pq_fit(kept, m=2, ks=4, iters=3, centroids=cents)
+        assert np.array_equal(got, want)
+
+
+def test_norm_centroids_collects_once(spark, last_sql_execution):
+    """The normalized residual-PQ matrix comes from the rows the cosine
+    scorer already collected: one Spark action, and the matrix is the
+    scorer's centroids, id-sorted, at unit length."""
+    from xclim_spark.llm.similarity import _norm_centroids
+
+    cents = _emb_df(spark, n=6, dim=8).filter("vec_id IN (5, 0, 3)")
+    before = last_sql_execution()
+    ids, scores, C = _norm_centroids(cents, "vec_id", "embedding")
+    assert last_sql_execution() - before == 1
+    vecs = _vecs(cents)
+    assert ids.tolist() == [0, 3, 5]
+    raw = np.array([vecs[i] for i in (0, 3, 5)])
+    assert np.array_equal(
+        C, raw / np.linalg.norm(raw, axis=1, keepdims=True))
+    assert np.allclose(np.diag(scores(raw)), 1.0)

@@ -12,14 +12,16 @@ The components a 100 TB corpus pipeline needs, built Spark-first:
   training, JL random projection;
 * :mod:`.text` — language id, quality scoring (Gopher/C4 rules), token
   counting, fingerprinting, NFC normalization, PII scrubbing;
-* :mod:`.tokenizer` — distributed BPE training and exact Arrow-batched
-  token accounting;
+* :mod:`.tokenizer` — BPE training (one corpus pass, merge rounds on
+  the driver when the word table fits) and exact Arrow-batched token
+  accounting;
 * :mod:`.lm` — CCNet-style n-gram LM perplexity filtering (stupid
   backoff, model-as-DataFrames scoring, head/middle/tail buckets);
 * :mod:`.quality_clf` — trained quality classifier (DCLM/fastText
-  shape): hashed-n-gram logistic regression trained as map-side
-  passes + one groupBy(feature) shuffle per epoch, scored map-side
-  by an Arrow UDF whose closure carries the weight vector;
+  shape): hashed-n-gram logistic regression trained in numpy on the
+  collected feature table when it fits (else map-side passes + one
+  groupBy(feature) shuffle per epoch), scored map-side by an Arrow
+  UDF whose closure carries the weight vector;
 * :mod:`.urls` — URL canonicalization, registered-domain extraction,
   canonical-URL dedup and domain-mix counts;
 * :mod:`.search` — BM25 ranked retrieval over the corpus;

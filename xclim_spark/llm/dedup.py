@@ -1169,7 +1169,7 @@ def semantic_dedup(
             f"semantic_dedup: on_oversize must be 'raise' or 'split' "
             f"(got {on_oversize!r})")
 
-    cent_ids, _scores = _centroid_scorer(centroids, id_col, vec_col)
+    cent_ids, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
 
     @pandas_udf("bigint")
     def _cell(vs: pd.Series) -> pd.Series:

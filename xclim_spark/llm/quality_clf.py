@@ -16,20 +16,25 @@ Scale design:
   ``dedup.md5_hash60``.
 * **Training never shuffles text.**  One explode + one groupBy builds
   the exploded feature table ``(_id, _y, _idx, _x)`` ONCE, hash
-  partitioned on the document id and persisted; each gradient-descent
-  epoch is then ONE pure-codegen pass over that layout — the
-  per-document margin is a window sum over the ``_id`` partition
-  (exchange-free on the persisted hash layout; the residual rides
-  every feature row of its document, no re-join, no second scan) —
-  plus ONE ``groupBy(idx)`` shuffle of ``(feature, partial-gradient)``
-  rows — the counts-shuffle-not-text shape shared with BPE training
-  (tokenizer.py).  The driver only ever collects the ``dim + 1``
-  gradient vector per epoch (the k-means-centroid pattern; ``dim`` is
-  a few thousand, never corpus-sized), and hands the updated weights
-  back as ONE typed array literal (``F.lit`` of a float64 ndarray):
-  a list literal builds one Column per weight and a ``CreateArray``
-  with ``dim + 1`` children, analyzed again every epoch (~4.5x the
-  driver CPU of the ndarray literal at ``dim`` 512).
+  partitioned on the document id and persisted, and ONE capped collect
+  (:data:`_LOCAL_MAX_ROWS` + 1 rows, as Arrow) decides where the
+  epochs run.  A table that fits trains in driver memory, as fastText
+  trains on a single node: each epoch is two ``np.bincount`` sums
+  (per-document margin, per-feature gradient), so training costs one
+  Spark action whatever the epoch count.  A larger table trains
+  distributed: each gradient-descent epoch is ONE pure-codegen pass
+  over the persisted layout — the per-document margin is a window sum
+  over the ``_id`` partition (exchange-free on the persisted hash
+  layout; the residual rides every feature row of its document, no
+  re-join, no second scan) — plus ONE ``groupBy(idx)`` shuffle of
+  ``(feature, partial-gradient)`` rows — the counts-shuffle-not-text
+  shape shared with BPE training (tokenizer.py).  The driver only
+  collects the ``dim + 1`` gradient vector per epoch (``dim`` is a few
+  thousand, never corpus-sized), and hands the updated weights back as
+  ONE typed array literal (``F.lit`` of a float64 ndarray): a list
+  literal builds one Column per weight and a ``CreateArray`` with
+  ``dim + 1`` children, analyzed again every epoch (~4.5x the driver
+  CPU of the ndarray literal at ``dim`` 512).
 * **The intercept is a hashed feature** (index ``dim``, x = 1.0), so
   the bias gradient rides the same single shuffle instead of needing a
   second aggregation pass per epoch.
@@ -67,6 +72,15 @@ __all__ = [
     "quality_clf_train",
     "quality_clf_score",
 ]
+
+# Largest feature table (rows of ``(_id, _y, _idx, _x)``, about 70 per
+# web document) whose epochs run on the driver.  Measured on a 4-vCPU
+# host, 10 epochs at dim 512: the capped collect takes 0.6 s wall and
+# the driver epochs 0.02 / 0.38 / 1.5 s CPU at 35k / 1M / 3M rows,
+# against 5.6 / 4.6 / 7.0 s wall for the distributed epochs.  The
+# driver wins at every size tried, so the cap is memory: the driver's
+# Python peak grew by ~80 bytes per row (~160 MB at this cap).
+_LOCAL_MAX_ROWS = 2_000_000
 
 
 def _token_array(text_col: str) -> Column:
@@ -183,50 +197,97 @@ def quality_clf_train(
     so the replay contract is "re-derivable in practice", not a
     bit-level guarantee against adversarial inputs.
 
-    Per epoch (all codegen — no interpreted higher-order functions in
-    the hot path): ONE pass over the persisted doc-partitioned feature
-    table — the per-document margin is a window sum over the ``_id``
-    partition (exchange-free on the persisted hash(_id) layout), the
-    residual rides every feature row of its document directly, and one
+    The feature table is built and persisted once, then fetched by one
+    capped collect.  Up to :data:`_LOCAL_MAX_ROWS` rows, every epoch
+    runs in numpy on the driver: one Spark action in all.  A larger
+    table trains distributed, ``epochs + 1`` actions in all.  Per epoch
+    (all codegen — no interpreted higher-order functions in the hot
+    path): ONE pass over the persisted doc-partitioned feature table —
+    the per-document margin is a window sum over the ``_id`` partition
+    (exchange-free on the persisted hash(_id) layout), the residual
+    rides every feature row of its document directly, and one
     ``groupBy(feature-idx)`` gradient combine whose ``dim + 1`` rows
     are the only thing the driver sees.  (The previous aggregate +
     co-partitioned re-join shape scanned the cached feature table
     TWICE per epoch and paid a driver-side residual broadcast; the
     window restatement was measured 1.25x faster over the 10-epoch run
-    at sf0.1 with bit-identical weights — PLANS.md round 17.)"""
+    at sf0.1 with bit-identical weights — PLANS.md round 17.)  Both
+    sides compute the same update expression and round it alike, so
+    they return the same weights up to the last-digit float-sum
+    differences the 9-decimal rounding absorbs."""
     feats = _doc_features(
         docs, text_col=text_col, id_col=id_col, label_col=label_col,
         dim=dim, bigrams=bigrams).persist()
-    n = feats.where(F.col("_idx") == dim).count()  # one row per doc
-    if n == 0:
+    try:
+        tbl = feats.limit(_LOCAL_MAX_ROWS + 1).toArrow()
+        if tbl.num_rows == 0:
+            raise ValueError("quality_clf_train: no trainable documents "
+                             "(all texts NULL or zero grams)")
+        if tbl.num_rows > _LOCAL_MAX_ROWS:
+            return _train_distributed(feats, dim, epochs, lr)
+    finally:
         feats.unpersist()
-        raise ValueError("quality_clf_train: no trainable documents "
-                         "(all texts NULL or zero grams)")
+    return _train_local(tbl, dim, epochs, lr)
+
+
+def _train_local(tbl, dim: int, epochs: int, lr: float) -> list[float]:
+    """The epochs of :func:`quality_clf_train` over the collected
+    feature table: per-document margins and per-feature gradients are
+    ``np.bincount`` sums, and the update is the distributed side's
+    Python expression, so both sides round alike."""
+    import pandas as pd
+
+    doc, _ = pd.factorize(tbl.column("_id").to_pandas(),
+                          use_na_sentinel=False)
+    y = tbl.column("_y").to_numpy()
+    idx = tbl.column("_idx").to_numpy()
+    x = tbl.column("_x").to_numpy()
+    n = int(np.count_nonzero(idx == dim))  # one intercept row per doc
+    seen = np.flatnonzero(np.bincount(idx, minlength=dim + 1)).tolist()
+    w = [0.0] * (dim + 1)
+    for _ in range(epochs):
+        m = np.bincount(doc, weights=x * np.asarray(w)[idx])
+        # a NULL label (NaN) adds nothing, as Spark's sum skips NULLs
+        r = np.nan_to_num(1.0 / (1.0 + np.exp(-m[doc])) - y, nan=0.0)
+        g = np.bincount(idx, weights=r * x, minlength=dim + 1).tolist()
+        for j in seen:
+            w[j] = round(w[j] - lr * g[j] / n, 9)
+    return w
+
+
+def _train_distributed(feats: DataFrame, dim: int, epochs: int,
+                       lr: float) -> list[float]:
+    """The epochs of :func:`quality_clf_train` as Spark aggregations
+    over the persisted feature table; ``n`` (the intercept's row count,
+    one per document) rides epoch 1's aggregation."""
     from pyspark.sql import Window
 
     wid = Window.partitionBy("_id")
     w = [0.0] * (dim + 1)
-    try:
-        for _ in range(epochs):
-            wlit = F.lit(np.asarray(w, dtype=np.float64))
-            # margin as a window sum over the document's own feature
-            # rows: same float-sum tolerance class as the aggregate it
-            # replaces (per-epoch weights round to 9 decimals — the
-            # engine-replay contract above), then the only shuffle of
-            # the epoch: dim+1 gradient partials
-            m = F.sum(F.col("_x")
-                      * F.element_at(wlit, F.col("_idx") + 1)).over(wid)
-            r = (F.lit(1.0) / (F.lit(1.0) + F.exp(-m)) - F.col("_y"))
-            grad_rows = (feats.withColumn("_r", r)
-                         .groupBy("_idx")
-                         .agg(F.sum(F.col("_r") * F.col("_x"))
-                              .alias("_g"))
-                         .collect())
-            for row in grad_rows:
+    n = None
+    for _ in range(epochs):
+        wlit = F.lit(np.asarray(w, dtype=np.float64))
+        # margin as a window sum over the document's own feature
+        # rows: same float-sum tolerance class as an aggregate + join
+        # (per-epoch weights round to 9 decimals — the engine-replay
+        # contract above), then the only shuffle of the epoch: dim+1
+        # gradient partials
+        m = F.sum(F.col("_x")
+                  * F.element_at(wlit, F.col("_idx") + 1)).over(wid)
+        r = (F.lit(1.0) / (F.lit(1.0) + F.exp(-m)) - F.col("_y"))
+        grad_rows = (feats.withColumn("_r", r)
+                     .groupBy("_idx")
+                     .agg(F.sum(F.col("_r") * F.col("_x")).alias("_g"),
+                          F.count(F.lit(1)).alias("_n"))
+                     .collect())
+        if n is None:
+            n = next(row["_n"] for row in grad_rows if row["_idx"] == dim)
+        for row in grad_rows:
+            # NULL when every row of the feature has a NULL label: no
+            # gradient, as on the local side
+            if row["_g"] is not None:
                 j = row["_idx"]
                 w[j] = round(w[j] - lr * row["_g"] / n, 9)
-    finally:
-        feats.unpersist()
     return w
 
 

@@ -378,15 +378,16 @@ def knn_lsh(
 
 def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
     """Collect the (small, driver-bounded) centroid codebook ONCE and
-    return ``(centroid_ids, scores_fn)`` where ``scores_fn`` maps a
+    return ``(centroid_ids, scores_fn, vecs)``: ``scores_fn`` maps a
     pandas Series of vectors to the (rows x centroids) cosine matrix —
     one BLAS matmul per Arrow batch, carried in the task closure (zero
-    shuffle).  Shared by :func:`knn_ivf` / :func:`knn_ivfpq` cell
-    assignment, PQ residual coding and
-    :func:`~xclim_spark.llm.dedup.semantic_dedup` clustering.  A NULL
-    vector scores NaN against every centroid (:func:`_f64_rows`), so
-    ``np.argmax`` assigns it the lowest centroid id and a stable
-    descending ``argsort`` probes cells in ascending id order."""
+    shuffle) — and ``vecs`` is the id-sorted (C, d) centroid matrix.
+    Shared by :func:`knn_ivf` / :func:`knn_ivfpq` cell assignment, PQ
+    residual coding and :func:`~xclim_spark.llm.dedup.semantic_dedup`
+    clustering.  A NULL vector scores NaN against every centroid
+    (:func:`_f64_rows`), so ``np.argmax`` assigns it the lowest
+    centroid id and a stable descending ``argsort`` probes cells in
+    ascending id order."""
     cents = sorted(
         (r[0], [float(x) for x in r[1]])
         for r in centroids.select(id_col, vec_col).collect()
@@ -404,7 +405,7 @@ def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
         return (X @ vecs.T) / (
             np.linalg.norm(X, axis=1, keepdims=True) * norms)
 
-    return ids, _scores
+    return ids, _scores, vecs
 
 
 def knn_ivf(
@@ -444,7 +445,7 @@ def knn_ivf(
     """
     from pyspark.sql.functions import pandas_udf
 
-    cent_ids_np, _scores = _centroid_scorer(centroids, id_col, vec_col)
+    cent_ids_np, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
 
     @pandas_udf("bigint")
     def _cell(vs: pd.Series) -> pd.Series:
@@ -580,6 +581,9 @@ def kmeans_fit(
     ``iters`` times.  Codebook quality degrades only with sampling
     error (k-means centroids are means — they concentrate fast).
 
+    Rows with a NULL vector take no part in training (neither the init
+    nor any Lloyd pass).
+
     Returns the (k, d) centroid matrix as numpy — metadata-sized;
     wrap in ``spark.createDataFrame`` for the ``centroids=`` contract
     of the consumers.  With ``return_counts=True`` returns
@@ -596,6 +600,7 @@ def kmeans_fit(
             emb = emb.filter(
                 sample_hash(F.lit("kmeans"), F.col(id_col))
                 < hex_threshold(sample_fraction))
+    emb = emb.where(F.col(vec_col).isNotNull())
 
     if init == "spread":
         cents = _spread_init(
@@ -664,13 +669,9 @@ def _norm_centroids(centroids: DataFrame, id_col: str, vec_col: str):
     """Collected, id-sorted, L2-normalized coarse centroid matrix plus
     the cosine scorer — the residual-PQ helper (residuals live on the
     unit sphere: r = v/||v|| - c/||c|| of the assigned cell)."""
-    cent_ids, scores = _centroid_scorer(centroids, id_col, vec_col)
-    cents = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in centroids.select(id_col, vec_col).collect())
-    C = np.stack([np.asarray(c[1], dtype=np.float64) for c in cents])
-    C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    return cent_ids, scores, C
+    cent_ids, scores, vecs = _centroid_scorer(centroids, id_col, vec_col)
+    norms = np.linalg.norm(vecs, axis=1, keepdims=True)
+    return cent_ids, scores, vecs / np.maximum(norms, 1e-30)
 
 
 def pq_fit(
@@ -702,7 +703,8 @@ def pq_fit(
     same stateless md5-threshold draw as :func:`kmeans_fit`).
 
     Deterministic init: subspace slices of the first ``ks`` vectors by
-    ascending id.  Empty codes keep their previous entry (standard
+    ascending id; rows with a NULL vector are skipped, as in
+    :func:`kmeans_fit`.  Empty codes keep their previous entry (standard
     Lloyd fallback).  Returns the (m, ks, d/m) codebook tensor —
     metadata-sized (m*ks*(d/m) = ks*d doubles).
 
@@ -725,6 +727,7 @@ def pq_fit(
             emb = emb.filter(
                 sample_hash(F.lit("pq"), F.col(id_col))
                 < hex_threshold(sample_fraction))
+    emb = emb.where(F.col(vec_col).isNotNull())
 
     cent = (None if centroids is None
             else _norm_centroids(centroids, id_col, vec_col))
@@ -928,7 +931,7 @@ def knn_ivfpq(
             "centroids=); probing it requires residual=True")
     m, ks, dsub = codebooks.shape
     B = codebooks
-    cent_ids_np, _scores = _centroid_scorer(centroids, id_col, vec_col)
+    cent_ids_np, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
 
     @pandas_udf("bigint")
     def _cell(vs: pd.Series) -> pd.Series:

@@ -13,15 +13,22 @@ Scale design (what survives 100 TB):
   shuffle carries ``(word, count)``, never text.  Everything after
   operates on the *distinct-word* table (bounded by vocabulary growth,
   ~10⁷ rows for web corpora — Heaps' law — vs 10¹¹ documents).
-* **Per merge round**: adjacent symbol pairs are generated inside the
-  projection (higher-order ``transform``, zero Python), aggregated with
-  one ``groupBy(a, b)`` partial-aggregated on the map side, and exactly
-  ONE row (the argmax pair) is collected.  The merge is then applied as
-  a pure ``aggregate`` (fold) expression over the symbol arrays — no
-  shuffle at all — and the table is ``localCheckpoint``-ed so K rounds
-  do not stack K fold expressions into one Catalyst tree (the same
-  flat-lineage pattern as the connected-components operators,
-  llm/dedup.py).
+* **Merge rounds run where the table fits.**  The symbol table is
+  ``localCheckpoint``-ed once and ONE capped collect
+  (:data:`_LOCAL_MAX_WORDS` + 1 rows) decides: a table that fits runs
+  every round in driver memory (the shape of Hugging Face
+  ``tokenizers`` and Sennrich's reference trainer: count words in one
+  corpus pass, then merge over the in-memory ``(word, count)`` table),
+  so training costs two Spark actions whatever the round count.  A
+  larger table runs each round distributed: adjacent symbol pairs are
+  generated inside the projection (higher-order ``transform``, zero
+  Python), aggregated with one ``groupBy(a, b)`` partial-aggregated on
+  the map side, and exactly ONE row (the argmax pair) is collected.
+  The merge is then applied as a pure ``aggregate`` (fold) expression
+  over the symbol arrays — no shuffle at all — and the table is
+  ``localCheckpoint``-ed so K rounds do not stack K fold expressions
+  into one Catalyst tree (the same flat-lineage pattern as the
+  connected-components operators, llm/dedup.py).
 * **Encoding is embarrassingly parallel**: the learned merge table is
   vocab-sized driver state shipped in the UDF closure (equivalently a
   broadcast); documents are encoded map-side in Arrow batches with a
@@ -109,6 +116,17 @@ def merge_pair(syms_col, a: str, b: str) -> Column:
     )
 
 
+# Largest distinct-word table whose merge rounds run on the driver.
+# Measured on a 4-vCPU host, 10 merges over random 3-10 letter words
+# spread over 4 partitions, wall seconds including the checkpoint and
+# the capped collect: driver 1.8 / 2.6 / 8.4 s at 10k / 30k / 100k
+# words, distributed 4.1 / 9.2 / 13.5 s.  A distributed round has a
+# fixed cost of ~0.3-0.4 s (two Spark actions); the driver round grows
+# by ~0.07 s per 10k words, so on a cluster, where the distributed
+# round stays near its fixed cost, the two meet near 50k words.
+_LOCAL_MAX_WORDS = 50_000
+
+
 def bpe_train(
     docs: DataFrame,
     *,
@@ -121,11 +139,22 @@ def bpe_train(
     ``[(left, right, pair_count), ...]`` in learned order; stops early
     when no pair reaches ``min_count``.
 
-    Each round is one groupBy over the distinct-word table plus a
-    1-row collect; the corpus text is never re-read."""
+    The corpus text is read once, into the ``localCheckpoint``-ed
+    distinct-word table; one capped collect then fetches it.  When it
+    holds at most :data:`_LOCAL_MAX_WORDS` words every round runs in
+    driver memory (two Spark actions in all).  Otherwise each round is
+    one groupBy over the table plus a 1-row collect, and the merge is
+    folded in and checkpointed (two actions per round).  Both sides
+    follow the module's determinism contract, so they learn the same
+    merges."""
     st = init_symbols(word_counts(
         docs, text_col=text_col, lowercase=lowercase)
     ).select("cnt", "syms").localCheckpoint()
+    rows = st.limit(_LOCAL_MAX_WORDS + 1).collect()
+    if len(rows) <= _LOCAL_MAX_WORDS:
+        return _bpe_train_local(
+            [(int(r["cnt"]), list(r["syms"])) for r in rows],
+            num_merges, min_count)
     merges: list[tuple[str, str, int]] = []
     for _ in range(num_merges):
         best = (
@@ -145,6 +174,40 @@ def bpe_train(
     return merges
 
 
+def _bpe_train_local(words: list[tuple[int, list[str]]], num_merges: int,
+                     min_count: int) -> list[tuple[str, str, int]]:
+    """The merge rounds of :func:`bpe_train` over an in-memory
+    ``(count, symbols)`` table.  Python orders strings by code point,
+    as Spark orders them by UTF-8 bytes, so the ``(a, b)`` tie-break
+    agrees with the distributed ``orderBy``."""
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(num_merges):
+        pairs: dict[tuple[str, str], int] = {}
+        for cnt, syms in words:
+            for p in zip(syms, syms[1:]):
+                pairs[p] = pairs.get(p, 0) + cnt
+        if not pairs:
+            break
+        (a, b), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if c < min_count:
+            break
+        merges.append((a, b, c))
+        words = [(cnt, _apply_merge(syms, a, b)) for cnt, syms in words]
+    return merges
+
+
+def _apply_merge(syms: list[str], a: str, b: str) -> list[str]:
+    """One merge as a greedy left fold — the Python twin of
+    :func:`merge_pair`."""
+    out: list[str] = []
+    for x in syms:
+        if out and out[-1] == a and x == b:
+            out[-1] = a + b
+        else:
+            out.append(x)
+    return out
+
+
 def _encode_word(w: str, merges: list[tuple[str, str]]) -> list[str]:
     """Driver/executor-shared reference encode: sequential application
     of the learned merges.  Equivalent to rank-priority encoding — a
@@ -154,13 +217,7 @@ def _encode_word(w: str, merges: list[tuple[str, str]]) -> list[str]:
     for a, b in merges:
         if len(syms) < 2:
             break
-        out: list[str] = []
-        for x in syms:
-            if out and out[-1] == a and x == b:
-                out[-1] = a + b
-            else:
-                out.append(x)
-        syms = out
+        syms = _apply_merge(syms, a, b)
     return syms
 
 

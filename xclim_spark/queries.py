@@ -8799,15 +8799,16 @@ FROM documents d LEFT JOIN dagg USING (doc_id)"""
 
 @_register("tokenizer_bpe_train", _bpe_sql(10))
 def tokenizer_bpe_train(spark, sf_dir):
-    """Distributed BPE training (Sennrich et al. 2016 §3.2;
-    llm/tokenizer.py bpe_train): ONE corpus text pass builds the
-    (word, count) table, then each of 10 merge rounds is a groupBy over
-    the distinct-word table (counts shuffle, text never does), a 1-row
-    argmax collect, and a pure fold expression applying the merge.  The
-    gate emits the learned merge table; the oracle re-derives the whole
-    loop in DuckDB (chained CTEs + list_reduce), so merge order, pair
-    weighting (per adjacent occurrence x word frequency), tie-breaks,
-    and fold semantics must all agree exactly."""
+    """BPE training (Sennrich et al. 2016 §3.2; llm/tokenizer.py
+    bpe_train): ONE corpus text pass builds the (word, count) table
+    (counts shuffle, text never does), one capped collect fetches it,
+    and the 10 merge rounds run over it in driver memory (a table too
+    large for the driver runs each round as a groupBy, a 1-row argmax
+    collect and a fold expression applying the merge).  The gate emits
+    the learned merge table; the oracle re-derives the whole loop in
+    DuckDB (chained CTEs + list_reduce), so merge order, pair weighting
+    (per adjacent occurrence x word frequency), tie-breaks, and fold
+    semantics must all agree exactly."""
     from .llm import tokenizer as tok
 
     d = _read(spark, sf_dir, "documents")
@@ -9445,13 +9446,14 @@ def _qclf_sql(final: str) -> str:
 FROM {wf} WHERE round(w, 6) <> 0.0"""),
 )
 def quality_clf_train(spark, sf_dir):
-    """Distributed fastText-shape quality-classifier TRAINING
-    (llm/quality_clf.py quality_clf_train; DCLM Li et al. 2024 §4.4):
-    hashed uni+bigram features as pure expressions, full-batch
-    logistic-regression GD where each epoch is one map-side pass plus
-    one groupBy(feature) shuffle, driver traffic = the dim+1 gradient
-    per epoch.  Labels are a stopword-density proxy both engines
-    derive identically; the oracle replays every epoch in SQL."""
+    """fastText-shape quality-classifier TRAINING (llm/quality_clf.py
+    quality_clf_train; DCLM Li et al. 2024 §4.4): hashed uni+bigram
+    features as pure expressions, built and collected once, then
+    full-batch logistic-regression GD whose 10 epochs run in numpy on
+    the driver (a feature table too large for the driver runs each
+    epoch as one map-side pass plus one groupBy(feature) shuffle).
+    Labels are a stopword-density proxy both engines derive
+    identically; the oracle replays every epoch in SQL."""
     from .llm import quality_clf as qc
 
     docs = _read(spark, sf_dir, "documents")
@@ -9483,14 +9485,15 @@ JOIN (SELECT f.doc_id, sum(f.x * w.w) AS mg
 USING (doc_id)"""),
 )
 def quality_clf_score(spark, sf_dir):
-    """Train-then-score: the trained weight vector ships as a plan
-    literal and every document scores MAP-SIDE by folding over its own
-    gram array (llm/quality_clf.py quality_clf_score) — zero joins,
-    zero shuffles in the scoring pass, the shape a 100 TB filter scan
-    needs.  The oracle replays training and scores via the feature
-    table instead; the two formulations are algebraically identical
-    (sum over occurrences of w/ng = sum over distinct features of
-    x*w)."""
+    """Train-then-score: training runs as in quality_clf_train (one
+    feature-table collect, epochs on the driver), then the weight
+    vector rides the scoring UDF's closure and every document scores
+    MAP-SIDE in Arrow batches over its own grams (llm/quality_clf.py
+    quality_clf_score) — zero joins, zero shuffles in the scoring pass,
+    the shape a 100 TB filter scan needs.  The oracle replays training
+    and scores via the feature table instead; the two formulations are
+    algebraically identical (sum over occurrences of w/ng = sum over
+    distinct features of x*w)."""
     from .llm import quality_clf as qc
 
     docs = _read(spark, sf_dir, "documents")
