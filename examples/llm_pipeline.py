@@ -10,8 +10,9 @@ Runnable against the synthetic corpus:
 
 Every stage is a Catalyst plan over the ``documents`` table — the same
 code runs on a 100 TB corpus: dedup candidates come from banded LSH
-joins (never all-pairs), clusters close by min-label propagation
-(O(diameter) join rounds), decontamination broadcasts the eval-set
+joins (never all-pairs), clusters close by a driver union-find when
+the edge list is small and by O(log n) star-rewrite rounds when it is
+not, decontamination broadcasts the eval-set
 n-gram dictionary, and packing is a per-source running-total window.
 """
 

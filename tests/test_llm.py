@@ -547,59 +547,86 @@ def test_connected_components_long_chain_converges(spark):
     assert all(r["component"] == 0 for r in out) and len(out) == 13
 
 
-@pytest.mark.slow
-def test_connected_components_star_matches_minlabel(spark):
-    """Large-star/small-star (Kiveris 2014) must produce exactly the
-    same (id, component) map as min-label propagation on a mixed graph:
-    chain + islands + reversed/duplicate edges."""
-    from xclim_spark.llm import dedup as dd
-
-    edges = spark.createDataFrame(
-        [(2, 3), (1, 2), (3, 7), (10, 11), (5, 6), (6, 5), (20, 21),
-         (21, 22), (22, 20)],
-        "id_a long, id_b long")
-    ref = {(r["id"], r["component"])
-           for r in dd.connected_components(edges).collect()}
-    got = {(r["id"], r["component"])
-           for r in dd.connected_components_star(edges).collect()}
-    assert got == ref
-
-
-def test_connected_components_star_deep_chain_bounded_rounds(spark):
-    """The adversarial case min-label can't bound: a 50-deep chain
-    closes in O(log n) star rounds (min-label needs O(diameter)).  Also
-    checks the label map against the analytic answer."""
+def test_connected_components_star_deep_chain_bounded_rounds(
+        spark, last_sql_execution):
+    """The adversarial case for label propagation: a 50-deep chain
+    closes in O(log n) star rounds, not O(diameter).  A round is two
+    SQL executions (its checkpoint and its signature), after the edge
+    checkpoint and the first signature.  Also checks the label map
+    against the analytic answer."""
     from xclim_spark.llm import dedup as dd
 
     n = 50
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long")
-    labels, rounds = dd.connected_components_star(
-        edges, return_rounds=True)
+    before = last_sql_execution()
+    labels = dd.connected_components_star(edges)
+    rounds = (last_sql_execution() - before - 2) / 2
     out = labels.collect()
     assert len(out) == n + 1
     assert all(r["component"] == 0 for r in out)
     # ceil(log2(50)) ~ 6; allow slack for the alternation + the
-    # confirming fixpoint round, but far below the 50 min-label needs
-    assert rounds <= 12, rounds
+    # confirming fixpoint round, but far below the 50 a label
+    # propagation needs
+    assert 1 <= rounds <= 12, rounds
 
 
-@pytest.mark.slow
-def test_connected_components_star_random_graph_matches(spark):
-    """Randomized cross-check on a sparse random graph (seeded)."""
+def _union_find_components(pairs):
+    """Pure-Python reference closure: every non-NULL id of an edge is
+    labelled with the least id connected to it."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((x, find(x)) for x in parent)
+
+
+@pytest.mark.parametrize("side", ["driver", "star"])
+def test_connected_components_matches_union_find_reference(
+        spark, last_sql_execution, monkeypatch, side):
+    """Both sides of the edge cap give the pure-Python union-find's
+    labels on one graph holding a chain, a star, a clique, islands,
+    reversed and duplicate edges, self-loops, NULL ids and a seeded
+    random graph, in disjoint id ranges.  Every non-NULL id gets one
+    row; a self-loop id or an id with a NULL partner is a singleton.
+    Below the cap the closure is one SQL execution."""
     import numpy as np
 
     from xclim_spark.llm import dedup as dd
 
+    if side == "star":
+        monkeypatch.setattr(dd, "_LOCAL_MAX_EDGES", 0)
+    pairs = [(i, i + 1) for i in range(100, 112)]            # chain
+    pairs += [(200, i) for i in range(201, 209)]             # star
+    pairs += [(i, j) for i in range(300, 305)                # clique
+              for j in range(300, 305) if i < j]
+    pairs += [(401, 400), (402, 403), (403, 402), (402, 403)]  # islands
+    pairs += [(None, 505), (505, 506), (507, None), (508, 508),
+              (509, 508), (None, None)]                      # self / NULL
+    pairs += [(608, 608), (601, 602)]                         # lone loop
     rng = np.random.RandomState(123)
-    pairs = {(int(a), int(b))
-             for a, b in rng.randint(0, 120, size=(90, 2)) if a != b}
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in sorted(pairs)], "id_a long, id_b long")
-    ref = {(r["id"], r["component"])
-           for r in dd.connected_components(edges).collect()}
-    got = {(r["id"], r["component"])
-           for r in dd.connected_components_star(edges).collect()}
+    pairs += sorted({(int(a), int(b)) for a, b in
+                     rng.randint(1000, 1120, size=(90, 2)) if a != b})
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    before = last_sql_execution()
+    out = dd.connected_components(edges)
+    if side == "driver":
+        assert last_sql_execution() - before == 1
+    assert out.schema.simpleString() == \
+        "struct<id:bigint,component:bigint>"
+    got = sorted(tuple(r) for r in out.collect())
+    ref = _union_find_components(pairs)
+    assert (505, 505) in ref and (507, 507) in ref and (608, 608) in ref
     assert got == ref
 
 
@@ -670,38 +697,17 @@ def test_minhash_lsh_jaccard_recall_measured(spark):
     assert recall >= 0.95, (recall, len(exact), len(found))
 
 
-@pytest.mark.slow
-def test_connected_components_fallback_on_deep_graph(spark):
-    """A component deeper than the min-label round budget must not
-    return partially-propagated labels: the loop falls back to the
-    star rewrite (with a warning) and still labels correctly."""
-    import warnings
-
-    import xclim_spark.llm.dedup as dd
-
-    n = 20
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_a LONG, id_b LONG")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        got = {r["id"]: r["component"]
-               for r in dd.connected_components(
-                   edges, max_iterations=2).collect()}
-    assert any("falling back" in str(x.message) for x in w)
-    assert got == {i: 0 for i in range(n + 1)}
-
-
-def test_connected_components_star_nonconvergence_raises(spark):
+def test_connected_components_star_nonconvergence_raises(
+        spark, monkeypatch):
     """The star rewrite must refuse to emit labels from a non-fixpoint
     edge set (it can carry conflicting component rows per id)."""
-    import pytest as _pt
-
     import xclim_spark.llm.dedup as dd
 
+    monkeypatch.setattr(dd, "_STAR_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a LONG, id_b LONG")
-    with _pt.raises(RuntimeError, match="fixpoint"):
-        dd.connected_components_star(edges, max_iterations=1)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        dd.connected_components_star(edges)
 
 
 def test_semantic_dedup_marks_clones(spark):
@@ -2194,9 +2200,9 @@ def test_lm_score_degenerate_reference_model(spark):
 
 
 def test_lm_broadcast_model_gate_both_sides(spark, last_sql_execution):
-    """The size gate costs one action (a capped count) and a model that
-    fits one more (the collect); a model over the gate returns None
-    after the count alone.  Both sides score like the join path."""
+    """The size gate costs one action (a capped read) on either side: a
+    model that fits is built from the rows it read, a model over the
+    gate returns None.  Both sides score like the join path."""
     from xclim_spark.llm.lm import (
         LmBroadcastModel, lm_broadcast_model, lm_score, lm_train_counts)
 
@@ -2215,7 +2221,7 @@ def test_lm_broadcast_model_gate_both_sides(spark, last_sql_execution):
         return bm, last_sql_execution() - before
 
     fits, n_fit = actions(n_rows)
-    assert isinstance(fits, LmBroadcastModel) and n_fit == 2
+    assert isinstance(fits, LmBroadcastModel) and n_fit == 1
     unid, bigd, total, vocab = fits.bc.value
     assert (total, vocab) == tuple(sc.first())
     assert len(unid) + len(bigd) == n_rows
@@ -2265,18 +2271,13 @@ def test_exact_first_components_match_naive(spark):
     assert a == b
     assert set(a) == set(range(9))          # A+B merge; 9/10/11 absent
     assert len(set(a.values())) == 1
-    # star closure variant agrees too
-    c = {r["id"]: r["component"] for r in near_dup_components(
-        docs, threshold=0.5, num_perm=64, bands=32,
-        use_star=True).collect()}
-    assert c == a
 
 
 @pytest.mark.slow
 def test_near_dup_components_default_is_exact_first(spark):
-    """near_dup_components is the production front door: naive=True
-    must equal the raw pair-graph closure, and the default exact-first
-    path must agree with it on the partition."""
+    """near_dup_components is the production front door: its
+    exact-first composition must agree on the partition with closing
+    the raw pair graph."""
     from xclim_spark.llm.dedup import (
         connected_components, near_dup_components, near_duplicates)
 
@@ -2291,12 +2292,8 @@ def test_near_dup_components_default_is_exact_first(spark):
 
     default = {r["id"]: r["component"]
                for r in near_dup_components(docs, **kw).collect()}
-    naive = {r["id"]: r["component"]
-             for r in near_dup_components(docs, naive=True, **kw)
-             .collect()}
     raw = {r["id"]: r["component"]
            for r in connected_components(
                near_duplicates(docs, **kw)).collect()}
-    assert naive == raw
-    assert default == naive
+    assert default == raw
     assert set(default) == set(range(6))

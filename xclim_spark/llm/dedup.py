@@ -22,6 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..util import local_frame
 
 __all__ = [
     "exact_duplicates",
@@ -1237,54 +1240,35 @@ def near_dup_components(
     bands: int = 64,
     seed: int = 7,
     parallelism: int | None = None,
-    use_star: bool = False,
-    naive: bool = False,
 ) -> DataFrame:
     """THE production near-dup clustering entry point: MinHash-LSH
-    pair discovery closed into components, with the EXACT-DEDUP-FIRST
-    composition as the default — the production ordering (RefinedWeb,
-    SlimPajama, CCNet all exact-dedup before MinHash) and the answer
-    to pair listing's quadratic blowup on clone groups: a boilerplate
-    page with m copies emits C(m, 2) MinHash pairs under the naive
-    graph but only m - 1 star edges here.  The sf10 scale rehearsal
-    measured the difference at 500k docs with 100-member clone groups:
-    27.3M pairs / 289 s naive vs 241 pairs + 495k star edges / 24 s
-    composed — and the resulting components are IDENTICAL, because
-    exact copies have identical shingle sets, so every cross-group
-    near-dup edge is represented by its exemplar pair (proved by the
-    shared gate oracle and pinned by pytest).
+    pair discovery closed into components, with exact dedup FIRST —
+    the production ordering (RefinedWeb, SlimPajama, CCNet all
+    exact-dedup before MinHash) and the answer to pair listing's
+    quadratic blowup on clone groups: a boilerplate page with m copies
+    emits C(m, 2) MinHash pairs when the raw pair graph is closed
+    (``connected_components(near_duplicates(docs))``) but only m - 1
+    star edges here.  The sf10 scale rehearsal measured the difference
+    at 500k docs with 100-member clone groups: 27.3M pairs / 289 s raw
+    vs 241 pairs + 495k star edges / 24 s composed — and the resulting
+    components are IDENTICAL, because exact copies have identical
+    shingle sets, so every cross-group near-dup edge is represented by
+    its exemplar pair (proved by the shared gate oracle and pinned by
+    pytest).
 
-    ``naive=True`` opts out into the direct ``near_duplicates`` ->
-    ``connected_components`` composition.  Crossover measured in the
-    round-14 rehearsal: below ~10k DISTINCT texts the naive path's
-    fewer stages win (no exact groupBy, no semi-join); above it —
-    i.e. everywhere a 100 TB corpus lives — exact-first wins and the
-    margin grows quadratically with clone-group size.  Never use
-    ``naive=True`` on real web-scale data: million-copy boilerplate
-    pages turn the pair list into C(10^6, 2) rows per page.
-
-    Exact-first stages (all linear):
+    Stages (all linear):
 
     1. exact groups over the shingle-eligible docs (>= ``n`` words —
        the same eligibility as the MinHash shingler, so short docs
-       stay OUT of the graph exactly as they do in the naive path):
+       stay OUT of the graph exactly as they do in the raw pair graph):
        one md5(text) groupBy for exemplars (min id), one join back for
        the star edges — no ``collect_list``: a 10M-member clone group
        must never materialize as one array row;
     2. :func:`near_duplicates` on the EXEMPLAR documents only;
-    3. :func:`connected_components` (or the large-star/small-star
-       variant with ``use_star``) over near-dup + star edges.
+    3. :func:`connected_components` over near-dup + star edges.
 
-    Returns ``(id_col, component)`` for every document with at least
-    one edge — the same contract as closing the naive pair graph."""
-    close = connected_components_star if use_star \
-        else connected_components
-    if naive:
-        pairs = near_duplicates(
-            docs, text_col=text_col, id_col=id_col, n=n,
-            threshold=threshold, num_perm=num_perm, bands=bands,
-            seed=seed, parallelism=parallelism)
-        return close(pairs.select("id_a", "id_b"))
+    Returns ``(id, component)`` for every document with at least one
+    edge — the same contract as closing the raw pair graph."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     eligible = docs.where(
         F.col(text_col).isNotNull() & (F.size(toks) >= n))
@@ -1303,12 +1287,35 @@ def near_dup_components(
         threshold=threshold, num_perm=num_perm, bands=bands, seed=seed,
         parallelism=parallelism)
     edges = pairs.select("id_a", "id_b").unionByName(star)
-    return close(edges)
+    return connected_components(edges)
+
+
+# Edge count up to which connected_components closes the graph on the
+# driver.  Closure plus a count of its labels on random graphs with as
+# many nodes as edges, local[4] on a 4-vCPU host, second of two runs
+# (driver side / star side): 10k edges 0.55 / 5.3 s, 100k 1.1 / 7.5 s,
+# 300k 3.5 / 14.4 s, 1M 8.0 / 24.9 s (the driver side then holds
+# +245 MB of Python RSS).  300k is the largest measured size at which
+# the driver side beats even the star side's fixed cost (its 10k-edge
+# time); more executors shorten star's data work, not that fixed cost.
+_LOCAL_MAX_EDGES = 300_000
+
+# Round budget of the star rewrite.  It converges in O(log^2 n) rounds
+# (O(log n) observed), so 50 covers any real graph.
+_STAR_MAX_ROUNDS = 50
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(a, b)`` with ``a >= b``, one row per edge with a non-NULL id.
+    ``greatest``/``least`` skip NULLs, so an edge with one NULL end is
+    the self-loop ``(x, x)``: its node stays in the graph alone."""
+    return (edges.select(F.greatest(F.col(src), F.col(dst)).alias("a"),
+                         F.least(F.col(src), F.col(dst)).alias("b"))
+            .where(F.col("a").isNotNull()))
 
 
 def connected_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", *,
-    max_iterations: int = 50,
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b",
 ) -> DataFrame:
     """Connected components over a duplicate-pair graph: assign every
     node the MINIMUM id reachable from it — the canonical-document
@@ -1320,92 +1327,55 @@ def connected_components(
     graph of a clone-heavy corpus hands it C(m, 2) edges per m-copy
     boilerplate page (measured quadratic at the sf10 rehearsal).
 
-    Min-label propagation: each round every node takes the least of its
-    own label and its neighbours' labels (one join + one groupBy per
-    round), converging in O(component diameter) rounds — near-dup
-    clusters are dense and shallow, so 2-4 rounds in practice; the
-    driver only ever sees one change-count per round.  Labels persist
-    per round (and the previous round unpersists) so the iteration's
-    lineage stays flat.  For adversarially deep graphs (long chains) at
-    the 100 TB tier, use :func:`connected_components_star` — the
-    alternating large-star/small-star rewrite (Kiveris et al. 2014),
-    which converges in O(log n) rounds on the same join+agg primitives.
+    One capped read (:data:`_LOCAL_MAX_EDGES` + 1 edges, as Arrow)
+    picks the side.  A graph that fits is closed on the driver by a
+    path-compressed union-find whose roots are component minima, and
+    its labels come back as a local relation: one Spark action in all.
+    A larger graph goes to :func:`connected_components_star`, which
+    reads the edges again.
 
-    Returns (id, component).
+    Returns ``(id, component)``, typed like the wider id column, with
+    one row per non-NULL id of any edge.  Self-loop ids and ids whose
+    partner is NULL are singletons; a NULL id gets no row.
     """
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().persist()
-    # localCheckpoint (not persist) each round: it TRUNCATES the logical
-    # plan, so the iteration's lineage — and Catalyst's per-action
-    # replanning cost — stays flat instead of nesting one join deeper
-    # every round (a 12-round chain OOMs the driver on plan strings
-    # otherwise; a cluster deployment would use checkpoint() on durable
-    # storage for fault tolerance)
-    # seed labels with the first propagation folded in: one aggregation
-    # gives every node min(own id, min neighbour id), so dense clusters
-    # (the near-dup shape — cliques around a canonical doc) converge in
-    # a single confirming round instead of three
-    labels = (und.groupBy("a")
-              .agg(F.least(F.col("a"), F.min("b")).alias("c"))
-              .withColumnRenamed("a", "id").localCheckpoint())
-    converged = False
-    for _ in range(max_iterations):
-        nb = (und.join(labels.select(F.col("id").alias("b"),
-                                     F.col("c").alias("bc")), on="b")
-              .groupBy("a").agg(F.min("bc").alias("nc")))
-        # the change flag rides the SAME join that builds the new
-        # labels (``nc < c`` is exactly "this node's label improved"),
-        # so the per-round convergence check is a filter-count over the
-        # freshly checkpointed round output instead of a second
-        # labels-vs-labels shuffle join (guide §2.4: remove shuffles
-        # outright) — one join + one exchange fewer per round
-        new = (labels.join(nb.select(F.col("a").alias("id"), "nc"),
-                           on="id", how="left")
-               .select("id",
-                       F.least(F.col("c"),
-                               F.coalesce("nc", "c")).alias("c"),
-                       F.coalesce(F.col("nc") < F.col("c"),
-                                  F.lit(False)).alias("_chg"))
-               .localCheckpoint())
-        changed = new.filter("_chg").count()
-        labels = new.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    und.unpersist()
-    if not converged:
-        # the graph is deeper than the round budget (diameter >
-        # max_iterations) — exactly the shape the O(log n) star
-        # rewrite exists for.  Returning partially-propagated labels
-        # would silently split components; switch instead of lying.
-        import warnings
-
-        warnings.warn(
-            f"connected_components: min-label propagation did not "
-            f"converge within {max_iterations} rounds (component "
-            "diameter exceeds the budget); falling back to the "
-            "large-star/small-star rewrite", RuntimeWarning,
-            stacklevel=2)
+    canon = _canonical_edges(edges, src, dst)
+    tbl = canon.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if tbl.num_rows > _LOCAL_MAX_EDGES:
         return connected_components_star(edges, src, dst)
-    return labels.select("id", F.col("c").alias("component"))
+    parent = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(tbl.column("a").to_pylist(),
+                    tbl.column("b").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    t = canon.schema["a"].dataType
+    return local_frame(
+        edges.sparkSession, [(x, find(x)) for x in parent],
+        StructType([StructField("id", t), StructField("component", t)]))
 
 
 def connected_components_star(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", *,
-    max_iterations: int = 50, return_rounds: bool = False,
-):
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b",
+) -> DataFrame:
     """Connected components via alternating large-star / small-star
     edge rewrites (Kiveris et al., *Connected Components in MapReduce
-    and Beyond*, ACM SoCC 2014) — the scale path for adversarially
-    DEEP pair graphs, converging in O(log^2 n) rounds worst-case
-    (O(log n) observed) where :func:`connected_components`'s min-label
-    propagation needs O(component diameter) rounds (a 10^6-long chain =
-    10^6 joins).  Near-dup graphs are usually dense and shallow, which
-    is why min-label is the default; this variant bounds the tail.
+    and Beyond*, ACM SoCC 2014): the distributed side of
+    :func:`connected_components`, for graphs too large to close on the
+    driver.  It converges in O(log^2 n) rounds worst-case (O(log n)
+    observed), however deep the components are.
 
-    One round = two (join + groupBy) passes over the edge set:
+    One round = two window passes over the edge set:
 
     * **large-star**: every node ``u`` re-points its strictly LARGER
       neighbours at ``m(u) = min(N(u) + {u})`` — long tails collapse
@@ -1418,20 +1388,20 @@ def connected_components_star(
     At the fixpoint the edge set IS the component map (child -> root
     minimum).  Convergence is detected by an order-insensitive edge-set
     signature (count + two independent 64-bit hash sums) instead of a
-    full anti-join — one driver-side tuple per round, same as
-    min-label's change count.  ``localCheckpoint`` per half-round keeps
-    the iteration's lineage flat (a cluster deployment would use
-    durable ``checkpoint()``).
+    full anti-join — one driver-side tuple per round.
+    ``localCheckpoint`` per round keeps the iteration's lineage flat (a
+    cluster deployment would use durable ``checkpoint()``).  Raises
+    ``RuntimeError`` when :data:`_STAR_MAX_ROUNDS` rounds do not reach
+    the fixpoint.
 
-    Returns (id, component); with ``return_rounds=True`` returns
-    ``(labels, rounds)``.
+    Returns ``(id, component)`` with the node contract of
+    :func:`connected_components`.
     """
-    # canonical direction: a > b (every rewrite below preserves it)
-    e = (edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("a"),
-            F.least(F.col(src), F.col(dst)).alias("b"))
-         .filter(F.col("a") != F.col("b")).distinct()
-         .localCheckpoint())
+    # canonical direction: a > b in the working set (every rewrite
+    # below preserves it); the self-loops stay in the checkpoint so
+    # that their ids are labelled at the end
+    e0 = _canonical_edges(edges, src, dst).distinct().localCheckpoint()
+    e = e0.filter(F.col("a") != F.col("b"))
 
     def _sig(df):
         # decimal(38,0) accumulators: hash sums never overflow (ANSI
@@ -1485,29 +1455,22 @@ def connected_components_star(
                 .filter(F.col("a") != F.col("b")).distinct())
 
     sig = _sig(e)
-    rounds = 0
-    converged = False
-    for rounds in range(1, max_iterations + 1):
-        e2 = _small_star(_large_star(e)).localCheckpoint()
-        new_sig = _sig(e2)
-        e = e2
+    for _ in range(_STAR_MAX_ROUNDS):
+        e = _small_star(_large_star(e)).localCheckpoint()
+        new_sig = _sig(e)
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
-    if not converged:
+    else:
         # a non-fixpoint edge set can carry one id in several
         # conflicting child->root rows — emitting labels from it would
-        # hand callers duplicate ids with different components.  The
-        # O(log^2 n) bound makes 50 rounds cover any real graph, so a
-        # non-convergence here means a wrong max_iterations, not scale.
+        # hand callers duplicate ids with different components
         raise RuntimeError(
             f"connected_components_star did not reach its edge-set "
-            f"fixpoint within {max_iterations} rounds — raise "
-            "max_iterations (the default 50 covers ~2^50-deep graphs)")
-    labels = (e.select(F.col("a").alias("id"),
-                       F.col("b").alias("component"))
-              .unionByName(e.select(F.col("b").alias("id"),
-                                    F.col("b").alias("component")))
-              .distinct())
-    return (labels, rounds) if return_rounds else labels
+            f"fixpoint within {_STAR_MAX_ROUNDS} rounds")
+    # child -> root rows, root -> root rows and the self-loops: the
+    # least component per id is the root wherever an edge reaches it
+    return (e.unionByName(e.select(F.col("b").alias("a"), "b"))
+            .unionByName(e0.where(F.col("a") == F.col("b")))
+            .groupBy(F.col("a").alias("id"))
+            .agg(F.min("b").alias("component")))

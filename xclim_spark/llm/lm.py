@@ -134,12 +134,12 @@ def lm_broadcast_model(
     ``None`` when they don't, so callers fall back to the join-based
     scorer.
 
-    Two Spark actions over the tagged union of the two tables: a
-    ``limit(max_rows + 1).count()`` (the cap stops counting one row
-    past the gate instead of counting both tables in full), then one
-    ``collect`` when the model fits.  The scalar pair (total token
-    count, vocabulary size) is summed on the driver from the collected
-    unigram rows.  A token-less reference corpus has no unigram rows
+    One Spark action over the tagged union of the two tables: a
+    ``limit(max_rows + 1)`` read as Arrow, which stops one row past
+    the gate instead of reading both tables in full; holding more than
+    ``max_rows`` rows means the model does not fit.  The scalar pair
+    (total token count, vocabulary size) is summed on the driver from
+    the unigram rows.  A token-less reference corpus has no unigram rows
     and also returns ``None``: the join path yields its degenerate-model
     NULL scores.
 
@@ -156,10 +156,11 @@ def lm_broadcast_model(
                        F.col("cu").alias("c")).unionByName(
         big.select(F.lit(2).alias("n"), F.col("bg").alias("g"),
                    F.col("cb").alias("c")))
-    if grams.limit(max_rows + 1).count() > max_rows:
+    tbl = grams.limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
         return None
     unid, bigd = {}, {}
-    for n, g, c in grams.collect():
+    for n, g, c in zip(*(col.to_pylist() for col in tbl.columns)):
         (unid if n == 1 else bigd)[g] = c
     if not unid:
         return None

@@ -2854,9 +2854,10 @@ def dedup_fuzzy(spark, sf_dir):
     return out.withColumn("jaccard", F.round("jaccard", 6))
 
 
-# shared by dedup_components (min-label) and dedup_components_star
-# (large-star/small-star): both must close the SAME exact-Jaccard pair
-# graph to the SAME clusters, checked against the recursive CTE.
+# shared by the three clustering gates: dedup_components (the size-
+# picked closure), dedup_components_star (its distributed side, always)
+# and dedup_components_exact_first must close the SAME exact-Jaccard
+# pair graph to the SAME clusters, checked against the recursive CTE.
 _DEDUP_CC_SQL = """WITH RECURSIVE w AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
   FROM documents
@@ -2913,12 +2914,12 @@ def _dedup_pair_graph(spark, sf_dir):
 def dedup_components(spark, sf_dir):
     """Near-dup CLUSTERS, not just pairs: the MinHash+LSH verified pair
     graph (dedup_fuzzy's generator) collapsed to canonical components
-    by distributed min-label propagation (llm/dedup.py
-    connected_components — join+agg rounds, O(cluster diameter) of
-    them), giving each document its dedup-cluster id and size — the
-    keep-one-per-cluster primitive of a training-data pipeline.  The
-    oracle reproduces the exact-Jaccard pair graph and closes it with a
-    recursive CTE."""
+    by llm/dedup.py connected_components — one capped read of the
+    edges and a driver union-find when they fit its edge cap (they do
+    at every test scale), the star rewrite above it — giving each
+    document its dedup-cluster id and size: the keep-one-per-cluster
+    primitive of a training-data pipeline.  The oracle reproduces the
+    exact-Jaccard pair graph and closes it with a recursive CTE."""
     from .llm import dedup as dd
 
     cc = dd.connected_components(_dedup_pair_graph(spark, sf_dir))
@@ -2932,13 +2933,13 @@ def dedup_components(spark, sf_dir):
 def dedup_components_star(spark, sf_dir):
     """The SAME near-dup pair graph closed by the alternating
     large-star/small-star rewrite (Kiveris et al. 2014;
-    llm/dedup.py connected_components_star) — the O(log n)-round scale
-    path for adversarially deep cluster graphs where min-label
-    propagation (dedup_components) needs O(diameter) join rounds.  Both
-    gates hash-check against the same recursive-CTE oracle, so the two
-    algorithms are proven to agree on real near-dup structure, and the
-    chain-fixture pytest (tests/test_llm.py) proves the bounded-rounds
-    claim where it actually bites."""
+    llm/dedup.py connected_components_star) — the distributed side of
+    connected_components, which takes over above its driver edge cap
+    and converges in O(log n) rounds however deep the clusters are.
+    This gate calls it directly, so the distributed side is
+    oracle-checked at every scale even though the gate graphs fit the
+    driver side; the chain-fixture pytest (tests/test_llm.py) proves
+    the bounded-rounds claim where it actually bites."""
     from .llm import dedup as dd
 
     cc = dd.connected_components_star(_dedup_pair_graph(spark, sf_dir))
@@ -9335,17 +9336,14 @@ def stream_lm_quality(spark, sf_dir):
 @_register("dedup_components_exact_first", _DEDUP_CC_SQL)
 def dedup_components_exact_first(spark, sf_dir):
     """The SAME near-dup clusters via the production composition
-    (llm/dedup.py near_dup_components — the DEFAULT front door since
-    round 15; naive pair-graph closure is an explicit opt-out behind
-    ``naive=True`` with the <~10k-distinct-texts crossover documented
-    in its docstring): exact dedup FIRST
-    (one md5 groupBy, star edges to the exemplar), MinHash+LSH only on
-    the exemplar documents, components over star + exemplar-pair
-    edges.  Exact copies have identical shingle sets, so the closure
-    is provably identical to the naive pair graph's — all three
+    (llm/dedup.py near_dup_components): exact dedup FIRST (one md5
+    groupBy, star edges to the exemplar), MinHash+LSH only on the
+    exemplar documents, components over star + exemplar-pair edges.
+    Exact copies have identical shingle sets, so the closure is
+    provably identical to the raw pair graph's — all three
     clustering gates share one recursive-CTE oracle — while pair
     listing stays off clone groups: the sf10 rehearsal measured 27.3M
-    pairs / 289 s naive vs 241 exemplar pairs / 24 s composed."""
+    pairs / 289 s raw vs 241 exemplar pairs / 24 s composed."""
     from .llm import dedup as dd
 
     small = _sf_of(sf_dir) <= 0.01
