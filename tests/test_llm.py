@@ -509,23 +509,6 @@ def test_near_duplicates_bytes_shingler_matches_expr(spark):
     assert pa == pb and len(pa) > 0
 
 
-def test_word_gram_hashes_parity(spark):
-    """word_bytes shingler is pair-identical to the expression word
-    shingler (kept as a library option; the query uses the expression
-    form — word grams are few enough that the JVM path wins)."""
-    from xclim_spark.llm import dedup as dd
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(threshold=0.6, num_perm=32, bands=16, parallelism=4)
-    a = dd.near_duplicates(docs, **kw)
-    b = dd.near_duplicates(docs, shingler="word_bytes", **kw)
-    pa = sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in a.collect())
-    pb = sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in b.collect())
-    assert pa == pb and len(pa) > 0
-
-
 def test_connected_components_chain_and_islands(spark):
     from xclim_spark.llm import dedup as dd
 

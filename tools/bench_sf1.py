@@ -22,40 +22,30 @@ Query set: the N most expensive queries by the latest
 ``bench_detail.json`` (default 20, ``SPARK_GRAFT_SF1_TOP``), plus any
 names passed on the command line.
 
+Session, warm-up, timed loop and round label are bench.py's, from
+``tools/harness.py``.
+
 Usage:  python tools/bench_sf1.py [extra_query ...]
-Env:    SPARK_GRAFT_SF1_REPS (default 3), SPARK_GRAFT_SF1_TOP (20),
-        SPARK_GRAFT_CPUS (32), SPARK_GRAFT_ROUND (inferred from the
-        newest CORRECTNESS_r*.json + 1 when unset).
+Env:    SPARK_GRAFT_SF1_TOP (20), plus the harness's SPARK_GRAFT_CPUS,
+        SPARK_GRAFT_MEM, SPARK_GRAFT_BENCH_REPS and SPARK_GRAFT_ROUND.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import statistics
-import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import harness
+from harness import REPO
 
-SF1_DIR = os.path.join(REPO, ".scratch", "sf1")
 ARTIFACT = os.path.join(REPO, "BENCH_SF1.json")
 
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
-
-
-def _round_label() -> str:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return env if env.startswith("r") else f"r{env}"
-    rounds = [int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-              for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))]
-    return f"r{(max(rounds) + 1) if rounds else 1:02d}"
 
 
 def _load_artifact() -> dict:
@@ -90,10 +80,10 @@ def _pick_queries(extra) -> list[str]:
 
 
 def main(argv) -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    reps = int(os.environ.get("SPARK_GRAFT_SF1_REPS", "3"))
+    cpus = harness.cpus()
+    reps = harness.reps()
     gate = cpus / 8.0
-    label = _round_label()
+    label = harness.round_label()
     art = _load_artifact()
 
     la0 = os.getloadavg()[0]
@@ -109,33 +99,12 @@ def main(argv) -> int:
             _save(art)
         return 2
 
-    if not os.path.exists(os.path.join(SF1_DIR, "lineitem.parquet")):
-        log("building .scratch/sf1 via tools/make_sf1.py ...")
-        subprocess.check_call(
-            [sys.executable, os.path.join(REPO, "tools", "make_sf1.py")])
-
+    sf1_dir = harness.built("sf1")
     queries = _pick_queries(argv)
     log(f"round {label}: {len(queries)} queries x {reps} reps at sf1 "
         f"(loadavg {la0:.2f}, gate {gate:.1f})")
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                "1kb")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("xclim-spark-bench-sf1")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = harness.session("xclim-spark-bench-sf1")
     from xclim_spark.queries import build_queries
 
     qs = build_queries()
@@ -144,33 +113,14 @@ def main(argv) -> int:
         log(f"skipping unknown queries: {missing}")
         queries = [n for n in queries if n in qs]
 
-    # warm JVM/parquet footers + Python workers once (same as bench.py)
-    qs["tg_mean_ms"](spark, SF1_DIR).count()
-    spark.range(cpus * 4).withColumn("g", F.col("id") % cpus) \
-        .repartition(cpus, "g").groupBy("g") \
-        .applyInPandas(lambda p: p, schema="id long, g long").count()
-
-    import gc
-
+    harness.warm(spark, qs, sf1_dir)
     t_all0 = time.time()
     timings: dict[str, float] = {}
     floors: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in queries:
-        samples = []
         try:
-            for rep in range(reps + 1):
-                t0 = time.time()
-                qs[name](spark, SF1_DIR).write.format("noop") \
-                    .mode("overwrite").save()
-                dt = time.time() - t0
-                spark.catalog.clearCache()
-                # release py4j refs so ContextCleaner can unpersist
-                # localCheckpoint blocks between reps (they otherwise
-                # squat on unified memory and bill later queries)
-                gc.collect()
-                if rep > 0:
-                    samples.append(dt)
+            samples = harness.timed(spark, qs[name], sf1_dir)
         except Exception as exc:  # one query must not lose the run
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             log(f"{name}: ERROR {errors[name]}")

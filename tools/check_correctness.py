@@ -37,21 +37,15 @@ def norm(v):
 
 
 def main(names):
+    # imported here, not at module level: perfbench loads this file by
+    # path for ``norm`` alone, where ``tools/`` is not on sys.path
     import duckdb
-    from pyspark.sql import SparkSession
+    import harness
 
     import __spark_entry__ as e
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
-        .appName("check")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # bench.py's session, on the 8 cores the correctness gate runs with
+    spark = harness.session("check", 8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

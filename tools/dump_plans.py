@@ -4,14 +4,17 @@ summary (Exchange count, join strategies, Python-eval nodes) per query.
 
 Usage::
 
-    python tools/dump_plans.py r16 before [query ...]
+    python tools/dump_plans.py [tag [suffix [query ...]]]
 
-Builds each query at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-under the same session conf as bench.py, so the captured plans are the
-bench's plans.  Queries whose gate function EXECUTES work during build
-(streaming sinks, iterative trainers) are still captured — the file then
-holds the plan of the returned (materialized) result plus a header
-noting that the compute happened inside the gate body.
+``tag`` defaults to the harness's round label (``$SPARK_GRAFT_ROUND``,
+else one past the newest ``CORRECTNESS_r*.json``), ``suffix`` to
+``before``.  Builds each query at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 tables of TESTDATA.md) in bench.py's session (``tools/harness.py``),
+so the captured plans are the bench's plans.  Queries whose gate function
+EXECUTES work during build (streaming sinks, iterative trainers) are still
+captured — the file then holds the plan of the returned (materialized)
+result plus a header noting that the compute happened inside the gate
+body.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import harness
 
 NODE_RE = re.compile(
     r"\b(Exchange|BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
@@ -31,31 +34,15 @@ NODE_RE = re.compile(
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r16"
+    tag = sys.argv[1] if len(sys.argv) > 1 else harness.round_label()
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", tag)
+    sf_dir = harness.sf_dir()
+    cpus = harness.cpus()
+    outdir = os.path.join(harness.REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                "1kb")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM",
-                                                      "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("xclim-spark-plandump")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("xclim-spark-plandump")
 
     from xclim_spark.queries import build_queries
 

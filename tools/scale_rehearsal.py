@@ -2,12 +2,13 @@
 
 Runs a representative set of scale-critical operators at sf0.1 (the
 driver bench scale), sf1 (10x, ``tools/make_sf1.py``), and sf10 (100x,
-``tools/make_sf1.py 100 sf10``) on the same local[32] harness and
-reports per-query wall-clock plus the sf1 -> sf10 scaling ratio.  Data
-grows exactly 10x between the upper points, so a ratio near (or below)
-10 is linear-or-better scaling; a ratio well above 10 exposes the
-super-linear failure modes this engine is designed to avoid
-(all-pairs joins, skewed keys, driver collects, plan-size blowups).
+``tools/make_sf1.py 100 sf10``) under bench.py's session, warm-up and
+timed loop (``tools/harness.py``) and reports per-query best-rep
+wall-clock plus the sf1 -> sf10 scaling ratio.  Data grows exactly 10x
+between the upper points, so a ratio near (or below) 10 is
+linear-or-better scaling; a ratio well above 10 exposes the
+super-linear failure modes this engine is designed to avoid (all-pairs
+joins, skewed keys, driver collects, plan-size blowups).
 
 Ratios below 10 are common at these absolute sizes — fixed overheads
 (JVM, planning, Python worker pools) amortize with scale — which is
@@ -17,28 +18,19 @@ Writes ``SCALE_r{N}.json`` at the repo root (committed: it is the
 evidence the per-round scale claims point at).
 
 Usage:  python tools/scale_rehearsal.py [query ...]
-Env:    SPARK_GRAFT_CPUS (32), SPARK_GRAFT_SCALE_REPS (2),
-        SPARK_GRAFT_ROUND (inferred like bench_sf1.py)
+Env:    the harness's SPARK_GRAFT_CPUS, SPARK_GRAFT_MEM,
+        SPARK_GRAFT_BENCH_REPS and SPARK_GRAFT_ROUND
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-SCRATCH = os.path.join(REPO, ".scratch")
-POINTS = [
-    ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", os.path.join(SCRATCH, "sf1")),
-    ("sf10", os.path.join(SCRATCH, "sf10")),
-]
+import harness
+from harness import REPO
 
 # one representative per scale-critical family: core resample agg,
 # rolling window, run-length sessionization, stateful Arrow kernel,
@@ -56,72 +48,25 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def _round_label() -> str:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return env if env.startswith("r") else f"r{env}"
-    rounds = [int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-              for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))]
-    return f"r{(max(rounds) + 1) if rounds else 1:02d}"
-
-
 def main(argv) -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
+    cpus = harness.cpus()
+    reps = harness.reps()
     queries = argv or DEFAULT
+    dirs = {"sf0.1": harness.testdata("0.1"), "sf1": harness.built("sf1"),
+            "sf10": harness.built("sf10")}
 
-    if not os.path.exists(os.path.join(SCRATCH, "sf1",
-                                       "lineitem.parquet")):
-        subprocess.check_call(
-            [sys.executable, os.path.join(REPO, "tools", "make_sf1.py")])
-    if not os.path.exists(os.path.join(SCRATCH, "sf10",
-                                       "lineitem.parquet")):
-        log("building .scratch/sf10 (100 reps of sf0.1) ...")
-        subprocess.check_call(
-            [sys.executable, os.path.join(REPO, "tools", "make_sf1.py"),
-             "100", "sf10"])
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("xclim-spark-scale-rehearsal")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = harness.session("xclim-spark-scale-rehearsal")
     from xclim_spark.queries import build_queries
 
     qs = build_queries()
-    # warm JVM + Python worker pool once (not billed to any point)
-    qs["tg_mean_ms"](spark, POINTS[0][1]).count()
-    spark.range(cpus * 4).withColumn("g", F.col("id") % cpus) \
-        .repartition(cpus, "g").groupBy("g") \
-        .applyInPandas(lambda p: p, schema="id long, g long").count()
-
-    import gc
-
+    harness.warm(spark, qs, dirs["sf0.1"])
     results: dict[str, dict] = {}
     la0 = os.getloadavg()[0]
     for name in queries:
         row: dict = {}
-        for label, sf_dir in POINTS:
-            samples = []
+        for label, sf_dir in dirs.items():
             try:
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).write.format("noop") \
-                        .mode("overwrite").save()
-                    samples.append(time.time() - t0)
-                    spark.catalog.clearCache()
-                    gc.collect()
+                samples = harness.timed(spark, qs[name], sf_dir)
             except Exception as exc:
                 row[label] = f"ERROR {type(exc).__name__}"[:80]
                 log(f"{name}@{label}: {row[label]}")
@@ -135,7 +80,7 @@ def main(argv) -> int:
             f"{k}={v}" for k, v in row.items()))
     spark.stop()
 
-    label = _round_label()
+    label = harness.round_label()
     out = os.path.join(REPO, f"SCALE_{label}.json")
     prior = {}
     if os.path.exists(out):
@@ -145,7 +90,7 @@ def main(argv) -> int:
     results = prior
     art = {
         "instrument": "tools/scale_rehearsal.py",
-        "points": {k: "10x replicated keys per step" for k, _ in POINTS},
+        "points": {k: "10x replicated keys per step" for k in dirs},
         "cpus": cpus, "reps": reps, "loadavg_start": round(la0, 2),
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "note": ("x10 = sf10/sf1 wall ratio for a 10x data step; "

@@ -211,70 +211,6 @@ def rolling_gram_hashes(
         _batches, schema=f"{id_col} long, _sh array<long>")
 
 
-def rolling_word_gram_hashes(
-    docs: DataFrame, *, n: int = 3, text_col: str = "text",
-    id_col: str = "_id",
-) -> DataFrame:
-    """Distinct word n-gram hashes per document, fully vectorized
-    (the word-shingle counterpart of :func:`rolling_gram_hashes`):
-
-    1. word hashes — polynomial over each word's bytes with a power
-       LOOKUP by in-word position, summed per word with
-       ``np.add.reduceat`` at the word boundaries;
-    2. gram hashes — the ``n`` consecutive word hashes combined with a
-       second polynomial (per-term products reduced mod 2^31-1 before
-       summing, so nothing overflows int64);
-    3. ``np.unique`` per doc.
-
-    Word splitting matches :func:`word_shingles` (any whitespace run
-    separates words).  Collisions: vocabulary-sized word sets into a
-    31-bit domain — the same regime as :func:`shingle_hashes`."""
-    import numpy as np
-    import pandas as pd
-
-    base = 1_000_003
-    maxw = 256  # words longer than this reuse the last power (still injective-ish)
-    powtab = np.array([pow(base, i, _MERSENNE31) for i in range(maxw)],
-                      dtype=np.int64)
-    C = np.array([pow(base, n - 1 - i, _MERSENNE31) for i in range(n)],
-                 dtype=np.int64)
-
-    def _doc(t):
-        words = _ws_tokens(t)
-        if len(words) < n:
-            return None
-        blob = " ".join(words).encode("utf-8", "surrogatepass")
-        b = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
-        is_sp = b == 32
-        starts = np.flatnonzero(
-            np.concatenate(([True], is_sp[:-1])) & ~is_sp)
-        # in-word position of every byte (0 at word start)
-        idx = np.arange(len(b))
-        start_of = starts[np.searchsorted(starts, idx, side="right") - 1]
-        pos = np.minimum(idx - start_of, maxw - 1)
-        terms = np.where(is_sp, 0, (b * powtab[pos]) % _MERSENNE31)
-        wh = np.add.reduceat(terms, starts) % _MERSENNE31
-        W = np.lib.stride_tricks.sliding_window_view(wh, n)
-        g = ((W * C[None, :]) % _MERSENNE31).sum(axis=1) % _MERSENNE31
-        return np.unique(g)
-
-    def _batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids, out = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                u = _doc(t)
-                if u is None:
-                    continue
-                ids.append(i)
-                out.append(u)
-            yield pd.DataFrame({id_col: ids, "_sh": out})
-
-    return docs.mapInPandas(
-        _batches, schema=f"{id_col} long, _sh array<long>")
-
-
 def near_duplicates(
     docs: DataFrame,
     *,
@@ -286,7 +222,6 @@ def near_duplicates(
     bands: int = 64,
     seed: int = 7,
     parallelism: int | None = None,
-    lazy: bool = False,
     tokenizer=None,
     shingler: str = "expr",
     char_n: int = 5,
@@ -300,6 +235,8 @@ def near_duplicates(
     :func:`ngram_jaccard_pairs` with near-1 recall, and stays efficient
     even on small-vocabulary corpora where prefix filtering cannot prune
     (every document shares its rarest grams with thousands of others).
+    ``shingler="bytes"`` replaces the tokenizer with the vectorized
+    byte ``char_n``-gram hashes of :func:`rolling_gram_hashes`.
 
     Pipeline (each stage one narrow projection or one keyed shuffle):
 
@@ -312,7 +249,8 @@ def near_duplicates(
     With bands=64 x rows=2 the candidate-recall at J=0.6 is
     1-(1-0.36)^64 ~= 1-4e-13, so verified output matches the exact
     all-pairs answer (the DuckDB oracle) while never materializing all
-    pairs.  Returns ``id_a, id_b, jaccard``.
+    pairs.  Returns ``id_a, id_b, jaccard``, ``localCheckpoint``-ed,
+    with the digest cache already released.
 
     ``parallelism``: shingling is compute-dense, so stage parallelism is
     whatever the *scan* provides.  On a real corpus (many files / row
@@ -338,9 +276,6 @@ def near_duplicates(
     if shingler == "bytes":
         base = rolling_gram_hashes(src, n=char_n, text_col=text_col,
                                    id_col="_id").persist()
-    elif shingler == "word_bytes":
-        base = rolling_word_gram_hashes(src, n=n, text_col=text_col,
-                                        id_col="_id").persist()
     else:
         base = src.select(
             "_id",
@@ -380,15 +315,10 @@ def near_duplicates(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if lazy:
-        # caller owns the digest cache: the returned plan reads ``base``
-        # (persisted) twice; call spark.catalog.clearCache() (or keep a
-        # handle via verified.sparkSession) after the last action
-        return verified
-    # Default: materialize the (dup-sized, corpus-bounded) pair table and
-    # release the corpus-sized digest cache before returning, so repeated
-    # library calls don't accumulate cached blocks (the pairs output is
-    # orders of magnitude smaller than the digests that produced it).
+    # Materialize the (dup-sized, corpus-bounded) pair table and release
+    # the corpus-sized digest cache before returning, so repeated library
+    # calls don't accumulate cached blocks (the pairs output is orders of
+    # magnitude smaller than the digests that produced it).
     out = verified.localCheckpoint(eager=True)
     base.unpersist()
     return out

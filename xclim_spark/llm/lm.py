@@ -71,7 +71,6 @@ def lm_train_counts(
     ref: DataFrame,
     *,
     text_col: str = "text",
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Train the bigram stupid-backoff model on the reference corpus:
     returns ``(unigrams, bigrams, scalars)`` DataFrames —
@@ -80,10 +79,8 @@ def lm_train_counts(
     ONE corpus scan: unigrams and bigrams are generated side by side
     inside the projection (tagged by order) and share a single
     groupBy; the vocab-sized counts table is then ``localCheckpoint``
-    -materialized (``materialize=True``) so the three scoring joins —
-    and any re-training caller — never re-explode the reference
-    corpus.  Pass ``materialize=False`` to keep the plan lazy (e.g.
-    when the caller persists explicitly, as the streaming twin does)."""
+    -materialized so the three scoring joins — and any re-training
+    caller — never re-explode the reference corpus."""
     toks = _tokens(text_col)
     base = (ref.where(F.col(text_col).isNotNull())
             .select(toks.alias("_toks")))
@@ -99,9 +96,8 @@ def lm_train_counts(
             F.lit(2).alias("n"), b.alias("g"))),
     )).alias("t"))
         .groupBy(F.col("t.n").alias("n"), F.col("t.g").alias("g"))
-        .agg(F.count(F.lit(1)).alias("c")))
-    if materialize:
-        grams = grams.localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=True))
     uni = grams.where(F.col("n") == 1) \
                .select(F.col("g").alias("w"), F.col("c").alias("cu"))
     big = grams.where(F.col("n") == 2) \

@@ -114,7 +114,6 @@ def percentile_doy(
     alias: str = "per",
     alpha: float = 1 / 3,
     beta: float = 1 / 3,
-    exact: bool = True,
 ) -> DataFrame:
     """Climatological day-of-year percentile (reference calendar.py:396-494).
 
@@ -125,9 +124,7 @@ def percentile_doy(
     ``alpha``/``beta`` select the Hyndman-Fan plotting positions; the
     default 1/3,1/3 (type 8, 'median_unbiased') matches the reference's
     ``percentile_doy``.  ``alpha=beta=1`` (type 7 'linear', numpy/DuckDB
-    default) uses Spark's built-in exact ``percentile``; ``exact=False``
-    downgrades that path to ``approx_percentile`` for the cheap variant at
-    extreme scale.
+    default) uses Spark's built-in exact ``percentile``.
     """
     pers = [per] if isinstance(per, (int, float)) else list(per)
     half = window // 2
@@ -144,8 +141,7 @@ def percentile_doy(
         return alias if len(pers) == 1 else f"{alias}_p{int(round(p * 100))}"
 
     if (alpha, beta) == (1, 1):
-        fn = "percentile" if exact else "approx_percentile"
-        aggs = [F.expr(f"{fn}({var}, {p})").alias(name(p)) for p in pers]
+        aggs = [F.expr(f"percentile({var}, {p})").alias(name(p)) for p in pers]
         return df.groupBy(*cells, "dayofyear").agg(*aggs)
     # HF path: materialize the sorted sample array once per group, then
     # interpolate in a separate projection — ``hf_interp_sorted``

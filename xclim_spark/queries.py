@@ -2843,9 +2843,9 @@ def dedup_fuzzy(spark, sf_dir):
     small = _sf_of(sf_dir) <= 0.01
     docs = _read(spark, sf_dir, "documents")
     # expression shingler: word grams are ~5x fewer elements than char
-    # grams, and the measured vectorized word-gram path (word_bytes) is
-    # pair-identical but slower here (its per-doc boundary indexing costs
-    # more than the JVM saves) — see PLANS.md round-5 notes
+    # grams; a vectorized word-gram shingler was pair-identical but
+    # measured slower here (its per-doc boundary indexing cost more than
+    # the JVM saves) and was removed — see PLANS.md round-5 notes
     out = dd.near_duplicates(
         docs, threshold=0.6,
         num_perm=32 if small else 128, bands=16 if small else 64,
