@@ -879,6 +879,8 @@ def test_kmeans_fit_iters_zero_returns_init(spark):
     cents, counts = kmeans_fit(emb, 2, iters=0, return_counts=True)
     assert np.allclose(cents, [[0.0, 0.0], [1.0, 0.0]])
     assert (counts == 0).all()
+    with pytest.raises(ValueError, match="init"):
+        kmeans_fit(emb, 2, init="random")
 
 
 def test_semantic_dedup_skew_guard_raises(spark):
@@ -1003,33 +1005,6 @@ def test_kmeans_spread_init_beats_first_on_adjacent_ids(spark):
     assert np.array_equal(i_spread, i_again)
     c_again = kmeans_fit(emb.repartition(7), 3, iters=25, init="spread")
     assert np.allclose(c_spread, c_again, atol=1e-9)
-
-
-def test_kmeans_sample_fraction_trains_on_subset(spark):
-    """sample_fraction: Lloyd passes scan a deterministic hash-threshold
-    subset; the codebook still recovers the blob means and is identical
-    across runs."""
-    import numpy as np
-    import pytest as _pt
-
-    from xclim_spark.llm.similarity import kmeans_fit
-
-    rng = np.random.RandomState(43)
-    mus, pts = _three_blobs(rng)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in pts[i]]) for i in range(len(pts))],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
-    c1, n1 = kmeans_fit(emb, 3, iters=25, init="spread",
-                        sample_fraction=0.5, return_counts=True)
-    c2 = kmeans_fit(emb, 3, iters=25, init="spread", sample_fraction=0.5)
-    assert np.array_equal(c1, c2)
-    assert n1.sum() < len(pts)  # the corpus was NOT fully scanned
-    d = np.linalg.norm(c1[:, None, :] - mus[None], axis=2)
-    assert (d.min(axis=1) < 0.5).all()
-    with _pt.raises(ValueError, match="sample_fraction"):
-        kmeans_fit(emb, 3, sample_fraction=1.5)
-    with _pt.raises(ValueError, match="init"):
-        kmeans_fit(emb, 3, init="random")
 
 
 def test_remove_duplicate_spans_cuts_and_keeps(spark):
@@ -1360,25 +1335,36 @@ def _pq_corpus(spark, n=200, dim=16, n_blobs=8, seed=7):
 
 def test_pq_fit_matches_per_subspace_kmeans(spark):
     """The fused one-scan-per-iteration PQ trainer must produce the
-    SAME codebooks as m independent kmeans_fit runs over normalized
-    subspace slices — same init (first ks by id), same Lloyd math."""
+    codebooks of a plain numpy Lloyd loop run on each normalized
+    subspace slice — same init (first ks by id), same empty-code
+    fallback, same stop rule (largest shift over all subspaces
+    <= 1e-6)."""
     import numpy as np
 
-    from xclim_spark.llm.similarity import kmeans_fit, pq_fit
+    from xclim_spark.llm.similarity import pq_fit
 
     df, X = _pq_corpus(spark, n=120, dim=16)
-    m, ks, iters = 4, 8, 3
-    books = pq_fit(df, m=m, ks=ks, iters=iters, tol=0.0)
+    m, ks, iters = 4, 8, 10
+    books = pq_fit(df, m=m, ks=ks, iters=iters)
     assert books.shape == (m, ks, 16 // m)
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    dsub = 16 // m
+    X32 = X.astype(np.float32).astype(np.float64)  # the stored floats
+    Xn = X32 / np.linalg.norm(X32, axis=1, keepdims=True)
+    S = np.stack(np.split(Xn, m, axis=1))  # (m, n, dsub)
+    ref = S[:, :ks].copy()
+    for _ in range(iters):
+        new = ref.copy()
+        for j in range(m):
+            d2 = ((S[j][:, None, :] - ref[j][None]) ** 2).sum(axis=2)
+            a = np.argmin(d2, axis=1)
+            for c in range(ks):
+                if (a == c).any():
+                    new[j, c] = S[j][a == c].mean(axis=0)
+        shift = np.abs(new - ref).max()
+        ref = new
+        if shift <= 1e-6:
+            break
     for j in range(m):
-        sl = spark.createDataFrame(
-            [(i, [float(x) for x in Xn[i, j * dsub:(j + 1) * dsub]])
-             for i in range(len(Xn))],
-            "vec_id LONG, embedding ARRAY<DOUBLE>")
-        ref = kmeans_fit(sl, ks, iters=iters, tol=0.0)
-        assert np.allclose(books[j], ref, atol=1e-9), f"subspace {j}"
+        assert np.allclose(books[j], ref[j], atol=1e-9), f"subspace {j}"
 
 
 def test_pq_encode_codes(spark):
@@ -1975,6 +1961,34 @@ def test_knn_ivfpq_prebuilt_index(spark):
                    for r in via_index))
     with _pytest.raises(ValueError, match="residual=True"):
         knn_ivfpq(docs, q, cents, books, index=idx)
+
+    # shortlist = k: the answer is the ADC top 3, against a numpy
+    # IVFADC where each probed cell's table is built from the query's
+    # residual against THAT cell
+    import numpy as np
+
+    X = np.array([r["embedding"] for r in docs.orderBy("vec_id").collect()])
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    Cn = cents_np / np.linalg.norm(cents_np, axis=1, keepdims=True)
+    cos = Xn @ Cn.T
+    cell = cos.argmax(axis=1)
+    R = Xn - Cn[cell]
+    codes = np.stack(
+        [((R[:, None, 4 * j:4 * j + 4] - books[j][None]) ** 2).sum(axis=2)
+         .argmin(axis=1) for j in range(4)], axis=1)
+    want = set()
+    for qi in range(0, len(X), 40):
+        cand = []
+        for c in np.argsort(-cos[qi], kind="stable")[:3]:
+            r = Xn[qi] - Cn[c]
+            tab = [((r[4 * j:4 * j + 4] - books[j]) ** 2).sum(axis=1)
+                   for j in range(4)]
+            cand += [(sum(tab[j][codes[n, j]] for j in range(4)), n)
+                     for n in np.flatnonzero(cell == c) if n != qi]
+        want |= {(qi, n) for _, n in sorted(cand)[:3]}
+    tight = knn_ivfpq(docs, q, cents, books, k=3, nprobe=3, shortlist=3,
+                      residual=True, index=idx).collect()
+    assert {(r["query_id"], r["neighbor_id"]) for r in tight} == want
 
 
 def test_bloom_verdict_matches_probe(spark):

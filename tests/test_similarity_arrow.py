@@ -472,15 +472,22 @@ def test_semantic_dedup_null_vectors(spark):
     assert any(not keep for _, keep, _ in want.values())
 
 
+def _with_null_id(spark, e):
+    """``e`` plus one far-off vector under a NULL id (an ascending sort
+    puts it first, where it would reach every init)."""
+    return e.unionByName(
+        spark.createDataFrame([(None, [100.0] * 8)], e.schema))
+
+
 @pytest.mark.parametrize("init", ["first", "spread"])
 def test_kmeans_fit_skips_null_vectors(spark, init):
-    """Training ignores NULL vectors: the codebook is the one trained
-    on the frame without them (the NULL row sits among the first k
-    ids, so it would also reach the "first" init)."""
+    """Training ignores NULL vectors and NULL ids: the codebook is the
+    one trained on the frame without them (the NULL-vector row sits
+    among the first k ids, so it would also reach the "first" init)."""
     from xclim_spark.llm.similarity import kmeans_fit
 
     e = _emb_df(spark, n=20, dim=8, nulls=(1, 17))
-    got = kmeans_fit(e, 3, iters=5, init=init)
+    got = kmeans_fit(_with_null_id(spark, e), 3, iters=5, init=init)
     want = kmeans_fit(e.filter("embedding IS NOT NULL"), 3, iters=5,
                       init=init)
     assert np.array_equal(got, want)
@@ -492,7 +499,8 @@ def test_pq_fit_skips_null_vectors(spark):
     e = _emb_df(spark, n=20, dim=8, nulls=(1, 17))
     kept = e.filter("embedding IS NOT NULL")
     for cents in (None, kept.filter("vec_id IN (2, 5)")):
-        got = pq_fit(e, m=2, ks=4, iters=3, centroids=cents)
+        got = pq_fit(_with_null_id(spark, e), m=2, ks=4, iters=3,
+                     centroids=cents)
         want = pq_fit(kept, m=2, ks=4, iters=3, centroids=cents)
         assert np.array_equal(got, want)
 

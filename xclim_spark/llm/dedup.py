@@ -959,7 +959,7 @@ def dedup_paragraphs(
 
 
 def _guard_cluster_skew(
-    asg: DataFrame, max_cluster_size: int, on_oversize: str, kmeans_fit,
+    asg: DataFrame, max_cluster_size: int, on_oversize: str,
 ) -> DataFrame:
     """Enforce :func:`semantic_dedup`'s per-cluster size bound.
 
@@ -973,6 +973,8 @@ def _guard_cluster_skew(
     vectors cannot be separated by any codebook).
     """
     from pyspark.sql.functions import pandas_udf
+
+    from .similarity import _nearest, kmeans_fit
 
     # ONE driver-bounded collect (cluster cardinality <= n_centroids)
     # serves the oversize check AND the fresh-id allocation below
@@ -1014,9 +1016,7 @@ def _guard_cluster_skew(
             m = out == cid
             if m.any():
                 X = np.stack(vs[m].to_numpy()).astype(np.float64)
-                # same expanded squared-euclidean form as kmeans_fit
-                scores = -2.0 * (X @ C.T) + (C * C).sum(axis=1)
-                out[m] = sids[np.argmin(scores, axis=1)]
+                out[m] = sids[_nearest(X, C)]
         return pd.Series(out)
 
     big_ids = list(books)
@@ -1095,7 +1095,7 @@ def semantic_dedup(
     """
     from pyspark.sql.functions import pandas_udf
 
-    from .similarity import _centroid_scorer, _f64_rows, kmeans_fit
+    from .similarity import _centroid_scorer, _f64_rows
 
     if on_oversize not in ("raise", "split"):
         raise ValueError(
@@ -1120,8 +1120,7 @@ def semantic_dedup(
     ).localCheckpoint()
 
     if max_cluster_size is not None:
-        asg = _guard_cluster_skew(
-            asg, max_cluster_size, on_oversize, kmeans_fit)
+        asg = _guard_cluster_skew(asg, max_cluster_size, on_oversize)
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy()

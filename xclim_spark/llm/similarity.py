@@ -408,6 +408,34 @@ def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
     return ids, _scores, vecs
 
 
+def _cell_udfs(cent_ids: np.ndarray, scores, nprobe: int):
+    """The ``(cell, probe_cells)`` pandas UDFs of :func:`knn_ivf` and
+    :func:`knn_ivfpq` over a :func:`_centroid_scorer` codebook: a
+    vector's nearest-cosine centroid id, and its ``nprobe`` nearest."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("bigint")
+    def _cell(vs: pd.Series) -> pd.Series:
+        # np.argmax takes the first maximum -> lowest centroid id
+        return pd.Series(cent_ids[np.argmax(scores(vs), axis=1)])
+
+    # non-deterministic marking (the scorer is in fact reproducible)
+    # stops the optimizer cloning the assignment UDF below the join-key
+    # null filter: the captured plans evaluated _cell TWICE over the
+    # whole corpus (plans/r16/knn_ivf_docs_before.txt, and
+    # knn_ivfpq_docs_before.txt nodes 6+10) — the §4.4 filter-pushdown
+    # duplication, here on the expensive side
+    _cell = _cell.asNondeterministic()
+
+    @pandas_udf("array<bigint>")
+    def _probe_cells(vs: pd.Series) -> pd.Series:
+        # stable argsort of -scores: ties keep ascending centroid order
+        order = np.argsort(-scores(vs), axis=1, kind="stable")
+        return pd.Series(list(cent_ids[order[:, :nprobe]]))
+
+    return _cell, _probe_cells
+
+
 def knn_ivf(
     emb: DataFrame,
     queries: DataFrame,
@@ -443,27 +471,8 @@ def knn_ivf(
     Returns ``query_id, neighbor_id, cos_sim, rank`` (approximate:
     neighbors outside probed cells are unseen, exactly like FAISS IVF).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids_np, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
-
-    @pandas_udf("bigint")
-    def _cell(vs: pd.Series) -> pd.Series:
-        # np.argmax takes the first maximum -> lowest centroid id
-        return pd.Series(cent_ids_np[np.argmax(_scores(vs), axis=1)])
-
-    # non-deterministic marking (the scorer is in fact reproducible)
-    # stops the optimizer cloning the assignment UDF below the join-key
-    # null filter: the captured plan evaluated _cell TWICE over the
-    # whole corpus (plans/r16/knn_ivf_docs_before.txt) — the §4.4
-    # filter-pushdown duplication, here on the expensive side
-    _cell = _cell.asNondeterministic()
-
-    @pandas_udf("array<bigint>")
-    def _probe_cells(vs: pd.Series) -> pd.Series:
-        # stable argsort of -scores: ties keep ascending centroid order
-        order = np.argsort(-_scores(vs), axis=1, kind="stable")
-        return pd.Series(list(cent_ids_np[order[:, :nprobe]]))
+    cent_ids, scores, _ = _centroid_scorer(centroids, id_col, vec_col)
+    _cell, _probe_cells = _cell_udfs(cent_ids, scores, nprobe)
 
     asg = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec"),
@@ -530,243 +539,69 @@ def _spread_init(
     return X[chosen].copy()
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    k: int,
-    *,
-    iters: int = 10,
-    tol: float = 1e-6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    return_counts: bool = False,
-    init: str = "first",
-    sample_fraction: float | None = None,
-    init_sample_cap: int = 8192,
-):
-    """Distributed Lloyd k-means over an embedding column — the
-    training pass that produces the coarse codebook :func:`knn_ivf`
-    and :func:`~xclim_spark.llm.dedup.semantic_dedup` consume.
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of each row of ``X``'s nearest row of ``C`` in squared
+    euclidean distance, ties to the lowest index (``argmin`` takes the
+    first minimum).  ``||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2`` with the
+    per-row constant ``||x||^2`` dropped: one BLAS matmul."""
+    return np.argmin(-2.0 * (X @ C.T) + (C * C).sum(axis=1), axis=1)
+
+
+def _first_by_id(emb: DataFrame, k: int, id_col: str,
+                 vec_col: str) -> np.ndarray:
+    """The first ``k`` vectors by ascending id as a (k, d) matrix — the
+    deterministic Lloyd init, stable across engines and
+    partitionings."""
+    first = [r[1] for r in sorted(
+        (int(r[0]), [float(x) for x in r[1]]) for r in
+        emb.select(id_col, vec_col).orderBy(id_col).limit(k).collect())]
+    if len(first) < k:
+        raise ValueError(f"k={k} exceeds corpus size {len(first)}")
+    return np.asarray(first, dtype=np.float64)
+
+
+def _lloyd(emb: DataFrame, books: np.ndarray, vec_col: str, iters: int,
+           prep=None) -> tuple[np.ndarray, np.ndarray]:
+    """Distributed Lloyd iterations over an ``(m, ks, dsub)`` codebook
+    tensor: k-means run independently on each of ``m`` subspaces of
+    ``dsub`` dims (``m=1`` is plain k-means).  Returns the trained
+    tensor and the final iteration's ``(m, ks)`` code counts (zero when
+    ``iters=0``).
 
     Plan shape per iteration (the classic MapReduce k-means):
 
-    * **assign + partial-reduce map-side**: one ``mapInPandas`` pass
-      computes each Arrow batch's nearest centroid via a BLAS matmul
-      against the broadcast (k x d) codebook, then reduces the batch
-      to at most ``k`` rows of ``(cluster, count, component sums)`` —
-      the corpus itself never shuffles;
-    * **tiny combine**: the per-batch partials (``<= k x batches``
-      rows, k x (d+2) doubles each) collect to the driver and combine
-      in numpy — the same driver-bounded-small-matrix design as
-      ``kmeans_reduce_ensemble``; an empty cluster keeps its previous
-      centroid (the standard Lloyd fallback).
+    * **assign + partial-reduce map-side**: ONE ``mapInPandas`` pass
+      assigns every Arrow batch to its nearest code in all ``m``
+      subspaces (:func:`_nearest`, m small BLAS matmuls against the
+      closure-shipped tensor) and reduces the batch to ``<= m x ks``
+      rows of ``(subspace, code, count, component sums)`` — the corpus
+      itself never shuffles, and it is scanned ``iters`` times
+      whatever ``m`` is;
+    * **tiny combine**: the partials collect to the driver and add up
+      in collected-row order in numpy — the same
+      driver-bounded-small-matrix design as ``kmeans_reduce_ensemble``;
+      an empty code keeps its previous entry (the standard Lloyd
+      fallback).
 
-    Deterministic: with ``init="first"`` (default, the oracle-gated
-    path) the init is the first ``k`` vectors by ascending ``id_col``
-    (stable across engines and partitionings); ``init="spread"`` is a
-    deterministic k-means++-style farthest-first init over a
-    hash-spread sample of ``init_sample_cap`` vectors (see
-    :func:`_spread_init`) — real corpora often store near-duplicates
-    at adjacent ids, exactly the degenerate-cluster input "first"
-    produces.  Assignment ties break to the lowest cluster index
-    (``argmin`` first-minimum on squared euclidean distance), and
-    iteration stops after ``iters`` rounds or when no centroid moves
-    more than ``tol``.
-
-    ``sample_fraction`` bounds the 100-TB fit: when set (0 < f <= 1)
-    every Lloyd pass scans only the rows with
-    ``md5('kmeans|' || id) < hex_threshold(f)`` — the same stateless
-    hash-threshold draw as ``mixture_sample`` (llm/pipeline.py), so
-    the subset is identical every iteration, every run, and on every
-    engine, and the full corpus is scanned zero times instead of
-    ``iters`` times.  Codebook quality degrades only with sampling
-    error (k-means centroids are means — they concentrate fast).
-
-    Rows with a NULL vector take no part in training (neither the init
-    nor any Lloyd pass).
-
-    Returns the (k, d) centroid matrix as numpy — metadata-sized;
-    wrap in ``spark.createDataFrame`` for the ``centroids=`` contract
-    of the consumers.  With ``return_counts=True`` returns
-    ``(centroids, counts)`` where ``counts`` is the final iteration's
-    per-cluster membership (of the SAMPLE when sampling).
-    """
-    if sample_fraction is not None:
-        if not (0.0 < sample_fraction <= 1.0):
-            raise ValueError(
-                f"sample_fraction must be in (0, 1] (got {sample_fraction})")
-        if sample_fraction < 1.0:
-            from .pipeline import hex_threshold, sample_hash
-
-            emb = emb.filter(
-                sample_hash(F.lit("kmeans"), F.col(id_col))
-                < hex_threshold(sample_fraction))
-    emb = emb.where(F.col(vec_col).isNotNull())
-
-    if init == "spread":
-        cents = _spread_init(
-            emb, k, id_col, vec_col, max(init_sample_cap, 2 * k))
-    elif init == "first":
-        first = [r[1] for r in sorted(
-            (int(r[0]), list(r[1])) for r in
-            emb.select(id_col, vec_col).orderBy(id_col).limit(k).collect())]
-        if len(first) < k:
-            raise ValueError(f"k={k} exceeds corpus size {len(first)}")
-        cents = np.asarray(first, dtype=np.float64)
-    else:
-        raise ValueError(
-            f"kmeans_fit: init must be 'first' or 'spread' (got {init!r})")
-    d = cents.shape[1]
-    counts = np.zeros(k)  # stays zero if iters=0 (init codebook only)
-
+    Iteration stops after ``iters`` rounds or once no entry moves more
+    than ``1e-6``.  ``prep`` maps each batch's (n, d) float64 matrix
+    into the trained space first (PQ's normalised / residual space)."""
+    m, ks, dsub = books.shape
+    counts = np.zeros((m, ks))
     for _ in range(iters):
-        C = cents  # rebind: the closure ships THIS iteration's matrix
-
-        def _partials(it, C=C):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; drop ||x||^2
-                # (constant per row) -> argmin of (-2 x.C^T + ||C||^2)
-                scores = -2.0 * (X @ C.T) + (C * C).sum(axis=1)
-                a = np.argmin(scores, axis=1)
-                out = {"cluster": [], "n": [], "s": []}
-                for c in np.unique(a):
-                    m = a == c
-                    out["cluster"].append(int(c))
-                    out["n"].append(int(m.sum()))
-                    out["s"].append([float(v)
-                                     for v in X[m].sum(axis=0)])
-                yield pd.DataFrame(out)
-
-        rows = emb.select(vec_col).mapInPandas(
-            _partials,
-            "cluster int, n long, s array<double>").collect()
-        counts = np.zeros(k)
-        sums = np.zeros((k, d))
-        for r in rows:
-            counts[r["cluster"]] += r["n"]
-            sums[r["cluster"]] += np.asarray(r["s"])
-        new = np.where(counts[:, None] > 0,
-                       sums / np.maximum(counts[:, None], 1), cents)
-        shift = float(np.abs(new - cents).max())
-        cents = new
-        if shift <= tol:
-            break
-    return (cents, counts) if return_counts else cents
-
-
-def _pq_check(dim: int, m: int, ks: int) -> int:
-    if dim % m != 0:
-        raise ValueError(f"pq: dim {dim} not divisible by m={m} subspaces")
-    if not (2 <= ks <= 256):
-        raise ValueError(f"pq: ks must be in [2, 256] (got {ks}) — codes "
-                         "are stored as one byte per subspace")
-    return dim // m
-
-
-def _norm_centroids(centroids: DataFrame, id_col: str, vec_col: str):
-    """Collected, id-sorted, L2-normalized coarse centroid matrix plus
-    the cosine scorer — the residual-PQ helper (residuals live on the
-    unit sphere: r = v/||v|| - c/||c|| of the assigned cell)."""
-    cent_ids, scores, vecs = _centroid_scorer(centroids, id_col, vec_col)
-    norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-    return cent_ids, scores, vecs / np.maximum(norms, 1e-30)
-
-
-def pq_fit(
-    emb: DataFrame,
-    *,
-    m: int = 4,
-    ks: int = 16,
-    iters: int = 10,
-    tol: float = 1e-6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_fraction: float | None = None,
-    centroids: DataFrame | None = None,
-) -> np.ndarray:
-    """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
-    *Product Quantization for Nearest Neighbor Search*, TPAMI): split
-    the d-dim space into ``m`` subspaces of d/m dims and train an
-    independent ``ks``-entry k-means codebook per subspace over the
-    L2-NORMALIZED vectors (so squared-L2 ADC ranks like cosine:
-    ``cos = 1 - ||a-b||^2 / 2`` on the unit sphere).
-
-    One FUSED Lloyd loop: each iteration is a single ``mapInPandas``
-    pass that assigns every Arrow batch to its nearest code in ALL m
-    subspaces (m small BLAS matmuls) and partial-reduces to
-    ``<= m x ks`` rows of (subspace, code, count, component sums) —
-    m separate :func:`kmeans_fit` calls would scan the corpus
-    ``m x iters`` times; this scans it ``iters`` times total,
-    independent of m (and zero times with ``sample_fraction``, the
-    same stateless md5-threshold draw as :func:`kmeans_fit`).
-
-    Deterministic init: subspace slices of the first ``ks`` vectors by
-    ascending id; rows with a NULL vector are skipped, as in
-    :func:`kmeans_fit`.  Empty codes keep their previous entry (standard
-    Lloyd fallback).  Returns the (m, ks, d/m) codebook tensor —
-    metadata-sized (m*ks*(d/m) = ks*d doubles).
-
-    With ``centroids`` (the coarse IVF codebook), codebooks are
-    trained on RESIDUALS ``v/||v|| - c/||c||`` of each vector's
-    assigned cell — Jégou et al.'s actual IVFADC scheme: residuals
-    concentrate near the origin, so the same ks spends its precision
-    on within-cell structure instead of re-coding the cell mean.
-    """
-    if not (2 <= ks <= 256):
-        raise ValueError(f"pq: ks must be in [2, 256] (got {ks}) — codes "
-                         "are stored as one byte per subspace")
-    if sample_fraction is not None:
-        if not (0.0 < sample_fraction <= 1.0):
-            raise ValueError(
-                f"sample_fraction must be in (0, 1] (got {sample_fraction})")
-        if sample_fraction < 1.0:
-            from .pipeline import hex_threshold, sample_hash
-
-            emb = emb.filter(
-                sample_hash(F.lit("pq"), F.col(id_col))
-                < hex_threshold(sample_fraction))
-    emb = emb.where(F.col(vec_col).isNotNull())
-
-    cent = (None if centroids is None
-            else _norm_centroids(centroids, id_col, vec_col))
-
-    def _prep(X: np.ndarray) -> np.ndarray:
-        """Normalize, and subtract the assigned normalized centroid
-        when training residual codebooks."""
-        Xn = X / np.maximum(
-            np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        if cent is None:
-            return Xn
-        _, scores, Cn = cent
-        return Xn - Cn[np.argmax(scores(X), axis=1)]
-
-    first = [r[1] for r in sorted(
-        (int(r[0]), [float(x) for x in r[1]]) for r in
-        emb.select(id_col, vec_col).orderBy(id_col).limit(ks).collect())]
-    if len(first) < ks:
-        raise ValueError(f"ks={ks} exceeds corpus size {len(first)}")
-    X0 = _prep(np.asarray(first, dtype=np.float64))
-    dim = X0.shape[1]
-    dsub = _pq_check(dim, m, ks)
-    books = np.stack([X0[:, j * dsub:(j + 1) * dsub] for j in range(m)])
-
-    for _ in range(iters):
-        B = books  # ship THIS iteration's tensor in the closure
+        B = books  # rebind: the closure ships THIS iteration's tensor
 
         def _partials(it, B=B):
             for pdf in it:
                 if not len(pdf):
                     continue
-                X = _prep(
-                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                if prep is not None:
+                    X = prep(X)
                 out = {"sub": [], "code": [], "n": [], "s": []}
                 for j in range(m):
                     Xj = X[:, j * dsub:(j + 1) * dsub]
-                    Cj = B[j]
-                    scores = -2.0 * (Xj @ Cj.T) + (Cj * Cj).sum(axis=1)
-                    a = np.argmin(scores, axis=1)
+                    a = _nearest(Xj, B[j])
                     for c in np.unique(a):
                         msk = a == c
                         out["sub"].append(j)
@@ -788,9 +623,136 @@ def pq_fit(
                        sums / np.maximum(counts[..., None], 1), books)
         shift = float(np.abs(new - books).max())
         books = new
-        if shift <= tol:
+        if shift <= 1e-6:
             break
-    return books
+    return books, counts
+
+
+def kmeans_fit(
+    emb: DataFrame,
+    k: int,
+    *,
+    iters: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    return_counts: bool = False,
+    init: str = "first",
+):
+    """Distributed Lloyd k-means over an embedding column — the
+    training pass that produces the coarse codebook :func:`knn_ivf`
+    and :func:`~xclim_spark.llm.dedup.semantic_dedup` consume.  One
+    map-side assign + partial-reduce pass and a tiny driver combine
+    per iteration: :func:`_lloyd` with a single subspace.
+
+    Deterministic: with ``init="first"`` (default, the oracle-gated
+    path) the init is the first ``k`` vectors by ascending ``id_col``
+    (stable across engines and partitionings); ``init="spread"`` is a
+    deterministic k-means++-style farthest-first init over a
+    hash-spread sample of ``max(8192, 2k)`` vectors (see
+    :func:`_spread_init`) — real corpora often store near-duplicates
+    at adjacent ids, exactly the degenerate-cluster input "first"
+    produces.  Assignment ties break to the lowest cluster index, and
+    iteration stops after ``iters`` rounds or when no centroid moves
+    more than ``1e-6``.
+
+    Rows with a NULL vector or a NULL id take no part in training
+    (neither the init nor any Lloyd pass).
+
+    Returns the (k, d) centroid matrix as numpy — metadata-sized;
+    wrap in :func:`~xclim_spark.util.local_frame` for the
+    ``centroids=`` contract of the consumers.  With
+    ``return_counts=True`` returns ``(centroids, counts)`` where
+    ``counts`` is the final iteration's per-cluster membership.
+    """
+    emb = emb.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+    if init == "spread":
+        cents = _spread_init(emb, k, id_col, vec_col, max(8192, 2 * k))
+    elif init == "first":
+        cents = _first_by_id(emb, k, id_col, vec_col)
+    else:
+        raise ValueError(
+            f"kmeans_fit: init must be 'first' or 'spread' (got {init!r})")
+    books, counts = _lloyd(emb, cents[None], vec_col, iters)
+    return (books[0], counts[0]) if return_counts else books[0]
+
+
+def _norm_centroids(centroids: DataFrame, id_col: str, vec_col: str):
+    """Collected, id-sorted, L2-normalized coarse centroid matrix plus
+    the cosine scorer — the residual-PQ helper (residuals live on the
+    unit sphere: r = v/||v|| - c/||c|| of the assigned cell)."""
+    cent_ids, scores, vecs = _centroid_scorer(centroids, id_col, vec_col)
+    norms = np.linalg.norm(vecs, axis=1, keepdims=True)
+    return cent_ids, scores, vecs / np.maximum(norms, 1e-30)
+
+
+def _pq_space(X: np.ndarray, cent=None, idx=None):
+    """The space PQ codes live in: the rows of ``X`` unit-normalised
+    and, with a :func:`_norm_centroids` codebook ``cent``, minus their
+    cell's normalised centroid — the assigned (nearest-cosine) cell, or
+    row ``idx`` of the id-sorted codebook when given (an ADC table's
+    probed cell).  Returns ``(cell ids or None, vectors)``; training,
+    encoding and the ADC tables all go through here, so codes always
+    match their codebooks."""
+    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    if cent is None:
+        return None, Xn
+    ids, scores, Cn = cent
+    if idx is None:
+        idx = np.argmax(scores(X), axis=1)
+    return ids[idx], Xn - Cn[idx]
+
+
+def pq_fit(
+    emb: DataFrame,
+    *,
+    m: int = 4,
+    ks: int = 16,
+    iters: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids: DataFrame | None = None,
+) -> np.ndarray:
+    """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
+    *Product Quantization for Nearest Neighbor Search*, TPAMI): split
+    the d-dim space into ``m`` subspaces of d/m dims and train an
+    independent ``ks``-entry k-means codebook per subspace over the
+    L2-NORMALIZED vectors (so squared-L2 ADC ranks like cosine:
+    ``cos = 1 - ||a-b||^2 / 2`` on the unit sphere).
+
+    One FUSED Lloyd loop (:func:`_lloyd`): each iteration is a single
+    map-side pass over all m subspaces — m separate :func:`kmeans_fit`
+    calls would scan the corpus ``m x iters`` times; this scans it
+    ``iters`` times total, independent of m.
+
+    Deterministic init: subspace slices of the first ``ks`` vectors by
+    ascending id; rows with a NULL vector or a NULL id are skipped, as
+    in :func:`kmeans_fit`.  Empty codes keep their previous entry
+    (standard Lloyd fallback).  Returns the (m, ks, d/m) codebook
+    tensor — metadata-sized (m*ks*(d/m) = ks*d doubles).
+
+    With ``centroids`` (the coarse IVF codebook), codebooks are
+    trained on RESIDUALS ``v/||v|| - c/||c||`` of each vector's
+    assigned cell — Jégou et al.'s actual IVFADC scheme: residuals
+    concentrate near the origin, so the same ks spends its precision
+    on within-cell structure instead of re-coding the cell mean.
+    """
+    if not (2 <= ks <= 256):
+        raise ValueError(f"pq: ks must be in [2, 256] (got {ks}) — codes "
+                         "are stored as one byte per subspace")
+    emb = emb.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+    cent = (None if centroids is None
+            else _norm_centroids(centroids, id_col, vec_col))
+
+    def _prep(X: np.ndarray) -> np.ndarray:
+        return _pq_space(X, cent)[1]
+
+    X0 = _prep(_first_by_id(emb, ks, id_col, vec_col))
+    dim = X0.shape[1]
+    if dim % m != 0:
+        raise ValueError(f"pq: dim {dim} not divisible by m={m} subspaces")
+    dsub = dim // m
+    books = np.stack([X0[:, j * dsub:(j + 1) * dsub] for j in range(m)])
+    return _lloyd(emb, books, vec_col, iters, _prep)[0]
 
 
 def pq_encode(
@@ -823,21 +785,10 @@ def pq_encode(
             else _norm_centroids(centroids, id_col, vec_col))
 
     def _encode_np(X: np.ndarray):
-        Xn = X / np.maximum(
-            np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        cells = None
-        if cent is not None:
-            ids, scores, Cn = cent
-            a = np.argmax(scores(X), axis=1)
-            cells = ids[a]
-            Xn = Xn - Cn[a]
-        cols = []
-        for j in range(m):
-            Xj = Xn[:, j * dsub:(j + 1) * dsub]
-            Cj = B[j]
-            sc = -2.0 * (Xj @ Cj.T) + (Cj * Cj).sum(axis=1)
-            cols.append(np.argmin(sc, axis=1).astype(np.int16))
-        return cells, np.stack(cols, axis=1)
+        cells, R = _pq_space(X, cent)
+        return cells, np.stack(
+            [_nearest(R[:, j * dsub:(j + 1) * dsub], B[j]).astype(np.int16)
+             for j in range(m)], axis=1)
 
     if cent is None:
         @pandas_udf("array<smallint>")
@@ -931,62 +882,35 @@ def knn_ivfpq(
             "centroids=); probing it requires residual=True")
     m, ks, dsub = codebooks.shape
     B = codebooks
-    cent_ids_np, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
+    cent = _norm_centroids(centroids, id_col, vec_col)
+    cent_ids, scores, _ = cent
+    _cell, _probe_cells = _cell_udfs(cent_ids, scores, nprobe)
 
-    @pandas_udf("bigint")
-    def _cell(vs: pd.Series) -> pd.Series:
-        return pd.Series(cent_ids_np[np.argmax(_scores(vs), axis=1)])
-
-    # same §4.4 guard as knn_ivf._cell: `cell` is the candidate-join
-    # key, and without this the pushed isnotnull(cell) filter cloned
-    # the corpus-side centroid assignment below itself — every corpus
-    # vector paid the matmul + Arrow round-trip twice
-    # (plans/r16/knn_ivfpq_docs_before.txt, nodes 6+10)
-    _cell = _cell.asNondeterministic()
-
-    @pandas_udf("array<bigint>")
-    def _probe_cells(vs: pd.Series) -> pd.Series:
-        order = np.argsort(-_scores(vs), axis=1, kind="stable")
-        return pd.Series(list(cent_ids_np[order[:, :nprobe]]))
+    def _adc_tables(R: np.ndarray) -> pd.Series:
+        # flattened (m*ks) table per row: entry j*ks+c = ||r_j -
+        # B[j][c]||^2 in the PQ space (_pq_space)
+        if not len(R):
+            return pd.Series([], dtype=object)
+        tabs = np.empty((len(R), m * ks))
+        for j in range(m):
+            Rj = R[:, j * dsub:(j + 1) * dsub]
+            Cj = B[j]
+            tabs[:, j * ks:(j + 1) * ks] = (
+                (Rj * Rj).sum(axis=1, keepdims=True)
+                - 2.0 * (Rj @ Cj.T) + (Cj * Cj).sum(axis=1))
+        return pd.Series(list(tabs))
 
     @pandas_udf("array<double>")
     def _adc_table(vs: pd.Series) -> pd.Series:
-        # flattened (m*ks) table: entry j*ks+c = ||q_j - B[j][c]||^2 in
-        # the normalized space
-        if not len(vs):
-            return pd.Series([], dtype=object)
-        Q = _f64_rows(vs, m * dsub)
-        Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-        tabs = np.empty((len(Q), m * ks))
-        for j in range(m):
-            Qj = Q[:, j * dsub:(j + 1) * dsub]
-            Cj = B[j]
-            tabs[:, j * ks:(j + 1) * ks] = (
-                (Qj * Qj).sum(axis=1, keepdims=True)
-                - 2.0 * (Qj @ Cj.T) + (Cj * Cj).sum(axis=1))
-        return pd.Series(list(tabs))
+        return _adc_tables(_pq_space(_f64_rows(vs, m * dsub))[1])
 
     if residual:
-        _, _, Cn = _norm_centroids(centroids, id_col, vec_col)
-        ids_sorted = cent_ids_np  # _centroid_scorer sorts by id
-
         @pandas_udf("array<double>")
         def _adc_table_res(vs: pd.Series, cells: pd.Series) -> pd.Series:
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            Q = _f64_rows(vs, m * dsub)
-            Q /= np.maximum(
-                np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-            idx = np.searchsorted(ids_sorted, cells.to_numpy())
-            R = Q - Cn[idx]
-            tabs = np.empty((len(R), m * ks))
-            for j in range(m):
-                Rj = R[:, j * dsub:(j + 1) * dsub]
-                Cj = B[j]
-                tabs[:, j * ks:(j + 1) * ks] = (
-                    (Rj * Rj).sum(axis=1, keepdims=True)
-                    - 2.0 * (Rj @ Cj.T) + (Cj * Cj).sum(axis=1))
-            return pd.Series(list(tabs))
+            # the probed cell's row in the id-sorted codebook
+            idx = np.searchsorted(cent_ids, cells.to_numpy())
+            return _adc_tables(
+                _pq_space(_f64_rows(vs, m * dsub), cent, idx)[1])
 
         if index is not None:
             # pre-built (id, pq_cell, pq_codes) index — the streaming

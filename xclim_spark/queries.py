@@ -40,6 +40,26 @@ def _centroid_frame(spark: SparkSession, cents) -> DataFrame:
                        "vec_id LONG, embedding ARRAY<DOUBLE>")
 
 
+def _ivf_cells(spark: SparkSession, e: DataFrame) -> DataFrame:
+    """The trained-index gates' coarse IVF codebook: 10 cells after one
+    Lloyd step from the first 10 vectors by id."""
+    from .llm.similarity import kmeans_fit
+
+    return _centroid_frame(spark, kmeans_fit(e, 10, iters=1))
+
+
+def _ivfpq_train(spark: SparkSession, e: DataFrame,
+                 residual: bool = False):
+    """``(cells, codebooks)`` of the IVF-PQ gates: :func:`_ivf_cells`
+    and 8 x 16-code PQ codebooks after two Lloyd steps, trained on the
+    residuals against the cells when ``residual``."""
+    from .llm.similarity import pq_fit
+
+    cents = _ivf_cells(spark, e)
+    return cents, pq_fit(e, m=8, ks=16, iters=2,
+                         centroids=cents if residual else None)
+
+
 def _sf_of(sf_dir: str) -> float:
     """Scale factor parsed from the directory name (``.../sf0.01`` ->
     0.01); unknown layouts count as full scale."""
@@ -5335,14 +5355,27 @@ def knn_ivf_trained_docs(spark, sf_dir):
     in principle flip an assignment between engines.  The probe ranks
     by cosine rounded to 6 dp, which absorbs the fp noise; only an
     exact tie (measure-zero for real embeddings) could diverge."""
-    from .llm.similarity import kmeans_fit, knn_ivf
+    from .llm.similarity import knn_ivf
 
     e = _read(spark, sf_dir, "embeddings")
-    cents_np = kmeans_fit(e, 10, iters=1)
-    cents = _centroid_frame(spark, cents_np)
+    cents = _ivf_cells(spark, e)
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivf(e, q, cents, k=5, nprobe=2)
     return out.withColumn("cos_sim", F.round("cos_sim", 6))
+
+
+def _ivfpq_blobs(df: DataFrame) -> DataFrame:
+    """The IVF-PQ gates' 50-blob decoration of ``(vec_id, embedding)``
+    rows (see :func:`knn_ivfpq_docs`; ``_IVFPQ_BRUTE_SQL`` restates
+    it), batch or streaming."""
+    vid = F.col("vec_id")
+    return df.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x, i: x + ((((vid % 50) * 7 + i * 13) % 53)
+                              % 11 - 5).cast("double"),
+        ).alias("embedding"))
 
 
 # Exact brute-force cosine top-5 on the decorated vectors — the shared
@@ -5391,21 +5424,11 @@ def knn_ivfpq_docs(spark, sf_dir):
     separately in tests/test_llm.py (the dedup_fuzzy pattern: an
     honest recall number, plus an exactness gate where exactness is
     expected)."""
-    from .llm.similarity import kmeans_fit, knn_ivfpq, pq_fit
+    from .llm.similarity import knn_ivfpq
 
-    e0 = _read(spark, sf_dir, "embeddings")
-    vid = F.col("vec_id")
-    e = e0.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x, i: x + ((((vid % 50) * 7 + i * 13) % 53)
-                              % 11 - 5).cast("double"),
-        ).alias("embedding"))
-    cents_np = kmeans_fit(e, 10, iters=1)
-    cents = _centroid_frame(spark, cents_np)
-    books = pq_fit(e, m=8, ks=16, iters=2)
-    q = e.filter(vid % 100 == 0)
+    e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
+    cents, books = _ivfpq_train(spark, e)
+    q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
         .withColumn("rank", F.col("rank").cast("long"))
@@ -5423,21 +5446,11 @@ def knn_ivfpq_fixedq_docs(spark, sf_dir):
     axes; this gate isolates the per-10x-CORPUS exponent (VERDICT r14
     ask #6).  Same blob decoration and brute-force oracle as
     knn_ivfpq_docs."""
-    from .llm.similarity import kmeans_fit, knn_ivfpq, pq_fit
+    from .llm.similarity import knn_ivfpq
 
-    e0 = _read(spark, sf_dir, "embeddings")
-    vid = F.col("vec_id")
-    e = e0.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x, i: x + ((((vid % 50) * 7 + i * 13) % 53)
-                              % 11 - 5).cast("double"),
-        ).alias("embedding"))
-    cents_np = kmeans_fit(e, 10, iters=1)
-    cents = _centroid_frame(spark, cents_np)
-    books = pq_fit(e, m=8, ks=16, iters=2)
-    q = e.filter(vid < 400)
+    e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
+    cents, books = _ivfpq_train(spark, e)
+    q = e.filter(F.col("vec_id") < 400)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
               .withColumn("rank", F.col("rank").cast("long"))
@@ -5492,21 +5505,11 @@ def knn_ivfpq_res_docs(spark, sf_dir):
     ADC tables, exact-cosine re-rank of the shortlist.  Same decorated
     blobs and brute-force oracle as knn_ivfpq_docs; tight-parameter
     recall (residual >= plain) is measured in tests/test_llm.py."""
-    from .llm.similarity import kmeans_fit, knn_ivfpq, pq_fit
+    from .llm.similarity import knn_ivfpq
 
-    e0 = _read(spark, sf_dir, "embeddings")
-    vid = F.col("vec_id")
-    e = e0.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x, i: x + ((((vid % 50) * 7 + i * 13) % 53)
-                              % 11 - 5).cast("double"),
-        ).alias("embedding"))
-    cents_np = kmeans_fit(e, 10, iters=1)
-    cents = _centroid_frame(spark, cents_np)
-    books = pq_fit(e, m=8, ks=16, iters=2, centroids=cents)
-    q = e.filter(vid % 100 == 0)
+    e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
+    cents, books = _ivfpq_train(spark, e, residual=True)
+    q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40,
                     residual=True)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
@@ -8947,30 +8950,17 @@ def stream_knn_ingest(spark, sf_dir):
     import shutil
     import uuid
 
-    from .llm.similarity import kmeans_fit, knn_ivfpq, pq_encode, pq_fit
+    from .llm.similarity import knn_ivfpq, pq_encode
 
-    vid = F.col("vec_id")
-
-    def _deco(df):
-        return df.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x, i: x + ((((vid % 50) * 7 + i * 13) % 53)
-                                  % 11 - 5).cast("double"),
-            ).alias("embedding"))
-
-    e = _deco(_read(spark, sf_dir, "embeddings"))
-    cents_np = kmeans_fit(e, 10, iters=1)
-    cents = _centroid_frame(spark, cents_np)
-    books = pq_fit(e, m=8, ks=16, iters=2, centroids=cents)
+    e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
+    cents, books = _ivfpq_train(spark, e, residual=True)
 
     root = _stage_stream_embs(sf_dir)
     sdf = (spark.readStream
            .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
            .option("maxFilesPerTrigger", 1)
            .parquet(f"{root}/part_*.parquet"))
-    enc = pq_encode(_deco(sdf), books, centroids=cents) \
+    enc = pq_encode(_ivfpq_blobs(sdf), books, centroids=cents) \
         .select("vec_id", "pq_cell", "pq_codes")
 
     idx_dir = f"/tmp/xclim_spark_stream_knn_{uuid.uuid4().hex}"
@@ -9005,7 +8995,7 @@ def stream_knn_ingest(spark, sf_dir):
             f"streamed PQ index diverges from batch encode: "
             f"{n_idx} vs {n_b} rows, {n_diff} mismatching")
 
-    qv = e.filter(vid % 100 == 0)
+    qv = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, qv, cents, books, k=5, nprobe=4, shortlist=40,
                     residual=True, index=index)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
