@@ -13,12 +13,13 @@ cloud-storage source — only ``readStream`` options change):
   keyed by deterministic cell-hash blocks; the per-cell time-order
   contract and the fixed-``num_blocks`` checkpoint contract are both
   ENFORCED (violations raise instead of corrupting the recursion);
-* **production sink** — per-day outputs fold to (cell, month) PARTIAL
-  aggregates inside ``foreachBatch`` and land in parquet
-  executor-side; nothing corpus-sized ever reaches the driver, the
-  partials recombine exactly with one small batch query, and each
-  micro-batch OVERWRITES its own ``b<batch_id>`` subdir, so the
-  at-least-once replay after a checkpoint restart is idempotent;
+* **production sink** — ``streaming.run`` folds each micro-batch's
+  per-day outputs to (cell, month) PARTIAL aggregates and keeps them as
+  executor-side checkpoints keyed by batch id; nothing corpus-sized
+  ever reaches the driver, the partials recombine exactly with one
+  small batch query, and a replayed micro-batch OVERWRITES its own
+  batch id, so the at-least-once replay after a checkpoint restart is
+  idempotent;
 * **bounded-state dedup** — ``streaming_dedup_keys`` evicts a key's
   state once the event-time watermark passes it + delay, so an
   always-on ingest dedup service holds (arrival rate x window) state,
@@ -28,9 +29,7 @@ cloud-storage source — only ``readStream`` options change):
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -42,6 +41,7 @@ def main(sf_dir: str) -> None:
     from xclim_spark import session
     from xclim_spark.queries import _stage_stream_daily
     from xclim_spark.streaming import (
+        run,
         streaming_cffwis,
         streaming_dedup_keys,
     )
@@ -74,27 +74,17 @@ def main(sf_dir: str) -> None:
                            season_method="WF93", overwintering=True,
                            outputs=("fwi",), num_blocks=8)
 
-    agg_dir = f"/tmp/streaming_example_{uuid.uuid4().hex}"
-    os.makedirs(agg_dir, exist_ok=True)
+    # each micro-batch folds to (cell, month) partials, kept executor-side
     valid = F.col("fwi").isNotNull() & ~F.isnan("fwi")
 
-    # foreachBatch is at-least-once: overwrite a batch_id-keyed subdir
-    # so a replayed batch lands idempotently instead of double-appending
-    def fold(batch_df, bid):
-        (batch_df.groupBy(
+    def fold(batch):
+        return (batch.groupBy(
             "cell",
             F.to_date(F.date_trunc("month", "ts")).alias("period"))
-         .agg(F.max(F.when(valid, F.col("fwi"))).alias("fwi_max_p"),
-              F.sum(valid.cast("long")).alias("days_p"))
-         .write.mode("overwrite").parquet(f"{agg_dir}/b{bid}"))
+            .agg(F.max(F.when(valid, F.col("fwi"))).alias("fwi_max_p"),
+                 F.sum(valid.cast("long")).alias("days_p")))
 
-    q = (fwi.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    monthly = (spark.read
-               .schema("cell BIGINT, period DATE, fwi_max_p DOUBLE, "
-                       "days_p BIGINT")
-               .option("recursiveFileLookup", "true").parquet(agg_dir)
+    monthly = (run(fwi, fold=fold)
                .groupBy("cell", "period")
                .agg(F.max("fwi_max_p").alias("fwi_max"),
                     F.sum("days_p").alias("season_days")))
@@ -110,15 +100,10 @@ def main(sf_dir: str) -> None:
                         F.to_date(F.date_trunc("month", "ts"))))
     firsts = streaming_dedup_keys(sdf2, ["cell", "period"],
                                   time="ts", delay="90 days")
-    q2 = (firsts.select("cell", "period")
-          .writeStream.format("memory").queryName("firsts")
-          .outputMode("append").trigger(availableNow=True).start())
-    q2.awaitTermination()
-    n_keys = spark.table("firsts").count()
+    n_keys = run(firsts.select("cell", "period")).count()
 
     print(f"monthly fire-weather rows : {n_months}")
     print(f"first-sighting keys       : {n_keys}")
-    shutil.rmtree(agg_dir, ignore_errors=True)
     spark.stop()
 
 

@@ -132,3 +132,16 @@ def test_every_bench_headline_name_resolves():
 
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing, f"HEADLINE names without a query: {missing}"
+
+
+def test_no_memory_sink_in_package():
+    """Streaming results run through ``streaming.run``'s executor-side
+    checkpoints; a ``memory`` sink would collect every micro-batch to the
+    driver."""
+    import re
+
+    pat = re.compile(r"""\.format\(\s*["']memory["']\s*\)""")
+    hits = [p for p in glob.glob(os.path.join(REPO, "xclim_spark", "**",
+                                              "*.py"), recursive=True)
+            if pat.search(open(p).read())]
+    assert not hits, f"memory sinks in: {hits}"

@@ -1,7 +1,9 @@
 """Structured Streaming operator tests: file source -> memory sink with
-availableNow trigger (deterministic micro-batches)."""
+availableNow trigger (deterministic micro-batches), and the
+``streaming.run`` helper every streaming gate ends with."""
 
 import datetime as dt
+import os
 import time as _time
 
 import pytest
@@ -998,3 +1000,106 @@ def test_streaming_near_dedup_num_blocks_checkpoint_guard(
         _run(6)
     _write("c.parquet", range(20, 22))
     _run(4)  # documented-safe restart
+
+
+def test_run_complete_returns_last_state(spark, tmp_path):
+    """complete mode: every micro-batch re-emits the whole table, so
+    streaming.run keeps the last one — the state, not a sum of states."""
+    from xclim_spark.streaming import run
+
+    base = dt.datetime(2000, 1, 1, 12)
+    path = _two_ordered_files(
+        tmp_path, [(1, base, 1.0), (2, base, 2.0)],
+        [(1, base + dt.timedelta(days=1), 3.0)], ["cell", "time", "tas"])
+    sdf = (spark.readStream.schema("cell LONG, time TIMESTAMP, tas DOUBLE")
+           .option("maxFilesPerTrigger", 1).parquet(path))
+    out = run(sdf.groupBy("cell").agg(F.count(F.lit(1)).alias("n"),
+                                      F.sum("tas").alias("s")),
+              mode="complete")
+    assert sorted(map(tuple, out.collect())) == [(1, 2, 4.0), (2, 1, 2.0)]
+
+
+def test_run_append_keeps_no_data_batch(spark, tmp_path, caplog):
+    """append mode unions every micro-batch: the day-0 window closes only
+    in the no-data batch that follows the watermark advance, and it must
+    be in the result.  One log record per batch carries its progress."""
+    import logging
+
+    from xclim_spark.streaming import run
+
+    caplog.set_level(logging.INFO, logger="xclim_spark.streaming")
+    base = dt.datetime(2000, 1, 1, 12)
+    path = _two_ordered_files(
+        tmp_path, [(1, base, 1.0)],
+        [(1, base + dt.timedelta(days=10), 2.0)], ["cell", "time", "tas"])
+    sdf = (spark.readStream.schema("cell LONG, time TIMESTAMP, tas DOUBLE")
+           .option("maxFilesPerTrigger", 1).parquet(path)
+           .withWatermark("time", "1 hour"))
+    agg = sdf.groupBy(F.window("time", "1 day")).agg(
+        F.sum("tas").alias("s"))
+    rows = run(agg).collect()
+    assert [(r["window"]["start"].day, r["s"]) for r in rows] == [(1, 1.0)]
+    recs = [r for r in caplog.records if r.name == "xclim_spark.streaming"]
+    assert [r.input_rows for r in recs] == [1, 1, 0]
+    assert [r.batch_id for r in recs] == [0, 1, 2]
+    assert recs[-1].watermark is not None
+
+
+def test_run_empty_source_returns_typed_empty_frame(spark, tmp_path):
+    from xclim_spark.streaming import run
+
+    p = tmp_path / "empty"
+    p.mkdir()
+    sdf = spark.readStream.schema("cell LONG, tas DOUBLE").parquet(str(p))
+    out = run(sdf.select("cell", (F.col("tas") * 2).alias("t2")))
+    assert out.count() == 0
+    assert out.schema == sdf.select(
+        "cell", (F.col("tas") * 2).alias("t2")).schema
+    folded = run(sdf, fold=lambda b: b.groupBy("cell").count())
+    assert folded.columns == ["cell", "count"] and folded.count() == 0
+
+
+def test_run_failure_restores_conf_and_stops_query(spark, tmp_path):
+    """A query that fails mid-replay (the out-of-order input of
+    test_streaming_spell_events_rejects_out_of_order) re-raises from
+    streaming.run, with the shuffle-partition conf restored and no query
+    left running."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from xclim_spark.streaming import run, streaming_spell_events
+
+    base = dt.datetime(2000, 1, 1, 12)
+    rows1 = [(1, base + dt.timedelta(days=i), 30.0) for i in range(3)]
+    rows2 = [(1, base + dt.timedelta(days=1), 30.0)]
+    path = _two_ordered_files(tmp_path, rows1, rows2,
+                              ["cell", "time", "tas"])
+    sdf = (spark.readStream.schema("cell LONG, time TIMESTAMP, tas DOUBLE")
+           .option("maxFilesPerTrigger", 1).parquet(path))
+    out = streaming_spell_events(sdf, "tas", ">", 25.0, min_length=2)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(StreamingQueryException, match="out-of-order"):
+        run(out, state_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []
+
+
+def test_stream_events_table_logs_every_batch(spark, caplog):
+    """stream_events_table replays one staged file per micro-batch; the
+    run logs one record per file, each with its state operator's rows."""
+    import glob
+    import logging
+    from pathlib import Path
+
+    from perfbench.inputs import scale_dir
+    from xclim_spark.queries import _stage_stream_daily, stream_events_table
+
+    sf = str(scale_dir(Path(__file__).parents[1] / "TESTDATA.md", "0.01"))
+    if not os.path.isdir(sf):
+        pytest.skip("driver testdata not present")
+    caplog.set_level(logging.INFO, logger="xclim_spark.streaming")
+    stream_events_table(spark, sf)
+    recs = [r for r in caplog.records if r.name == "xclim_spark.streaming"]
+    files = glob.glob(f"{_stage_stream_daily(sf)}/part_*.parquet")
+    assert len(recs) == len(files) == 5
+    assert all(len(r.num_rows_total) == 1 for r in recs)
+    assert recs[-1].num_rows_total[0] > 0

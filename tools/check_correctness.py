@@ -36,21 +36,50 @@ def norm(v):
     return str(v)
 
 
+def oracle_db(sf_dir: str = SF_DIR):
+    """A DuckDB connection with every table of ``sf_dir`` as a view."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def mismatches(spark_rows, spark_cols, duck_rows, duck_cols) -> list[str]:
+    """How a collected Spark result differs from a DuckDB one as a row
+    set: row count, column names in any order, or the sorted ``norm``
+    values.  ``duck_rows`` are tuples in ``duck_cols`` order.  Empty when
+    the two match."""
+    msgs = []
+    if len(spark_rows) != len(duck_rows):
+        msgs.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
+    cols = sorted(spark_cols)
+    if cols != sorted(duck_cols):
+        msgs.append(f"schema spark={cols} duck={sorted(duck_cols)}")
+    if msgs:
+        return msgs
+    sset = sorted(tuple(norm(r[c]) for c in cols) for r in spark_rows)
+    dmap = {c: i for i, c in enumerate(duck_cols)}
+    dset = sorted(tuple(norm(r[dmap[c]]) for c in cols) for r in duck_rows)
+    if sset != dset:
+        diff = [(a, b) for a, b in zip(sset, dset) if a != b][:3]
+        msgs.append(f"values differ, first diffs: {diff}")
+    return msgs
+
+
 def main(names):
     # imported here, not at module level: perfbench loads this file by
     # path for ``norm`` alone, where ``tools/`` is not on sys.path
-    import duckdb
     import harness
 
     import __spark_entry__ as e
 
     # bench.py's session, on the 8 cores the correctness gate runs with
     spark = harness.session("check", 8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_db()
 
     qs = e.queries()
     os_ = e.oracle_sql()
@@ -62,7 +91,6 @@ def main(names):
         try:
             sdf = qs[name](spark, SF_DIR)
             spark_rows = sdf.collect()
-            spark_cols = sorted(sdf.columns)
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {ex}")
             n_fail += 1
@@ -73,33 +101,14 @@ def main(names):
             continue
         try:
             res = con.execute(os_[name])
-            duck_cols = sorted(d[0] for d in res.description)
+            duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {ex}")
             n_fail += 1
             continue
-        ok = True
-        msgs = []
-        if len(spark_rows) != len(duck_rows):
-            ok = False
-            msgs.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if spark_cols != duck_cols:
-            ok = False
-            msgs.append(f"schema spark={spark_cols} duck={duck_cols}")
-        if ok:
-            sset = sorted(
-                tuple(norm(r[c]) for c in spark_cols) for r in spark_rows
-            )
-            dmap = {d[0]: i for i, d in enumerate(res.description)}
-            dset = sorted(
-                tuple(norm(r[dmap[c]]) for c in duck_cols) for r in duck_rows
-            )
-            if sset != dset:
-                ok = False
-                diff = [(a, b) for a, b in zip(sset, dset) if a != b][:3]
-                msgs.append(f"values differ, first diffs: {diff}")
-        if ok:
+        msgs = mismatches(spark_rows, sdf.columns, duck_rows, duck_cols)
+        if not msgs:
             print(f"PASS {name} ({len(spark_rows)} rows, {time.time()-t0:.1f}s)")
             n_pass += 1
         else:

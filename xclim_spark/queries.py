@@ -15,7 +15,6 @@ driver's value-hash comparison is robust to summation-order ULPs.
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -5757,29 +5756,37 @@ def ens_weighted_percentiles_ms(spark, sf_dir):
 
 
 
-_STREAM_SEQ = [0]
+_DAILY = "cell BIGINT, ts TIMESTAMP, qty DOUBLE"
+_DOCS = "doc_id BIGINT, ts TIMESTAMP, text STRING"
 
 
-@contextmanager
-def _stream_state_partitions(spark, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` down for a streaming gate.
+def _staged(prefix: str, key: str, build: Callable) -> str:
+    """The directory ``/tmp/xclim_spark_{prefix}_{md5(key)[:10]}``,
+    filled once by ``build(con, root)`` over a fresh DuckDB connection
+    and then marked ``_done``, so later calls (and later processes) reuse
+    it — the staging of every replayed streaming input."""
+    import hashlib
+    import os
 
-    A Structured Streaming query pins its STATE partition count from
-    this conf at first trigger, and every micro-batch then pays a fixed
-    per-partition cost (state-store open/commit + one Arrow round-trip
-    per ``applyInPandas*`` partition) regardless of row volume.  The
-    local gates replay a handful of micro-batches over ~10^3 keys, so 32
-    state partitions are pure overhead — 8 keeps every core busy at
-    gate scale while quartering the per-batch fixed cost.  Production
-    streams should NOT inherit this: the helper restores the session
-    conf on exit, and a real deployment sizes state partitions to the
-    cluster (they are fixed for the life of the checkpoint)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    tag = hashlib.md5(key.encode()).hexdigest()[:10]
+    root = f"/tmp/xclim_spark_{prefix}_{tag}"
+    done = os.path.join(root, "_done")
+    if not os.path.exists(done):
+        import duckdb
+
+        os.makedirs(root, exist_ok=True)
+        build(duckdb.connect(), root)
+        open(done, "w").close()
+    return root
+
+
+def _replay(spark, root: str, schema: str) -> DataFrame:
+    """The staged ``part_*.parquet`` files under ``root`` as a file
+    stream, one file per micro-batch; FileStreamSource orders them by
+    mtime, i.e. in the order they were staged."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{root}/part_*.parquet"))
 
 
 @_register(
@@ -5798,12 +5805,13 @@ def stream_tx_days_above_30d(spark, sf_dir):
     lineitem parquet is read as a FILE STREAM, the
     streaming_threshold_count operator (watermark + tumbling 30-day
     window, xclim_spark/streaming/spells.py) aggregates it micro-batch
-    by micro-batch under Trigger.AvailableNow into a memory sink, and
-    the sink table is the result.  Windows are epoch-aligned 30-day
-    buckets (Spark's tumbling-window semantics), which the oracle
+    by micro-batch under Trigger.AvailableNow (streaming.run), and the
+    last complete-mode micro-batch is the result.  Windows are
+    epoch-aligned 30-day buckets (Spark's tumbling-window semantics),
+    which the oracle
     reproduces with integer day arithmetic — so the streaming engine's
     answer is hash-checked against SQL like every batch query."""
-    from .streaming.spells import streaming_threshold_count
+    from .streaming import run, streaming_threshold_count
 
     schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
     sdf = (
@@ -5821,23 +5829,11 @@ def stream_tx_days_above_30d(spark, sf_dir):
     agg = streaming_threshold_count(
         sdf, "l_quantity", ">", 30.0, "MS", time="ts", cells=["cell"],
         watermark="1 day", alias="n_above")
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_txda_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink).select(
+    return run(agg, mode="complete").select(
         "cell",
         F.to_date(F.col("period.start")).alias("period"),
         "n_above",
-    ).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    )
 
 
 def _stage_stream_daily(sf_dir: str) -> str:
@@ -5850,17 +5846,7 @@ def _stage_stream_daily(sf_dir: str) -> str:
     through the carried state) while halving the per-batch fixed cost
     of the replay — seam coverage needs several boundaries, not one
     per year."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/xclim_spark_streamev3_{tag}"
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        import duckdb
-
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
+    def build(con, root):
         con.execute(
             f"""CREATE VIEW daily AS
                 SELECT CAST(l_suppkey AS BIGINT) AS cell,
@@ -5888,8 +5874,8 @@ def _stage_stream_daily(sf_dir: str) -> str:
                              -1.0 AS qty
                       FROM (SELECT DISTINCT cell FROM daily))
                 TO '{root}/part_zzz_flush.parquet' (FORMAT PARQUET)""")
-        open(done, "w").close()
-    return root
+
+    return _staged("streamev3", sf_dir, build)
 
 
 @_register(
@@ -5906,8 +5892,8 @@ JOIN (SELECT cell, run_id, sum(qty) AS s
 )
 def stream_events_table(spark, sf_dir):
     """Streaming ``find_events``: the daily series is staged to one
-    parquet file PER YEAR plus a trailing below-threshold sentinel
-    file, streamed one file per micro-batch
+    parquet file per two-year span plus a trailing below-threshold
+    sentinel file, streamed one file per micro-batch
     (``maxFilesPerTrigger=1``), and sessionized by the
     ``applyInPandasWithState`` spell machine
     (streaming/spells.py:streaming_spell_events) — so events genuinely
@@ -5916,48 +5902,17 @@ def stream_events_table(spark, sf_dir):
     is hash-checked against the batch run-length oracle over the same
     rows (reference ``find_events``, run_length.py:1760-1901) — the
     streaming/batch parity gate round 5 asked for."""
-    root = _stage_stream_daily(sf_dir)
+    from .streaming import run, streaming_spell_events
 
-    from .streaming.spells import streaming_spell_events
-
-    sdf = (spark.readStream
-           .schema("cell BIGINT, ts TIMESTAMP, qty DOUBLE")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_daily(sf_dir), _DAILY)
     ev = streaming_spell_events(sdf, "qty", ">", 30.0, min_length=1,
                                 time="ts", cell="cell")
-    # production sink shape: foreachBatch writes each micro-batch's
-    # event rows to parquet EXECUTOR-side — nothing corpus-sized ever
-    # ships to the driver (the old memory sink did).  foreachBatch is
-    # at-least-once: every batch OVERWRITES its own batch_id-keyed
-    # subdir, so a batch replayed after a checkpoint restart lands
-    # idempotently instead of double-appending event rows.
-    import os
-    import shutil
-    import uuid
-
-    ev_dir = f"/tmp/xclim_spark_stream_ev_{uuid.uuid4().hex}"
-    os.makedirs(ev_dir, exist_ok=True)
-
-    def _sink(batch_df, bid):
-        batch_df.write.mode("overwrite").parquet(f"{ev_dir}/b{bid}")
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (ev.writeStream.foreachBatch(_sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        out = (spark.read.schema(ev.schema)
-               .option("recursiveFileLookup", "true").parquet(ev_dir)
-               .select(
-                   "cell",
-                   F.to_date("event_start").alias("event_start"),
-                   "event_length",
-                   F.round("event_sum", 4).alias("event_sum"),
-               ).localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(ev_dir, ignore_errors=True)
-    return out
+    return run(ev).select(
+        "cell",
+        F.to_date("event_start").alias("event_start"),
+        "event_length",
+        F.round("event_sum", 4).alias("event_sum"),
+    )
 
 
 @_register(
@@ -5983,13 +5938,9 @@ def stream_fwi_ms(spark, sf_dir):
     hash-checked against the independently-orchestrated golden — the
     streaming twin round 9's verdict named as the one missing stateful
     family."""
-    from .streaming.fire import streaming_cffwis
+    from .streaming import run, streaming_cffwis
 
-    root = _stage_stream_daily(sf_dir)
-    sdf = (spark.readStream
-           .schema("cell BIGINT, ts TIMESTAMP, qty DOUBLE")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_daily(sf_dir), _DAILY)
     # qty-only met synthesis (replay files carry no price column); the
     # amplified tas makes WF93 start/stop fire repeatedly so the carried
     # automaton state is genuinely exercised.  qty=-1 is the staged
@@ -6001,7 +5952,7 @@ def stream_fwi_ms(spark, sf_dir):
            .withColumn("hurs", F.least(F.lit(99.0), 30.0 + F.col("qty")))
            .withColumn("ws", 5.0 + F.col("qty") / 2.0))
     # unlike the row-light spell/session gates (8 state partitions, the
-    # _stream_state_partitions default), the CFFWIS kernel is CPU-heavy:
+    # streaming.run default), the CFFWIS kernel is CPU-heavy:
     # measured at sf0.1, 16 partitions x 32 FAT blocks run it ~2x faster
     # than 8 x 64 — fatter blocks amortize the per-day numpy ops over
     # 2x the cells, and the extra partitions keep cores busy through
@@ -6010,49 +5961,23 @@ def stream_fwi_ms(spark, sf_dir):
                            ws="ws", lat=47.0, time="ts", cell="cell",
                            season_method="WF93", overwintering=True,
                            outputs=("fwi",), num_blocks=32)
-    # production sink shape: fold each micro-batch to (cell, month)
-    # PARTIAL aggregates inside foreachBatch and write those to
-    # parquet — the corpus-sized per-day table never leaves the
-    # executors (the old memory sink shipped all of it to the driver;
-    # it dominated the gate at sf1).  max/sum partials recombine
-    # exactly even if a month ever straddled a batch seam, and each
-    # batch OVERWRITES its own batch_id-keyed subdir so an
-    # at-least-once replay after a checkpoint restart cannot
-    # double-count season_days.
-    import os
-    import shutil
-    import uuid
-
-    agg_dir = f"/tmp/xclim_spark_stream_fwi_{uuid.uuid4().hex}"
-    os.makedirs(agg_dir, exist_ok=True)
-    # off-season days carry NaN codes (pandas NaN -> NaN double, not
+    # fold each micro-batch to (cell, month) PARTIAL aggregates, so the
+    # corpus-sized per-day table never leaves the executors; max/sum
+    # partials recombine exactly even if a month straddles a batch seam.
+    # Off-season days carry NaN codes (pandas NaN -> NaN double, not
     # NULL, through the Arrow state path) — valid must check both
     valid = F.col("fwi").isNotNull() & ~F.isnan("fwi")
 
-    def _fold(batch_df, bid):
-        (batch_df.groupBy(
-            "cell",
-            F.to_date(F.date_trunc("month", "ts")).alias("period"))
-         .agg(F.max(F.when(valid, F.col("fwi"))).alias("fwi_max_p"),
+    def fold(batch):
+        return batch.groupBy(
+            "cell", F.to_date(F.date_trunc("month", "ts")).alias("period")
+        ).agg(F.max(F.when(valid, F.col("fwi"))).alias("fwi_max_p"),
               F.sum(valid.cast("long")).alias("season_days_p"))
-         .write.mode("overwrite").parquet(f"{agg_dir}/b{bid}"))
 
-    try:
-        with _stream_state_partitions(spark, 16):
-            q = (fwi.writeStream.foreachBatch(_fold)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        out = (spark.read
-               .schema("cell BIGINT, period DATE, fwi_max_p DOUBLE, "
-                       "season_days_p BIGINT")
-               .option("recursiveFileLookup", "true").parquet(agg_dir)
-               .groupBy("cell", "period")
-               .agg(F.round(F.max("fwi_max_p"), 6).alias("fwi_max"),
-                    F.sum("season_days_p").alias("season_days"))
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(agg_dir, ignore_errors=True)
-    return out
+    return (run(fwi, fold=fold, state_partitions=16)
+            .groupBy("cell", "period")
+            .agg(F.round(F.max("fwi_max_p"), 6).alias("fwi_max"),
+                 F.sum("season_days_p").alias("season_days")))
 
 
 @_register(
@@ -6076,31 +6001,24 @@ def stream_p90_days_over(spark, sf_dir):
     against the batch p90_days_over_ys oracle.  At scale the static
     side refreshes independently of the stream and the join stays
     map-side."""
+    from .streaming import run
+
     root = _stage_stream_daily(sf_dir)
     per = (daily_series(spark, sf_dir).groupBy("cell")
            .agg(F.expr("percentile(qty, 0.9)").alias("p90")))
     # no per-file trigger here: this gate tests the stream-static JOIN,
     # not batch seams (the spell/session gates cover those), and
     # complete mode re-emits all state per trigger — one batch suffices
-    sdf = (spark.readStream
-           .schema("cell BIGINT, ts TIMESTAMP, qty DOUBLE")
+    sdf = (spark.readStream.schema(_DAILY)
            .parquet(f"{root}/part_*.parquet")
            .filter(F.col("qty") >= 0))  # drop the marked sentinel rows
     j = sdf.join(F.broadcast(per), on="cell")
     agg = (j.groupBy("cell", F.year("ts").alias("yr"))
            .agg(F.sum((F.col("qty") > F.col("p90")).cast("long"))
                 .alias("days_over")))
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_p90_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
-    out = spark.table(sink).select(
+    return run(agg, mode="complete").select(
         "cell", F.make_date("yr", F.lit(1), F.lit(1)).alias("period"),
-        "days_over").localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+        "days_over")
 
 
 @_register(
@@ -6133,17 +6051,10 @@ def stream_user_sessions(spark, sf_dir):
     advances the global watermark so every real session flushes.  The
     closed-session table is hash-checked against the batch lag-cumsum
     sessionization oracle — same start, count and sum per session."""
-    import hashlib
-    import os
+    from .streaming import run
+    from .streaming.sessions import streaming_sessionize
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/xclim_spark_streamsess_{tag}"
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        import duckdb
-
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
+    def build(con, root):
         con.execute(
             f"""CREATE VIEW ev AS
                 SELECT CAST(user_id AS BIGINT) AS user_id,
@@ -6164,29 +6075,15 @@ def stream_user_sessions(spark, sf_dir):
                              max(ts) + INTERVAL 2 HOUR AS ts,
                              0.0 AS value FROM ev)
                 TO '{root}/part_zzz_flush.parquet' (FORMAT PARQUET)""")
-        open(done, "w").close()
 
-    from .streaming.sessions import streaming_sessionize
-
-    sdf = (spark.readStream
-           .schema("user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _staged("streamsess", sf_dir, build),
+                  "user_id BIGINT, ts TIMESTAMP, value DOUBLE")
     sess = streaming_sessionize(sdf, keys=["user_id"], time="ts",
                                 gap="30 minutes", watermark="10 minutes",
                                 value="value")
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_sessions_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (sess.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    out = (spark.table(sink).filter(F.col("user_id") >= 0)
-           .select("user_id", "sess_start", "n_events",
-                   F.round("total_value", 6).alias("total_value"))
-           .localCheckpoint(eager=True))
-    spark.catalog.dropTempView(sink)
-    return out
+    return (run(sess).filter(F.col("user_id") >= 0)
+            .select("user_id", "sess_start", "n_events",
+                    F.round("total_value", 6).alias("total_value")))
 
 
 @_register(
@@ -7614,27 +7511,14 @@ def stream_dedup_watermark(spark, sf_dir):
     key set (the eviction/re-emit semantics are pinned by
     tests/test_streaming.py).  Only key columns project, so the
     engine-chosen survivor row cannot leak nondeterminism."""
-    from .streaming.dedup import streaming_dedup_keys
+    from .streaming import run, streaming_dedup_keys
 
-    root = _stage_stream_daily(sf_dir)
-    sdf = (spark.readStream
-           .schema("cell BIGINT, ts TIMESTAMP, qty DOUBLE")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet")
+    sdf = (_replay(spark, _stage_stream_daily(sf_dir), _DAILY)
            .filter(F.col("qty") >= 0)  # drop the flush sentinel
            .withColumn("period", F.to_date(F.date_trunc("month", "ts"))))
     out = streaming_dedup_keys(sdf, ["cell", "period"], time="ts",
                                delay="3650 days")
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_dedup_wm_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (out.select("cell", "period")
-             .writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    res = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return res
+    return run(out.select("cell", "period"))
 
 
 @_register(
@@ -7647,9 +7531,11 @@ FROM documents GROUP BY 1""",
 def stream_dedup_exact(spark, sf_dir):
     """Exact dedup as a STREAMING aggregation: the documents table is
     read as a file stream, the content-hash groupBy runs micro-batch by
-    micro-batch under Trigger.AvailableNow into a memory sink, and the
-    sink must hash-match the batch oracle — the same code path an
-    always-on ingest dedup service would run."""
+    micro-batch under Trigger.AvailableNow (streaming.run), and the last
+    complete-mode micro-batch must hash-match the batch oracle — the
+    same code path an always-on ingest dedup service would run."""
+    from .streaming import run
+
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     sdf = (
         spark.readStream.schema(schema)
@@ -7660,19 +7546,7 @@ def stream_dedup_exact(spark, sf_dir):
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_dedup_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (
-            sdf.writeStream.format("memory").queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    return run(sdf, mode="complete")
 
 
 @_register(
@@ -7722,28 +7596,15 @@ def stream_dedup_url(spark, sf_dir):
     batches under Trigger.AvailableNow.  The oracle restates the full
     normalization in SQL over the same seeded table."""
     from .llm.urls import canonicalize_url
+    from .streaming import run
 
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
     agg = (sdf.select("doc_id", _seed_url_col().alias("url"))
            .select("doc_id", canonicalize_url("url").alias("canon_url"))
            .groupBy("canon_url")
            .agg(F.min("doc_id").alias("keep_id"),
                 F.count(F.lit(1)).alias("dup_count")))
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_dedup_url_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    return run(agg, mode="complete")
 
 
 @_register(
@@ -7781,47 +7642,24 @@ def stream_decontam(spark, sf_dir):
     decontam_docs: the corpus replays as micro-batches; each batch
     joins the STATIC source catalog (stream-static), drops benchmark
     rows, and runs the word-8-gram overlap check against the static
-    eval set inside an idempotent batch-keyed foreachBatch sink (a
-    document's grams all live in its own micro-batch, so the per-doc
-    verdict is exact — the stream_dedup_fuzzy sink contract).  The
-    oracle is the batch decontamination restated in SQL."""
-    import os
-    import shutil
-    import uuid
-
+    eval set as each micro-batch's fold in streaming.run (a document's
+    grams all live in its own micro-batch, so the per-doc verdict is
+    exact — the stream_dedup_fuzzy sink contract).  The oracle is the
+    batch decontamination restated in SQL."""
     from .llm import pipeline as pl
+    from .streaming import run
 
-    root = _stage_stream_docs(sf_dir)
     static = _read(spark, sf_dir, "documents")
     is_bench = F.col("source").isin("src0", "src1")
     bench = static.filter(is_bench).select("doc_id", "text")
     srcmap = static.select("doc_id", "source")
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
-    fold_dir = f"/tmp/xclim_spark_stream_decon_{uuid.uuid4().hex}"
-    os.makedirs(fold_dir, exist_ok=True)
 
-    def _fold(batch_df, bid):
-        d = (batch_df.join(srcmap, on="doc_id")
+    def fold(batch):
+        d = (batch.join(srcmap, on="doc_id")
              .filter(~is_bench).select("doc_id", "text"))
-        (pl.decontaminate(d, bench, n=8)
-         .write.mode("overwrite").parquet(f"{fold_dir}/b{bid}"))
+        return pl.decontaminate(d, bench, n=8)
 
-    try:
-        with _stream_state_partitions(spark):
-            q = (sdf.writeStream.foreachBatch(_fold)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        res = (spark.read
-               .schema("doc_id BIGINT, total_grams BIGINT, "
-                       "dirty_grams BIGINT, contaminated BOOLEAN")
-               .option("recursiveFileLookup", "true").parquet(fold_dir)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(fold_dir, ignore_errors=True)
-    return res
+    return run(_replay(spark, _stage_stream_docs(sf_dir), _DOCS), fold=fold)
 
 
 @_register(
@@ -7849,14 +7687,11 @@ def stream_mixture_sample(spark, sf_dir):
     stream-static and only the per-source audit aggregate carries
     state.  Oracle = the batch sampler restated in SQL."""
     from .llm.pipeline import mixture_sample
+    from .streaming import run
 
-    root = _stage_stream_docs(sf_dir)
     srcmap = _read(spark, sf_dir, "documents") \
         .select("doc_id", "source", "n_chars")
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
     samp = mixture_sample(
         sdf.select("doc_id").join(srcmap, on="doc_id"),
         {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.125},
@@ -7864,17 +7699,7 @@ def stream_mixture_sample(spark, sf_dir):
     agg = (samp.groupBy("source")
            .agg(F.count(F.lit(1)).alias("n_kept"),
                 F.sum("n_chars").alias("chars_kept")))
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_mix_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    return run(agg, mode="complete")
 
 
 @_register(
@@ -7930,12 +7755,9 @@ def stream_text_quality(spark, sf_dir):
     =1) so both verdicts occur; the oracle restates the rules in
     batch SQL over the same table."""
     from .llm.text import gopher_quality_flags
+    from .streaming import run
 
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
     flags = gopher_quality_flags(
         F.col("text"), min_words=25, min_required_hits=1)
     agg = (sdf.select(flags["keep"].alias("keep"),
@@ -7943,17 +7765,7 @@ def stream_text_quality(spark, sf_dir):
            .groupBy("keep")
            .agg(F.count(F.lit(1)).alias("n_docs"),
                 F.sum("n_words").alias("words_total")))
-    _STREAM_SEQ[0] += 1
-    sink = f"_stream_quality_{_STREAM_SEQ[0]}"
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    return run(agg, mode="complete")
 
 
 def _stage_stream_docs(sf_dir: str) -> str:
@@ -7972,18 +7784,11 @@ def _stage_stream_docs(sf_dir: str) -> str:
     corpus through the same 4 giant batches makes in-batch state
     O(corpus/4), which measures the replay harness, not the operator's
     O(rate x window) bound."""
-    import hashlib
     import os
 
     nfiles = max(int(os.environ.get("XCLIM_SPARK_STREAM_FILES", "4")), 1)
-    tag = hashlib.md5(f"{sf_dir}|{nfiles}".encode()).hexdigest()[:10]
-    root = f"/tmp/xclim_spark_streamdocs_{tag}"
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        import duckdb
 
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
+    def build(con, root):
         for k in range(nfiles):
             con.execute(
                 f"""COPY (SELECT doc_id,
@@ -7996,8 +7801,8 @@ def _stage_stream_docs(sf_dir: str) -> str:
                                 FROM '{sf_dir}/documents.parquet')
                           WHERE q = {k + 1} ORDER BY doc_id)
                     TO '{root}/part_{k}.parquet' (FORMAT PARQUET)""")
-        open(done, "w").close()
-    return root
+
+    return _staged("streamdocs", f"{sf_dir}|{nfiles}", build)
 
 
 @_register(
@@ -8043,47 +7848,24 @@ def stream_dedup_fuzzy(spark, sf_dir):
     such id (eviction/re-emit and the bucket-skew guard are pinned by
     tests/test_streaming.py).  Signature width is corpus-scaled
     exactly like dedup_fuzzy (recall argument in its docstring).  The
-    per-doc fold runs executor-side in an idempotent batch-keyed
-    foreachBatch sink — a doc's band rows all live in its own
-    micro-batch, so the per-batch fold is exact."""
-    import os
-    import shutil
-    import uuid
+    per-doc fold is each micro-batch's fold in streaming.run — a doc's
+    band rows all live in its own micro-batch, so the per-batch fold is
+    exact."""
+    from .streaming import run, streaming_near_dedup
 
-    from .streaming.dedup import streaming_near_dedup
-
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
     small = _sf_of(sf_dir) <= 0.01
     out = streaming_near_dedup(
         sdf, delay="3650 days", threshold=0.6,
         num_perm=32 if small else 128, bands=16 if small else 64)
 
-    fold_dir = f"/tmp/xclim_spark_stream_ndd_{uuid.uuid4().hex}"
-    os.makedirs(fold_dir, exist_ok=True)
+    def fold(batch):
+        return (batch.groupBy("doc_id")
+                .agg(F.min("dup_of").alias("dup_of"))
+                .select("doc_id", F.col("dup_of").isNull().alias("keep"),
+                        "dup_of"))
 
-    def _fold(batch_df, bid):
-        (batch_df.groupBy("doc_id")
-         .agg(F.min("dup_of").alias("dup_of"))
-         .select("doc_id", F.col("dup_of").isNull().alias("keep"),
-                 "dup_of")
-         .write.mode("overwrite").parquet(f"{fold_dir}/b{bid}"))
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (out.writeStream.foreachBatch(_fold)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        res = (spark.read
-               .schema("doc_id BIGINT, keep BOOLEAN, dup_of BIGINT")
-               .option("recursiveFileLookup", "true").parquet(fold_dir)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(fold_dir, ignore_errors=True)
-    return res
+    return run(out, fold=fold)
 
 
 @_register(
@@ -8907,17 +8689,7 @@ def _stage_stream_embs(sf_dir: str) -> str:
     """Stage the embeddings table as four parquet files in vec_id order
     (built once per sf and cached) — the replay substrate of the
     streaming ANN-ingest gate."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/xclim_spark_streamembs_{tag}"
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        import duckdb
-
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
+    def build(con, root):
         for k in range(4):
             con.execute(
                 f"""COPY (SELECT vec_id, embedding
@@ -8927,8 +8699,8 @@ def _stage_stream_embs(sf_dir: str) -> str:
                                 FROM '{sf_dir}/embeddings.parquet')
                           WHERE q = {k + 1} ORDER BY vec_id)
                     TO '{root}/part_{k}.parquet' (FORMAT PARQUET)""")
-        open(done, "w").close()
-    return root
+
+    return _staged("streamembs", sf_dir, build)
 
 
 @_register("stream_knn_ingest", _IVFPQ_BRUTE_SQL)
@@ -8939,46 +8711,23 @@ def stream_knn_ingest(spark, sf_dir):
     coarse-assigned, and residual-PQ-coded INSIDE the micro-batch scan
     (codebooks ride the Arrow UDF closure — the encode needs ZERO
     streaming state, which is exactly why hash-assignment encoding is
-    the right ingest design), and the batch-keyed idempotent
-    foreachBatch sink accretes the (id, cell, m-byte codes) index
+    the right ingest design), and streaming.run's batch-keyed
+    checkpoints accrete the (id, cell, m-byte codes) index
     executor-side.  The gate then (a) asserts the replayed index is
     row-identical to the batch pq_encode of the same corpus, and
     (b) probes the ingested index with knn_ivfpq(index=) — the result
     must match the exact brute-force oracle (recall 1.0 at gate
     parameters, same contract as knn_ivfpq_docs)."""
-    import os
-    import shutil
-    import uuid
-
     from .llm.similarity import knn_ivfpq, pq_encode
+    from .streaming import run
 
     e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
     cents, books = _ivfpq_train(spark, e, residual=True)
 
-    root = _stage_stream_embs(sf_dir)
-    sdf = (spark.readStream
-           .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
-    enc = pq_encode(_ivfpq_blobs(sdf), books, centroids=cents) \
-        .select("vec_id", "pq_cell", "pq_codes")
-
-    idx_dir = f"/tmp/xclim_spark_stream_knn_{uuid.uuid4().hex}"
-    os.makedirs(idx_dir, exist_ok=True)
-
-    def _sink(batch_df, bid):
-        batch_df.write.mode("overwrite").parquet(f"{idx_dir}/b{bid}")
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (enc.writeStream.foreachBatch(_sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        index = (spark.read.schema(enc.schema)
-                 .option("recursiveFileLookup", "true").parquet(idx_dir)
-                 .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(idx_dir, ignore_errors=True)
+    sdf = _replay(spark, _stage_stream_embs(sf_dir),
+                  "vec_id BIGINT, embedding ARRAY<FLOAT>")
+    index = run(pq_encode(_ivfpq_blobs(sdf), books, centroids=cents)
+                .select("vec_id", "pq_cell", "pq_codes"))
 
     # ingest/batch identity: the accreted index must BE the batch
     # encode, row for row.  localCheckpoint the batch encode so the
@@ -9012,13 +8761,10 @@ def stream_dedup_bloom(spark, sf_dir):
     document is probed map-side inside the micro-batch scan — no join,
     no shuffle, and ZERO streaming state (the filter never changes
     during the run; RefinedWeb's crawl-vs-previous-crawls design).
-    The idempotent batch-keyed foreachBatch sink accretes per-doc
-    verdicts; the oracle is the same bit-arithmetic restatement."""
-    import os
-    import shutil
-    import uuid
-
+    streaming.run's batch-keyed checkpoints accrete per-doc verdicts;
+    the oracle is the same bit-arithmetic restatement."""
     from .llm import bloom as bl
+    from .streaming import run
 
     d = _read(spark, sf_dir, "documents")
     keys = d.where((F.col("doc_id") % 3 == 0)
@@ -9029,34 +8775,12 @@ def stream_dedup_bloom(spark, sf_dir):
                        num_hashes=_BLOOM_K),
         num_bits=_BLOOM_M).first()["bloom"]
 
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
-    out_s = sdf.select(
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
+    return run(sdf.select(
         "doc_id",
         bl.bloom_verdict(
             F.md5("text"), dense, num_bits=_BLOOM_M,
-            num_hashes=_BLOOM_K).alias("maybe_seen"))
-
-    v_dir = f"/tmp/xclim_spark_stream_bloom_{uuid.uuid4().hex}"
-    os.makedirs(v_dir, exist_ok=True)
-
-    def _sink(batch_df, bid):
-        batch_df.write.mode("overwrite").parquet(f"{v_dir}/b{bid}")
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (out_s.writeStream.foreachBatch(_sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        out = (spark.read.schema("doc_id BIGINT, maybe_seen BOOLEAN")
-               .option("recursiveFileLookup", "true").parquet(v_dir)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(v_dir, ignore_errors=True)
-    return out
+            num_hashes=_BLOOM_K).alias("maybe_seen")))
 
 
 @_register("stream_tokenizer_counts", _bpe_sql(10, encode=True))
@@ -9070,57 +8794,20 @@ def stream_tokenizer_counts(spark, sf_dir):
     pipeline keeps per-source token budgets exact while the crawl is
     still arriving.  Oracle: the same full in-SQL training + count
     restatement as the batch gate."""
-    import os
-    import shutil
-    import uuid
-
     from .llm import tokenizer as tok
+    from .streaming import run
 
     d = _read(spark, sf_dir, "documents")
     merges = tok.bpe_train(d, num_merges=10)
-
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
-    enc = tok.bpe_encode_counts(sdf, merges)
-
-    c_dir = f"/tmp/xclim_spark_stream_bpe_{uuid.uuid4().hex}"
-    os.makedirs(c_dir, exist_ok=True)
-
-    def _sink(batch_df, bid):
-        batch_df.write.mode("overwrite").parquet(f"{c_dir}/b{bid}")
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (enc.writeStream.foreachBatch(_sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        out = (spark.read
-               .schema("doc_id BIGINT, n_words BIGINT, n_tokens BIGINT")
-               .option("recursiveFileLookup", "true").parquet(c_dir)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(c_dir, ignore_errors=True)
-    return out
+    sdf = _replay(spark, _stage_stream_docs(sf_dir), _DOCS)
+    return run(tok.bpe_encode_counts(sdf, merges))
 
 
 
 def _stage_jsonl_docs(sf_dir: str) -> str:
     """Stage the documents table as four GZIP JSONL files (built once
     per sf and cached) — the pretraining interchange format."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/xclim_spark_jsonldocs_{tag}"
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        import duckdb
-
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
+    def build(con, root):
         for k in range(4):
             con.execute(
                 f"""COPY (SELECT doc_id, source, text
@@ -9131,8 +8818,8 @@ def _stage_jsonl_docs(sf_dir: str) -> str:
                           WHERE q = {k + 1} ORDER BY doc_id)
                     TO '{root}/part_{k}.jsonl.gz'
                     (FORMAT JSON, COMPRESSION GZIP)""")
-        open(done, "w").close()
-    return root
+
+    return _staged("jsonldocs", sf_dir, build)
 
 
 @_register(
@@ -9266,15 +8953,12 @@ def stream_lm_quality(spark, sf_dir):
     localCheckpoints the vocab-sized counts table, so per-batch joins
     read cached blocks instead of re-exploding the reference corpus),
     and each micro-batch's documents score through batch-mode joins
-    against it inside the sink.  No corpus-global bucketing —
+    against it in streaming.run's fold.  No corpus-global bucketing —
     an ingest filter compares against FIXED thresholds; the gate
-    emits the raw scores and the idempotent batch-keyed sink accretes
+    emits the raw scores and the batch-keyed checkpoints accrete
     them."""
-    import os
-    import shutil
-    import uuid
-
     from .llm.lm import lm_broadcast_model, lm_score, lm_train_counts
+    from .streaming import run
 
     d = _read(spark, sf_dir, "documents")
     ref = d.where(F.col("source").isin("src0", "src1"))
@@ -9287,39 +8971,18 @@ def stream_lm_quality(spark, sf_dir):
     # over-budget model returns None and each batch keeps the join path
     model = lm_broadcast_model(uni, big)
 
-    root = _stage_stream_docs(sf_dir)
-    sdf = (spark.readStream
-           .schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(f"{root}/part_*.parquet"))
+    # scoring runs BATCH-MODE as the fold: every document arrives whole
+    # in one micro-batch (the stage files split on doc_id), so the
+    # per-doc aggregate is exact per batch and needs no cross-batch
+    # streaming state — the same batch-transform-in-the-sink pattern
+    # production ingest uses
+    def fold(batch):
+        return lm_score(batch.select("doc_id", "text"), uni, big, sc,
+                        broadcast_model=model if model is not None
+                        else False)
 
-    s_dir = f"/tmp/xclim_spark_stream_lm_{uuid.uuid4().hex}"
-    os.makedirs(s_dir, exist_ok=True)
-
-    # scoring runs BATCH-MODE inside foreachBatch: every document
-    # arrives whole in one micro-batch (the stage files split on
-    # doc_id), so the per-doc aggregate is exact per batch and needs
-    # no cross-batch streaming state — the same
-    # batch-transform-in-the-sink pattern production ingest uses
-    def _sink(batch_df, bid):
-        lm_score(batch_df.select("doc_id", "text"), uni, big, sc,
-                 broadcast_model=model if model is not None else False) \
-            .write.mode("overwrite").parquet(f"{s_dir}/b{bid}")
-
-    try:
-        with _stream_state_partitions(spark):
-            q = (sdf.writeStream.foreachBatch(_sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        out = (spark.read
-               .schema("doc_id BIGINT, n_tokens BIGINT, "
-                       "avg_logprob DOUBLE, ppl DOUBLE")
-               .option("recursiveFileLookup", "true")
-               .parquet(s_dir)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(s_dir, ignore_errors=True)
-    return out
+    return run(_replay(spark, _stage_stream_docs(sf_dir), _DOCS),
+               fold=fold)
 
 
 
