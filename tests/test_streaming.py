@@ -20,6 +20,8 @@ def _run_to_memory(sdf, name):
     q = (sdf.writeStream.format("memory").queryName(name)
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
+    # a query still running at the timeout must not outlive its test
+    q.stop()
     return q
 
 

@@ -36,14 +36,14 @@ def norm(v):
     return str(v)
 
 
-def oracle_db(sf_dir: str = SF_DIR):
-    """A DuckDB connection with every table of ``sf_dir`` as a view."""
+def oracle_db():
+    """A DuckDB connection with every table of ``SF_DIR`` as a view."""
     import duckdb
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
     return con
 

@@ -71,6 +71,9 @@ def run(out: DataFrame, *, mode: str = "append",
     parts: dict[int, DataFrame] = {}
 
     def keep(batch: DataFrame, batch_id: int) -> None:
+        if mode == "complete":
+            # each batch is the whole result table: hold only the newest
+            parts.clear()
         parts[batch_id] = (fold(batch) if fold else batch) \
             .localCheckpoint(eager=True)
 
@@ -98,10 +101,7 @@ def run(out: DataFrame, *, mode: str = "append",
     if not parts:
         empty = local_frame(spark, [], out.schema)
         return fold(empty) if fold else empty
-    if mode == "complete":
-        res = parts[max(parts)]
-    else:
-        res = reduce(DataFrame.union, (parts[b] for b in sorted(parts)))
+    res = reduce(DataFrame.union, (parts[b] for b in sorted(parts)))
     # the micro-batch frames belong to the query's cloned session, which
     # runs with AQE off and the state partition count; rebind the result
     # to the caller's session so later plans over it run under its conf
