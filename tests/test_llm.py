@@ -332,7 +332,8 @@ def test_knn_ivf_candidates_come_from_probed_cells(spark):
             v = centers[c] + rng.standard_normal(8) * 0.05
             rows.append((c * 10 + i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = df.filter(F.col("vec_id").isin([0, 10, 20]))
+    cents = sim.Codebook.from_frame(
+        df.filter(F.col("vec_id").isin([0, 10, 20])))
     qs = df.filter(F.col("vec_id").isin([5, 15]))
     out = sim.knn_ivf(df, qs, cents, k=3, nprobe=1).collect()
     by_q = {}
@@ -707,7 +708,8 @@ def test_semantic_dedup_marks_clones(spark):
     rows += [(100 + i, [float(x * 1.001) for x in base[i]])
              for i in range(5)]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = emb.filter("vec_id % 10 = 3 AND vec_id < 100")
+    cents = sim.Codebook.from_frame(
+        emb.filter("vec_id % 10 = 3 AND vec_id < 100"))
     out = {r["id"]: r for r in
            dd.semantic_dedup(emb, cents, threshold=0.999).collect()}
     assert len(out) == 45
@@ -807,21 +809,19 @@ def test_kmeans_fit_matches_numpy_lloyd(spark):
 
 
 def test_kmeans_fit_feeds_ivf_and_semantic_dedup(spark):
-    """Trained centroids slot into the centroids= contract of knn_ivf
-    and semantic_dedup."""
+    """Trained centroids, wrapped once with Codebook.of, slot into the
+    centroids= contract of knn_ivf and semantic_dedup."""
     import numpy as np
 
     from xclim_spark.llm.dedup import semantic_dedup
-    from xclim_spark.llm.similarity import kmeans_fit, knn_ivf
+    from xclim_spark.llm.similarity import Codebook, kmeans_fit, knn_ivf
 
     rng = np.random.RandomState(23)
     emb = spark.createDataFrame(
         [(i, [float(x) for x in rng.randn(8)]) for i in range(60)],
         "vec_id LONG, embedding ARRAY<DOUBLE>")
     cents_np = kmeans_fit(emb, 4, iters=3)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]]) for i in range(4)],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = Codebook.of(cents_np)
     out = knn_ivf(emb, emb.filter("vec_id < 3"), cents, k=2)
     assert out.count() == 6
     sd = semantic_dedup(emb, cents, threshold=0.99)
@@ -893,7 +893,7 @@ def test_semantic_dedup_skew_guard_raises(spark):
     emb = spark.createDataFrame(
         [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(30)],
         "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = emb.filter("vec_id = 0")
+    cents = sim.Codebook.from_frame(emb.filter("vec_id = 0"))
     with _pt.raises(ValueError, match=r"0 \(30 vectors\)"):
         dd.semantic_dedup(emb, cents, max_cluster_size=10)
 
@@ -913,7 +913,8 @@ def test_semantic_dedup_skew_guard_splits(spark):
             for i, v in enumerate(np.concatenate([blob_a, blob_b]))]
     rows.append((100, rows[0][1]))  # exact clone of id 0
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = emb.filter("vec_id = 0")  # ONE centroid -> one 61-row cluster
+    # ONE centroid -> one 61-row cluster
+    cents = sim.Codebook.from_frame(emb.filter("vec_id = 0"))
     out = {r["id"]: r for r in
            dd.semantic_dedup(emb, cents, threshold=0.999,
                              max_cluster_size=40,
@@ -941,7 +942,7 @@ def test_semantic_dedup_split_unsplittable_raises(spark):
     emb = spark.createDataFrame(
         [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(30)],
         "vec_id LONG, embedding ARRAY<DOUBLE>")
-    cents = emb.filter("vec_id = 0")
+    cents = sim.Codebook.from_frame(emb.filter("vec_id = 0"))
     with _pt.raises(ValueError, match="distinct points"):
         dd.semantic_dedup(emb, cents, max_cluster_size=10,
                           on_oversize="split")
@@ -1400,15 +1401,12 @@ def test_knn_ivfpq_exact_and_recall(spark):
     from pyspark.sql import functions as F
 
     from xclim_spark.llm.similarity import (
-        kmeans_fit, knn_bruteforce, knn_ivfpq, pq_fit)
+        Codebook, kmeans_fit, knn_bruteforce, knn_ivfpq, pq_fit)
 
     df, _ = _pq_corpus(spark, n=200, dim=16)
     q = df.filter(F.col("vec_id") % 20 == 0)   # 10 queries
     cents_np = kmeans_fit(df, 8, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = Codebook.of(cents_np)
     books = pq_fit(df, m=4, ks=16, iters=2)
     exact = {(r["query_id"], r["neighbor_id"])
              for r in knn_bruteforce(df, q, k=5).collect()}
@@ -1696,15 +1694,12 @@ def test_knn_ivfpq_residual(spark):
     from pyspark.sql import functions as F
 
     from xclim_spark.llm.similarity import (
-        kmeans_fit, knn_bruteforce, knn_ivfpq, pq_fit)
+        Codebook, kmeans_fit, knn_bruteforce, knn_ivfpq, pq_fit)
 
     df, _ = _pq_corpus(spark, n=200, dim=16)
     q = df.filter(F.col("vec_id") % 20 == 0)
     cents_np = kmeans_fit(df, 8, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = Codebook.of(cents_np)
     plain = pq_fit(df, m=4, ks=8, iters=2)
     res = pq_fit(df, m=4, ks=8, iters=2, centroids=cents)
     exact = {(r["query_id"], r["neighbor_id"])
@@ -1937,14 +1932,11 @@ def test_knn_ivfpq_prebuilt_index(spark):
     import pytest as _pytest
 
     from xclim_spark.llm.similarity import (
-        kmeans_fit, knn_ivfpq, pq_encode, pq_fit)
+        Codebook, kmeans_fit, knn_ivfpq, pq_encode, pq_fit)
 
     docs, _ = _pq_corpus(spark, n=120, dim=16, n_blobs=6)
     cents_np = kmeans_fit(docs, 6, iters=1)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_np[i]])
-         for i in range(cents_np.shape[0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = Codebook.of(cents_np)
     books = pq_fit(docs, m=4, ks=8, iters=2, centroids=cents)
     q = docs.filter(F.col("vec_id") % 40 == 0)
     inline = knn_ivfpq(docs, q, cents, books, k=3, nprobe=3,

@@ -354,6 +354,7 @@ def test_semantic_dedup_matches_bruteforce(spark, seed):
     import numpy as np
 
     from xclim_spark.llm.dedup import semantic_dedup
+    from xclim_spark.llm.similarity import Codebook
 
     rng = np.random.RandomState(seed)
     m = rng.randint(6, 25)
@@ -372,9 +373,7 @@ def test_semantic_dedup_matches_bruteforce(spark, seed):
     cand = [i for i in range(m) if i % 4 != 1]
     cents_idx = sorted(rng.choice(cand, size=min(3, len(cand)),
                                   replace=False))
-    cents = spark.createDataFrame(
-        [(int(i), [float(v) for v in X[i]]) for i in cents_idx],
-        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    cents = Codebook(cents_idx, X[cents_idx])
 
     C = X[cents_idx]
     cn = C / np.linalg.norm(C, axis=1, keepdims=True)

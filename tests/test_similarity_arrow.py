@@ -182,15 +182,15 @@ def test_knn_lsh_null_vectors(spark):
 def test_knn_ivf_and_bruteforce_arrow_match(spark):
     """knn_bruteforce (batch path, and the pair-join path forced with
     ``broadcast_max_queries=0``) and knn_ivf against the reference.
-    IVF cells come from the shared centroid scorer (cell assignment is
-    a BLAS argmax, not an oracle-restated fold); the candidate cosines
-    and ranks must match the reference bit for bit."""
+    IVF cells come from the codebook's cosine scorer (cell assignment
+    is a BLAS argmax, not an oracle-restated fold); the candidate
+    cosines and ranks must match the reference bit for bit."""
     from xclim_spark.llm.similarity import (
-        _centroid_scorer, knn_bruteforce, knn_ivf)
+        Codebook, knn_bruteforce, knn_ivf)
 
     e = _emb_df(spark, n=80, dim=16)
     q = e.filter("vec_id % 10 = 0")
-    cents = e.filter("vec_id % 7 = 0")
+    cents = Codebook.from_frame(e.filter("vec_id % 7 = 0"))
     vecs = _vecs(e)
     qids = [i for i in vecs if i % 10 == 0]
     want = _ref_brute(vecs, qids, 3)
@@ -198,11 +198,9 @@ def test_knn_ivf_and_bruteforce_arrow_match(spark):
         _assert_bits(_ranked(knn_bruteforce(
             e, q, k=3, broadcast_max_queries=gate).collect()), want)
 
-    import pandas as pd
-
-    cids, scores, _ = _centroid_scorer(cents, "vec_id", "embedding")
+    cids = cents.ids
     ids = list(vecs)
-    sc = scores(pd.Series([vecs[i] for i in ids]))
+    sc = cents.scores(np.array([vecs[i] for i in ids]))
     cell = dict(zip(ids, cids[np.argmax(sc, axis=1)]))
     probes = {i: set(cids[np.argsort(-sc[j], kind="stable")[:2]])
               for j, i in enumerate(ids)}
@@ -229,10 +227,10 @@ def test_knn_ivf_null_vectors(spark):
     """NULL vectors no longer crash cell assignment: a NULL corpus
     vector scores NULL and ranks after every real cosine, and a NULL
     query ranks its candidates by id with NULL scores."""
-    from xclim_spark.llm.similarity import knn_ivf
+    from xclim_spark.llm.similarity import Codebook, knn_ivf
 
     e = _emb_df(spark, n=30, dim=8, nulls=(3, 7))
-    cents = e.filter("vec_id IN (1, 2, 4)")
+    cents = Codebook.from_frame(e.filter("vec_id IN (1, 2, 4)"))
     # nprobe = every cell: the candidates are the whole corpus
     got = _ranked(knn_ivf(e, e.filter("vec_id IN (0, 3)"), cents, k=30,
                           nprobe=3).collect())
@@ -243,11 +241,11 @@ def test_knn_ivf_null_vectors(spark):
 def test_knn_ivfpq_null_vectors(spark):
     """A NULL vector crosses PQ encoding, the ADC table and the exact
     re-rank as a NaN row: it never crashes, and it scores NULL."""
-    from xclim_spark.llm.similarity import knn_ivfpq, pq_fit
+    from xclim_spark.llm.similarity import Codebook, knn_ivfpq, pq_fit
 
     e = _emb_df(spark, n=40, dim=8, nulls=(3, 7))
     books = pq_fit(e.filter("embedding IS NOT NULL"), m=2, ks=4, iters=1)
-    cents = e.filter("vec_id IN (1, 2, 4)")
+    cents = Codebook.from_frame(e.filter("vec_id IN (1, 2, 4)"))
     for residual in (False, True):
         got = _ranked(knn_ivfpq(
             e, e.filter("vec_id IN (0, 3)"), cents, books, k=40,
@@ -453,13 +451,14 @@ def test_knn_bruteforce_batch_null_embeddings(spark):
 
 
 def test_semantic_dedup_null_vectors(spark):
-    """semantic_dedup shares the centroid scorer: a NULL vector joins
+    """semantic_dedup shares knn_ivf's cell UDF: a NULL vector joins
     the lowest-id cluster, is always kept, and changes nothing for the
     other rows."""
     from xclim_spark.llm.dedup import semantic_dedup
+    from xclim_spark.llm.similarity import Codebook
 
     u = _with_clones(spark, _emb_df(spark, n=30, dim=8, nulls=(0, 7)))
-    cents = u.filter("vec_id IN (1, 2, 4)")
+    cents = Codebook.from_frame(u.filter("vec_id IN (1, 2, 4)"))
     got = {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
            for r in semantic_dedup(u, cents, threshold=0.98).collect()}
     want = {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
@@ -470,6 +469,37 @@ def test_semantic_dedup_null_vectors(spark):
     assert all(got[i] == (1, True, None) for i in nulls)
     assert {i: v for i, v in got.items() if i not in nulls} == want
     assert any(not keep for _, keep, _ in want.values())
+
+
+def test_semantic_dedup_split_null_vector(spark):
+    """on_oversize='split' reassigns a NULL vector of an oversized
+    cluster (a NaN row) to the lowest sub-cluster id instead of
+    crashing, and every other row lands as without it."""
+    from xclim_spark.llm.dedup import semantic_dedup
+    from xclim_spark.llm.similarity import Codebook
+
+    rng = np.random.RandomState(31)
+    X = np.concatenate([rng.randn(30, 8) * 0.5 + np.r_[5.0, np.zeros(7)],
+                        rng.randn(30, 8) * 0.5 + np.r_[0.0, 5.0,
+                                                       np.zeros(6)]])
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)]
+        + [(100, None)], "vec_id LONG, embedding ARRAY<DOUBLE>")
+    # one centroid: a 61-row cluster, split into 3 either way
+    cents = Codebook.from_frame(emb.filter("vec_id = 0"))
+
+    def dedup(df):
+        return {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
+                for r in semantic_dedup(
+                    df, cents, threshold=0.999, max_cluster_size=50,
+                    on_oversize="split").collect()}
+
+    got = dedup(emb)
+    want = dedup(emb.filter("embedding IS NOT NULL"))
+    assert got.pop(100) == (min(c for c, _, _ in want.values()), True,
+                            None)
+    assert got == want
+    assert len({c for c, _, _ in want.values()}) == 3
 
 
 def _with_null_id(spark, e):
@@ -494,30 +524,98 @@ def test_kmeans_fit_skips_null_vectors(spark, init):
 
 
 def test_pq_fit_skips_null_vectors(spark):
-    from xclim_spark.llm.similarity import pq_fit
+    from xclim_spark.llm.similarity import Codebook, pq_fit
 
     e = _emb_df(spark, n=20, dim=8, nulls=(1, 17))
     kept = e.filter("embedding IS NOT NULL")
-    for cents in (None, kept.filter("vec_id IN (2, 5)")):
+    for cents in (None,
+                  Codebook.from_frame(kept.filter("vec_id IN (2, 5)"))):
         got = pq_fit(_with_null_id(spark, e), m=2, ks=4, iters=3,
                      centroids=cents)
         want = pq_fit(kept, m=2, ks=4, iters=3, centroids=cents)
         assert np.array_equal(got, want)
 
 
-def test_norm_centroids_collects_once(spark, last_sql_execution):
-    """The normalized residual-PQ matrix comes from the rows the cosine
-    scorer already collected: one Spark action, and the matrix is the
-    scorer's centroids, id-sorted, at unit length."""
-    from xclim_spark.llm.similarity import _norm_centroids
+def test_codebook_from_frame_collects_once(spark, last_sql_execution):
+    """Codebook.from_frame is one Spark action: ids ascending, the
+    vectors in id order, the unit matrix at unit length, and the
+    scorer gives each centroid cosine 1 against itself."""
+    from xclim_spark.llm.similarity import Codebook
 
     cents = _emb_df(spark, n=6, dim=8).filter("vec_id IN (5, 0, 3)")
     before = last_sql_execution()
-    ids, scores, C = _norm_centroids(cents, "vec_id", "embedding")
+    cb = Codebook.from_frame(cents)
     assert last_sql_execution() - before == 1
     vecs = _vecs(cents)
-    assert ids.tolist() == [0, 3, 5]
+    assert cb.ids.tolist() == [0, 3, 5]
     raw = np.array([vecs[i] for i in (0, 3, 5)])
+    assert np.array_equal(cb.vecs, raw)
     assert np.array_equal(
-        C, raw / np.linalg.norm(raw, axis=1, keepdims=True))
-    assert np.allclose(np.diag(scores(raw)), 1.0)
+        cb.unit, raw / np.linalg.norm(raw, axis=1, keepdims=True))
+    assert np.allclose(np.diag(cb.scores(raw)), 1.0)
+
+
+def test_codebook_consumers_make_no_collect(spark, last_sql_execution):
+    """Building pq_fit(centroids=), pq_encode(centroids=) and
+    knn_ivfpq(residual=True) collects no codebook: residual training
+    makes the same actions as plain training (the first-k init and
+    one Lloyd pass), and the two plans build with no action at all."""
+    from xclim_spark.llm.similarity import (
+        Codebook, knn_ivfpq, pq_encode, pq_fit)
+
+    e = _emb_df(spark, n=40, dim=8)
+    cb = Codebook.from_frame(e.filter("vec_id IN (1, 2, 4)"))
+    for cents in (None, cb):
+        before = last_sql_execution()
+        books = pq_fit(e, m=2, ks=4, iters=1, centroids=cents)
+        assert last_sql_execution() - before == 2
+    before = last_sql_execution()
+    pq_encode(e, books, centroids=cb)
+    knn_ivfpq(e, e.filter("vec_id < 4"), cb, books, k=3, nprobe=2,
+              shortlist=8, residual=True)
+    assert last_sql_execution() == before
+
+
+def test_codebook_skips_null_rows(spark):
+    """Rows with a NULL id or a NULL vector are not cells: knn_ivf and
+    semantic_dedup give the same output as over the codebook without
+    those rows."""
+    from xclim_spark.llm.dedup import semantic_dedup
+    from xclim_spark.llm.similarity import Codebook, knn_ivf
+
+    e = _emb_df(spark, n=30, dim=8, nulls=(4,))
+    kept = e.filter("vec_id IN (1, 2, 5)")
+    with_nulls = e.filter("vec_id IN (1, 2, 4, 5)").unionByName(
+        spark.createDataFrame([(None, [1.0] * 8)], e.schema))
+    got, want = (Codebook.from_frame(f) for f in (with_nulls, kept))
+    assert got.ids.tolist() == [1, 2, 5]
+    assert np.array_equal(got.vecs, want.vecs)
+    q = e.filter("vec_id % 10 = 0")
+    assert _ranked(knn_ivf(e, q, got, k=4).collect()) \
+        == _ranked(knn_ivf(e, q, want, k=4).collect())
+    u = _with_clones(spark, e)
+
+    def dedup(cb):
+        return {r["id"]: (r["cluster"], r["keep"], r["dup_of"])
+                for r in semantic_dedup(u, cb, threshold=0.98).collect()}
+
+    assert dedup(got) == dedup(want)
+
+
+@pytest.mark.parametrize("case, match", [
+    ("duplicate", "duplicate ids \\[2\\]"),
+    ("mixed", "mixed dimensions \\[2, 3\\]"),
+    ("empty", "no row"),
+])
+def test_codebook_rejects_bad_rows(spark, case, match):
+    """Duplicate ids, mixed dimensions and an empty codebook (here
+    every row NULL) raise a ValueError naming the id column."""
+    from xclim_spark.llm.similarity import Codebook
+
+    rows = {"duplicate": [(2, [1.0, 0.0]), (1, [0.0, 1.0]),
+                          (2, [1.0, 1.0])],
+            "mixed": [(1, [1.0, 0.0]), (2, [1.0, 0.0, 1.0])],
+            "empty": [(None, [1.0, 0.0]), (1, None)]}[case]
+    df = spark.createDataFrame(rows, "cid LONG, v ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match=f"'cid'.*{match}"):
+        Codebook.from_frame(df, "cid", "v")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..util import local_frame
+from .similarity import Codebook
 
 __all__ = [
     "exact_duplicates",
@@ -974,7 +975,7 @@ def _guard_cluster_skew(
     """
     from pyspark.sql.functions import pandas_udf
 
-    from .similarity import _nearest, kmeans_fit
+    from .similarity import _f64_rows, _nearest, kmeans_fit
 
     # ONE driver-bounded collect (cluster cardinality <= n_centroids)
     # serves the oversize check AND the fresh-id allocation below
@@ -994,7 +995,7 @@ def _guard_cluster_skew(
 
     next_id = max(int(r["cluster"]) for r in all_sizes) + 1
     target = max(max_cluster_size // 2, 1)
-    books: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    books: dict[int, Codebook] = {}
     for r in sizes:
         cid, cnt = int(r["cluster"]), int(r["n"])
         k = max(2, -(-cnt // target))
@@ -1005,18 +1006,19 @@ def _guard_cluster_skew(
         sub_c = kmeans_fit(
             asg.filter(F.col("cluster") == F.lit(cid)),
             k, iters=5, id_col="id", vec_col="_v", init="spread")
-        books[cid] = (
-            np.arange(next_id, next_id + k, dtype=np.int64), sub_c)
+        books[cid] = Codebook(np.arange(next_id, next_id + k), sub_c)
         next_id += k
 
     @pandas_udf("bigint")
     def _reassign(cl: pd.Series, vs: pd.Series) -> pd.Series:
         out = cl.to_numpy(dtype=np.int64).copy()
-        for cid, (sids, C) in books.items():
+        for cid, cb in books.items():
             m = out == cid
             if m.any():
-                X = np.stack(vs[m].to_numpy()).astype(np.float64)
-                out[m] = sids[_nearest(X, C)]
+                # a NULL vector is a NaN row: argmin's first-NaN rule
+                # puts it in the lowest sub-cluster id
+                X = _f64_rows(vs[m], cb.vecs.shape[1])
+                out[m] = cb.ids[_nearest(X, cb.vecs)]
         return pd.Series(out)
 
     big_ids = list(books)
@@ -1042,7 +1044,7 @@ def _guard_cluster_skew(
 
 def semantic_dedup(
     emb: DataFrame,
-    centroids: DataFrame,
+    centroids: Codebook,
     *,
     threshold: float = 0.95,
     id_col: str = "vec_id",
@@ -1057,10 +1059,11 @@ def semantic_dedup(
     every semantically near-identical group.
 
     * every vector is assigned to its nearest centroid — the same
-      zero-shuffle map-side BLAS matmul as
-      :func:`~xclim_spark.llm.similarity.knn_ivf` (``centroids`` is the
-      small driver-bounded codebook; production trains it with k-means,
-      any deterministic subset exercises the plumbing);
+      zero-shuffle map-side cell UDF as
+      :func:`~xclim_spark.llm.similarity.knn_ivf` (``centroids`` is a
+      :class:`~xclim_spark.llm.similarity.Codebook`; production trains
+      it with k-means, any deterministic subset exercises the
+      plumbing);
     * within each cluster, exact pairwise cosine via ONE
       ``applyInPandas`` task per cluster — a BLAS gram matrix over the
       cluster's vectors (row-blocked above 2048 vectors so a skewed
@@ -1093,21 +1096,14 @@ def semantic_dedup(
     ``keep``.  A NULL vector joins the lowest-id cluster and is always
     kept (it is nobody's duplicate).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    from .similarity import _centroid_scorer, _f64_rows
+    from .similarity import _cell_udfs, _f64_rows
 
     if on_oversize not in ("raise", "split"):
         raise ValueError(
             f"semantic_dedup: on_oversize must be 'raise' or 'split' "
             f"(got {on_oversize!r})")
 
-    cent_ids, _scores, _ = _centroid_scorer(centroids, id_col, vec_col)
-
-    @pandas_udf("bigint")
-    def _cell(vs: pd.Series) -> pd.Series:
-        # np.argmax takes the first maximum -> lowest centroid id
-        return pd.Series(cent_ids[np.argmax(_scores(vs), axis=1)])
+    _cell = _cell_udfs(centroids)[0]
 
     # localCheckpoint (eager), not persist: the assignment is
     # materialized exactly once for BOTH the size check and the two

@@ -27,6 +27,8 @@ bits are 0, and its projection is all NULL.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F
 from ..util import local_frame
 
 __all__ = ["pair_cosine_arrow", "knn_bruteforce", "knn_lsh", "knn_ivf",
-           "kmeans_fit", "pq_fit", "pq_encode", "knn_ivfpq",
+           "Codebook", "kmeans_fit", "pq_fit", "pq_encode", "knn_ivfpq",
            "random_projection"]
 
 
@@ -122,6 +124,17 @@ def pair_cosine_arrow(a, b) -> Column:
     return _cos(a, b)
 
 
+def _rank_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """``query_id, neighbor_id, cos_sim, rank``: each query's ``k``
+    best candidates by cosine descending (a NULL cosine last), ties to
+    the lower neighbor id — the ranking every search tier ends in."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "cos_sim", "rank"))
+
+
 def knn_bruteforce(
     emb: DataFrame,
     queries: DataFrame,
@@ -174,14 +187,7 @@ def knn_bruteforce(
          .crossJoin(q)
          .filter(F.col("neighbor_id") != F.col("query_id"))
          .withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank_top_k(j, k)
 
 
 def _knn_bruteforce_batch(
@@ -225,12 +231,8 @@ def _knn_bruteforce_batch(
         StructField("neighbor_id", emb.schema[id_col].dataType),
         StructField("cos_sim", DoubleType()),
     ])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
     if not qrows:
-        empty = local_frame(emb.sparkSession, [], out_schema)
-        return (empty.withColumn("rank", F.row_number().over(w))
-                .select("query_id", "neighbor_id", "cos_sim", "rank"))
+        return _rank_top_k(local_frame(emb.sparkSession, [], out_schema), k)
     qids = [r[0] for r in qrows]
     # a NULL query embedding becomes a NaN row: every candidate scores
     # NaN -> SQL NULL, ranked by neighbor id
@@ -288,9 +290,7 @@ def _knn_bruteforce_batch(
 
     cand = (emb.select(F.col(id_col), F.col(vec_col))
             .mapInPandas(_topk, schema=out_schema))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rank"))
+    return _rank_top_k(cand, k)
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -366,58 +366,88 @@ def knn_lsh(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank_top_k(cand, k)
 
 
-def _centroid_scorer(centroids: DataFrame, id_col: str, vec_col: str):
-    """Collect the (small, driver-bounded) centroid codebook ONCE and
-    return ``(centroid_ids, scores_fn, vecs)``: ``scores_fn`` maps a
-    pandas Series of vectors to the (rows x centroids) cosine matrix —
-    one BLAS matmul per Arrow batch, carried in the task closure (zero
-    shuffle) — and ``vecs`` is the id-sorted (C, d) centroid matrix.
-    Shared by :func:`knn_ivf` / :func:`knn_ivfpq` cell assignment, PQ
-    residual coding and :func:`~xclim_spark.llm.dedup.semantic_dedup`
-    clustering.  A NULL vector scores NaN against every centroid
-    (:func:`_f64_rows`), so ``np.argmax`` assigns it the lowest
-    centroid id and a stable descending ``argsort`` probes cells in
-    ascending id order."""
-    cents = sorted(
-        (r[0], [float(x) for x in r[1]])
-        for r in centroids.select(id_col, vec_col).collect()
-    )
-    ids = np.array([int(c[0]) for c in cents], dtype=np.int64)
-    vecs = np.stack([np.asarray(c[1]) for c in cents])  # (C, d)
-    norms = np.linalg.norm(vecs, axis=1)
+@dataclass(frozen=True, eq=False)
+class Codebook:
+    """A coarse (IVF) codebook held on the driver: ``ids`` (int64,
+    ascending) and ``vecs``, the id-ordered (C, d) float64 centroid
+    matrix (both copied and read-only).  The row norms, the
+    unit-normalised matrix ``unit`` and the cosine scorer are derived
+    once here; every consumer
+    (:func:`knn_ivf`, :func:`pq_fit`, :func:`pq_encode`,
+    :func:`knn_ivfpq`, :func:`~xclim_spark.llm.dedup.semantic_dedup`)
+    carries the value in its task closures, so a codebook costs no
+    Spark action after it is built.  Build one with :meth:`of` from a
+    :func:`kmeans_fit` matrix, or :meth:`from_frame` from rows."""
 
-    def _scores(vs) -> np.ndarray:
-        # accepts a pandas Series of vectors OR an (n, d) ndarray —
-        # numpy callers (pq_fit._prep, pq_encode) skip a
-        # Series(list(X)) round-trip per Arrow batch
-        X = (vs.astype(np.float64) if isinstance(vs, np.ndarray)
-             else _f64_rows(vs, vecs.shape[1]))
-        return (X @ vecs.T) / (
-            np.linalg.norm(X, axis=1, keepdims=True) * norms)
+    ids: np.ndarray
+    vecs: np.ndarray
+    norms: np.ndarray = field(init=False, repr=False)
+    unit: np.ndarray = field(init=False, repr=False)
 
-    return ids, _scores, vecs
+    def __post_init__(self):
+        ids = np.array(self.ids, dtype=np.int64)
+        vecs = np.array(self.vecs, dtype=np.float64)
+        norms = np.linalg.norm(vecs, axis=1)
+        unit = vecs / np.maximum(norms[:, None], 1e-30)
+        for name, a in (("ids", ids), ("vecs", vecs), ("norms", norms),
+                        ("unit", unit)):
+            a.setflags(write=False)
+            object.__setattr__(self, name, a)
+
+    @classmethod
+    def of(cls, matrix) -> "Codebook":
+        """Cells ``0..C-1`` over the rows of a (C, d) matrix."""
+        return cls(np.arange(len(matrix)), matrix)
+
+    @classmethod
+    def from_frame(cls, df: DataFrame, id_col: str = "vec_id",
+                   vec_col: str = "embedding") -> "Codebook":
+        """Collect a (small, driver-bounded) ``(id, vector)`` frame —
+        one Spark action.  Rows with a NULL id or a NULL vector are
+        skipped (the rule :func:`kmeans_fit` applies to its training
+        rows); duplicate ids, mixed dimensions and an empty codebook
+        raise ``ValueError``."""
+        rows = sorted(
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in df.select(id_col, vec_col).collect()
+            if r[0] is not None and r[1] is not None)
+        ids = np.array([i for i, _ in rows], dtype=np.int64)
+        dup = np.unique(ids[1:][ids[1:] == ids[:-1]]).tolist()
+        dims = sorted({len(v) for _, v in rows})
+        bad = ("no row has a non-NULL id and vector" if not rows
+               else f"duplicate ids {dup[:5]}" if dup
+               else f"vectors of mixed dimensions {dims}" if len(dims) > 1
+               else None)
+        if bad:
+            raise ValueError(f"codebook over {id_col!r}: {bad}")
+        return cls(ids, [v for _, v in rows])
+
+    def scores(self, X: np.ndarray) -> np.ndarray:
+        """(rows x cells) cosine matrix of an (n, d) float64 matrix —
+        one BLAS matmul.  A NaN row (a NULL vector, :func:`_f64_rows`)
+        scores NaN everywhere, so ``np.argmax`` gives it the lowest
+        cell id and a stable descending ``argsort`` probes cells in
+        ascending id order."""
+        return (X @ self.vecs.T) / (
+            np.linalg.norm(X, axis=1, keepdims=True) * self.norms)
 
 
-def _cell_udfs(cent_ids: np.ndarray, scores, nprobe: int):
-    """The ``(cell, probe_cells)`` pandas UDFs of :func:`knn_ivf` and
-    :func:`knn_ivfpq` over a :func:`_centroid_scorer` codebook: a
-    vector's nearest-cosine centroid id, and its ``nprobe`` nearest."""
+def _cell_udfs(cb: Codebook, nprobe: int = 1):
+    """The ``(cell, probe_cells)`` pandas UDFs over a codebook: a
+    vector's nearest-cosine cell id (ties to the lowest id), and its
+    ``nprobe`` nearest."""
     from pyspark.sql.functions import pandas_udf
+
+    dim = cb.vecs.shape[1]
 
     @pandas_udf("bigint")
     def _cell(vs: pd.Series) -> pd.Series:
         # np.argmax takes the first maximum -> lowest centroid id
-        return pd.Series(cent_ids[np.argmax(scores(vs), axis=1)])
+        return pd.Series(
+            cb.ids[np.argmax(cb.scores(_f64_rows(vs, dim)), axis=1)])
 
     # non-deterministic marking (the scorer is in fact reproducible)
     # stops the optimizer cloning the assignment UDF below the join-key
@@ -430,8 +460,9 @@ def _cell_udfs(cent_ids: np.ndarray, scores, nprobe: int):
     @pandas_udf("array<bigint>")
     def _probe_cells(vs: pd.Series) -> pd.Series:
         # stable argsort of -scores: ties keep ascending centroid order
-        order = np.argsort(-scores(vs), axis=1, kind="stable")
-        return pd.Series(list(cent_ids[order[:, :nprobe]]))
+        order = np.argsort(-cb.scores(_f64_rows(vs, dim)), axis=1,
+                           kind="stable")
+        return pd.Series(list(cb.ids[order[:, :nprobe]]))
 
     return _cell, _probe_cells
 
@@ -439,7 +470,7 @@ def _cell_udfs(cent_ids: np.ndarray, scores, nprobe: int):
 def knn_ivf(
     emb: DataFrame,
     queries: DataFrame,
-    centroids: DataFrame,
+    centroids: Codebook,
     k: int = 5,
     *,
     nprobe: int = 2,
@@ -451,11 +482,11 @@ def knn_ivf(
     its ``nprobe`` nearest cells and ranks candidates there by exact
     cosine.
 
-    ``centroids`` is the (small, driver-bounded) coarse codebook — in
-    production the output of a k-means training pass; any deterministic
-    subset works for the plumbing.  It is collected ONCE into a numpy
-    matrix carried in the task closure, so cell assignment is a
-    zero-shuffle map-side pandas stage: one BLAS matmul per Arrow batch
+    ``centroids`` is the coarse :class:`Codebook` — in production
+    ``Codebook.of`` over a :func:`kmeans_fit` matrix; any deterministic
+    subset (``Codebook.from_frame``) works for the plumbing.  It rides
+    the task closure, so cell assignment is a zero-shuffle map-side
+    pandas stage: one BLAS matmul per Arrow batch
     scores every (vector, centroid) pair (an expression fold here was
     interpreted per element and went quadratic-feeling at 400 centroids
     — 111 s for 20k vectors; the matmul is milliseconds).  Ties pick the
@@ -463,7 +494,7 @@ def knn_ivf(
     order-preserving kernel (:func:`pair_cosine_arrow`), so the discrete
     assignment plus the ranked output stay reproducible by the SQL
     oracle.  A NULL vector scores NULL and ranks after every real
-    cosine (see :func:`_centroid_scorer` for its cell).  The only
+    cosine (see :meth:`Codebook.scores` for its cell).  The only
     shuffles are the (cell)-keyed candidate join and the per-query rank
     — at 100 TB the corpus never moves except for the probed cells'
     rows.
@@ -471,8 +502,7 @@ def knn_ivf(
     Returns ``query_id, neighbor_id, cos_sim, rank`` (approximate:
     neighbors outside probed cells are unseen, exactly like FAISS IVF).
     """
-    cent_ids, scores, _ = _centroid_scorer(centroids, id_col, vec_col)
-    _cell, _probe_cells = _cell_udfs(cent_ids, scores, nprobe)
+    _cell, _probe_cells = _cell_udfs(centroids, nprobe)
 
     asg = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec"),
@@ -488,14 +518,8 @@ def knn_ivf(
         .select("query_id", "neighbor_id", "_qvec", "_nvec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cand = cand.withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank_top_k(
+        cand.withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec")), k)
 
 
 def _spread_init(
@@ -659,8 +683,8 @@ def kmeans_fit(
     (neither the init nor any Lloyd pass).
 
     Returns the (k, d) centroid matrix as numpy — metadata-sized;
-    wrap in :func:`~xclim_spark.util.local_frame` for the
-    ``centroids=`` contract of the consumers.  With
+    :meth:`Codebook.of` makes it the ``centroids=`` value of the
+    consumers.  With
     ``return_counts=True`` returns ``(centroids, counts)`` where
     ``counts`` is the final iteration's per-cluster membership.
     """
@@ -676,18 +700,9 @@ def kmeans_fit(
     return (books[0], counts[0]) if return_counts else books[0]
 
 
-def _norm_centroids(centroids: DataFrame, id_col: str, vec_col: str):
-    """Collected, id-sorted, L2-normalized coarse centroid matrix plus
-    the cosine scorer — the residual-PQ helper (residuals live on the
-    unit sphere: r = v/||v|| - c/||c|| of the assigned cell)."""
-    cent_ids, scores, vecs = _centroid_scorer(centroids, id_col, vec_col)
-    norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-    return cent_ids, scores, vecs / np.maximum(norms, 1e-30)
-
-
-def _pq_space(X: np.ndarray, cent=None, idx=None):
+def _pq_space(X: np.ndarray, cent: Codebook | None = None, idx=None):
     """The space PQ codes live in: the rows of ``X`` unit-normalised
-    and, with a :func:`_norm_centroids` codebook ``cent``, minus their
+    and, with a :class:`Codebook` ``cent``, minus their
     cell's normalised centroid — the assigned (nearest-cosine) cell, or
     row ``idx`` of the id-sorted codebook when given (an ADC table's
     probed cell).  Returns ``(cell ids or None, vectors)``; training,
@@ -696,10 +711,9 @@ def _pq_space(X: np.ndarray, cent=None, idx=None):
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
     if cent is None:
         return None, Xn
-    ids, scores, Cn = cent
     if idx is None:
-        idx = np.argmax(scores(X), axis=1)
-    return ids[idx], Xn - Cn[idx]
+        idx = np.argmax(cent.scores(X), axis=1)
+    return cent.ids[idx], Xn - cent.unit[idx]
 
 
 def pq_fit(
@@ -710,7 +724,7 @@ def pq_fit(
     iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
+    centroids: Codebook | None = None,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
     *Product Quantization for Nearest Neighbor Search*, TPAMI): split
@@ -730,8 +744,8 @@ def pq_fit(
     (standard Lloyd fallback).  Returns the (m, ks, d/m) codebook
     tensor — metadata-sized (m*ks*(d/m) = ks*d doubles).
 
-    With ``centroids`` (the coarse IVF codebook), codebooks are
-    trained on RESIDUALS ``v/||v|| - c/||c||`` of each vector's
+    With ``centroids`` (the coarse IVF :class:`Codebook`), codebooks
+    are trained on RESIDUALS ``v/||v|| - c/||c||`` of each vector's
     assigned cell — Jégou et al.'s actual IVFADC scheme: residuals
     concentrate near the origin, so the same ks spends its precision
     on within-cell structure instead of re-coding the cell mean.
@@ -740,11 +754,9 @@ def pq_fit(
         raise ValueError(f"pq: ks must be in [2, 256] (got {ks}) — codes "
                          "are stored as one byte per subspace")
     emb = emb.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-    cent = (None if centroids is None
-            else _norm_centroids(centroids, id_col, vec_col))
 
     def _prep(X: np.ndarray) -> np.ndarray:
-        return _pq_space(X, cent)[1]
+        return _pq_space(X, centroids)[1]
 
     X0 = _prep(_first_by_id(emb, ks, id_col, vec_col))
     dim = X0.shape[1]
@@ -762,7 +774,7 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_col: str = "pq_codes",
-    centroids: DataFrame | None = None,
+    centroids: Codebook | None = None,
     cell_col: str = "pq_cell",
 ) -> DataFrame:
     """Map-side PQ encoding: each L2-normalized vector becomes ``m``
@@ -772,25 +784,24 @@ def pq_encode(
     Arrow ``pandas_udf``; zero shuffle.  Codes ride as
     ``array<smallint>`` (values 0..ks-1 <= 255).
 
-    With ``centroids`` the vector is coarse-assigned first and the
-    RESIDUAL against its normalized centroid is coded (train the
-    codebooks with the same ``centroids=``!); the assignment rides
-    along as ``cell_col`` so index build needs ONE Arrow pass, not
-    separate cell and code stages."""
+    With ``centroids`` (a :class:`Codebook`, carried in the UDF
+    closure) the vector is coarse-assigned first and the RESIDUAL
+    against its normalized centroid (``Codebook.unit``) is coded
+    (train the codebooks with the same ``centroids=``!); the
+    assignment rides along as ``cell_col`` so index build needs ONE
+    Arrow pass, not separate cell and code stages."""
     from pyspark.sql.functions import pandas_udf
 
     m, ks, dsub = codebooks.shape
     B = codebooks
-    cent = (None if centroids is None
-            else _norm_centroids(centroids, id_col, vec_col))
 
     def _encode_np(X: np.ndarray):
-        cells, R = _pq_space(X, cent)
+        cells, R = _pq_space(X, centroids)
         return cells, np.stack(
             [_nearest(R[:, j * dsub:(j + 1) * dsub], B[j]).astype(np.int16)
              for j in range(m)], axis=1)
 
-    if cent is None:
+    if centroids is None:
         @pandas_udf("array<smallint>")
         def _codes(vs: pd.Series) -> pd.Series:
             if not len(vs):
@@ -830,7 +841,7 @@ def pq_encode(
 def knn_ivfpq(
     emb: DataFrame,
     queries: DataFrame,
-    centroids: DataFrame,
+    centroids: Codebook,
     codebooks: np.ndarray,
     k: int = 5,
     *,
@@ -845,6 +856,8 @@ def knn_ivfpq(
     quantizer prunes to ``nprobe`` cells, PQ codes rank the survivors
     by asymmetric distance, and only the ``shortlist`` best per query
     are re-ranked by EXACT cosine against their full vectors.
+    ``centroids`` is the coarse :class:`Codebook`; building the plan
+    makes no Spark action.
 
     ``residual=True`` is the paper's actual IVFADC: codes are over
     ``v/||v|| - c/||c||`` residuals (train ``codebooks`` with the
@@ -882,9 +895,7 @@ def knn_ivfpq(
             "centroids=); probing it requires residual=True")
     m, ks, dsub = codebooks.shape
     B = codebooks
-    cent = _norm_centroids(centroids, id_col, vec_col)
-    cent_ids, scores, _ = cent
-    _cell, _probe_cells = _cell_udfs(cent_ids, scores, nprobe)
+    _cell, _probe_cells = _cell_udfs(centroids, nprobe)
 
     def _adc_tables(R: np.ndarray) -> pd.Series:
         # flattened (m*ks) table per row: entry j*ks+c = ||r_j -
@@ -908,24 +919,20 @@ def knn_ivfpq(
         @pandas_udf("array<double>")
         def _adc_table_res(vs: pd.Series, cells: pd.Series) -> pd.Series:
             # the probed cell's row in the id-sorted codebook
-            idx = np.searchsorted(cent_ids, cells.to_numpy())
+            idx = np.searchsorted(centroids.ids, cells.to_numpy())
             return _adc_tables(
-                _pq_space(_f64_rows(vs, m * dsub), cent, idx)[1])
+                _pq_space(_f64_rows(vs, m * dsub), centroids, idx)[1])
 
-        if index is not None:
-            # pre-built (id, pq_cell, pq_codes) index — the streaming
-            # ingest path maintains one incrementally (pq_encode with
-            # centroids= inside each micro-batch) and probes it here
-            asg = index.select(
-                F.col(id_col).alias("neighbor_id"), "pq_codes",
-                F.col("pq_cell").alias("cell"))
-        else:
-            # ONE Arrow pass builds cell + residual codes for the corpus
-            enc = pq_encode(emb, codebooks, id_col=id_col,
-                            vec_col=vec_col, centroids=centroids)
-            asg = enc.select(
-                F.col(id_col).alias("neighbor_id"), "pq_codes",
-                F.col("pq_cell").alias("cell"))
+        # a pre-built (id, pq_cell, pq_codes) index — the streaming
+        # ingest path maintains one incrementally (pq_encode with
+        # centroids= inside each micro-batch) and probes it here — or
+        # ONE Arrow pass building cell + residual codes for the corpus
+        enc = index if index is not None else pq_encode(
+            emb, codebooks, id_col=id_col, vec_col=vec_col,
+            centroids=centroids)
+        asg = enc.select(
+            F.col(id_col).alias("neighbor_id"), "pq_codes",
+            F.col("pq_cell").alias("cell"))
         qs = (queries.select(
                   F.col(id_col).alias("query_id"), F.col(vec_col),
                   F.explode(_probe_cells(F.col(vec_col))).alias("cell"))
@@ -979,11 +986,7 @@ def knn_ivfpq(
     rer = (nvec.join(F.broadcast(short), on="neighbor_id")
            .join(F.broadcast(qv), on="query_id")
            .withColumn("cos_sim", pair_cosine_arrow("_qvec", "_nvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (rer.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rank"))
+    return _rank_top_k(rer, k)
 
 
 def random_projection(vec, dim: int, out_dim: int, seed: int = 42) -> Column:

@@ -33,28 +33,21 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _centroid_frame(spark: SparkSession, cents) -> DataFrame:
-    """(vec_id, embedding) rows of a driver-side centroid matrix."""
-    return local_frame(spark, list(enumerate(cents.tolist())),
-                       "vec_id LONG, embedding ARRAY<DOUBLE>")
-
-
-def _ivf_cells(spark: SparkSession, e: DataFrame) -> DataFrame:
+def _ivf_cells(e: DataFrame):
     """The trained-index gates' coarse IVF codebook: 10 cells after one
     Lloyd step from the first 10 vectors by id."""
-    from .llm.similarity import kmeans_fit
+    from .llm.similarity import Codebook, kmeans_fit
 
-    return _centroid_frame(spark, kmeans_fit(e, 10, iters=1))
+    return Codebook.of(kmeans_fit(e, 10, iters=1))
 
 
-def _ivfpq_train(spark: SparkSession, e: DataFrame,
-                 residual: bool = False):
+def _ivfpq_train(e: DataFrame, residual: bool = False):
     """``(cells, codebooks)`` of the IVF-PQ gates: :func:`_ivf_cells`
     and 8 x 16-code PQ codebooks after two Lloyd steps, trained on the
     residuals against the cells when ``residual``."""
     from .llm.similarity import pq_fit
 
-    cents = _ivf_cells(spark, e)
+    cents = _ivf_cells(e)
     return cents, pq_fit(e, m=8, ks=16, iters=2,
                          centroids=cents if residual else None)
 
@@ -4385,7 +4378,7 @@ def knn_ivf_docs(spark, sf_dir):
     from .llm import similarity as sim
 
     e = _read(spark, sf_dir, "embeddings")
-    cents = e.filter(F.col("vec_id") % 50 == 7)
+    cents = sim.Codebook.from_frame(e.filter(F.col("vec_id") % 50 == 7))
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = sim.knn_ivf(e, q, cents, k=5, nprobe=2)
     return out.withColumn("cos_sim", F.round("cos_sim", 6))
@@ -5357,7 +5350,7 @@ def knn_ivf_trained_docs(spark, sf_dir):
     from .llm.similarity import knn_ivf
 
     e = _read(spark, sf_dir, "embeddings")
-    cents = _ivf_cells(spark, e)
+    cents = _ivf_cells(e)
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivf(e, q, cents, k=5, nprobe=2)
     return out.withColumn("cos_sim", F.round("cos_sim", 6))
@@ -5426,7 +5419,7 @@ def knn_ivfpq_docs(spark, sf_dir):
     from .llm.similarity import knn_ivfpq
 
     e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
-    cents, books = _ivfpq_train(spark, e)
+    cents, books = _ivfpq_train(e)
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
@@ -5448,7 +5441,7 @@ def knn_ivfpq_fixedq_docs(spark, sf_dir):
     from .llm.similarity import knn_ivfpq
 
     e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
-    cents, books = _ivfpq_train(spark, e)
+    cents, books = _ivfpq_train(e)
     q = e.filter(F.col("vec_id") < 400)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40)
     return out.withColumn("cos_sim", F.round("cos_sim", 6)) \
@@ -5507,7 +5500,7 @@ def knn_ivfpq_res_docs(spark, sf_dir):
     from .llm.similarity import knn_ivfpq
 
     e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
-    cents, books = _ivfpq_train(spark, e, residual=True)
+    cents, books = _ivfpq_train(e, residual=True)
     q = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, q, cents, books, k=5, nprobe=4, shortlist=40,
                     residual=True)
@@ -5634,6 +5627,7 @@ def dedup_semantic(spark, sf_dir):
     cluster sizing (n_centroids ~ corpus/target_cluster_size) is the
     scale dial."""
     from .llm import dedup as dd
+    from .llm.similarity import Codebook
 
     e = _read(spark, sf_dir, "embeddings")
     base = e.select(
@@ -5649,7 +5643,7 @@ def dedup_semantic(spark, sf_dir):
                + F.lit(0.001).cast("double") * ((i % 7) - 3)),
         ).alias("embedding"))
     u = base.unionByName(clones)
-    cents = u.filter(F.col("vec_id") % 50 == 7)
+    cents = Codebook.from_frame(u.filter(F.col("vec_id") % 50 == 7))
     return dd.semantic_dedup(u, cents, threshold=0.999)
 
 
@@ -8722,7 +8716,7 @@ def stream_knn_ingest(spark, sf_dir):
     from .streaming import run
 
     e = _ivfpq_blobs(_read(spark, sf_dir, "embeddings"))
-    cents, books = _ivfpq_train(spark, e, residual=True)
+    cents, books = _ivfpq_train(e, residual=True)
 
     sdf = _replay(spark, _stage_stream_embs(sf_dir),
                   "vec_id BIGINT, embedding ARRAY<FLOAT>")
@@ -8730,19 +8724,21 @@ def stream_knn_ingest(spark, sf_dir):
                 .select("vec_id", "pq_cell", "pq_codes"))
 
     # ingest/batch identity: the accreted index must BE the batch
-    # encode, row for row.  localCheckpoint the batch encode so the
-    # count and the exceptAll read ONE materialization instead of each
-    # re-running the full corpus encode (centroid matmul + m argmins)
-    # — guide §1.2: don't compute the same pass twice
+    # encode, row for row — one count of the symmetric multiset
+    # difference, 0 exactly when the two are equal as multisets.
+    # localCheckpoint the batch encode so both exceptAll sides read ONE
+    # materialization instead of each re-running the full corpus
+    # encode (centroid matmul + m argmins) — guide §1.2: don't compute
+    # the same pass twice
     bidx = pq_encode(e, books, centroids=cents) \
         .select("vec_id", "pq_cell", "pq_codes") \
         .localCheckpoint(eager=True)
-    n_idx, n_b = index.count(), bidx.count()
-    n_diff = index.exceptAll(bidx).count()
-    if n_idx != n_b or n_diff:
+    n_diff = index.exceptAll(bidx).unionAll(bidx.exceptAll(index)).count()
+    if n_diff:
         raise AssertionError(
             f"streamed PQ index diverges from batch encode: "
-            f"{n_idx} vs {n_b} rows, {n_diff} mismatching")
+            f"{index.count()} vs {bidx.count()} rows, {n_diff} in one "
+            "but not the other")
 
     qv = e.filter(F.col("vec_id") % 100 == 0)
     out = knn_ivfpq(e, qv, cents, books, k=5, nprobe=4, shortlist=40,
